@@ -104,8 +104,7 @@ object Caches {
     * are a few MB — the pass stays free; at scale corpora one
     * estimate-trap relation alone exceeds it. */
   private val ReclaimThresholdBytes: Long =
-    sys.env.get("GRAFT_BCAST_RECLAIM_MB").map(_.toLong * 1024 * 1024)
-      .getOrElse(256L * 1024 * 1024)
+    Config.envBytes("GRAFT_BCAST_RECLAIM_MB", 1024L * 1024, "MB", 256L * 1024 * 1024)
 
   /** Between-query broadcast hygiene (r13 scale diagnosis, layer 2).
     *

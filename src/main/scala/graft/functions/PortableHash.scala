@@ -32,8 +32,17 @@ object PortableHash {
       (acc, x) => (acc * lit(Config.CharBase) + x) % lit(Config.P)
     )
 
-  /** Positional-agreement count of two long-array columns (fused
-    * native loop; equals size(filter(zip_with(a,b,_===_),identity))). */
+  /** A long-array column packed into a binary of 4-byte big-endian
+    * words (see PackIntsExpression); throws on any element outside
+    * [0, Int.MaxValue], so it is lossless wherever it succeeds. */
+  def packInts(a: Column): Column = {
+    import org.apache.spark.sql.graft.{Bridge, PackInts}
+    Bridge.column(PackInts(Bridge.expression(a)))
+  }
+
+  /** Positional-agreement count of two long-array columns, or of two
+    * [[packInts]] binaries (fused native loop; equals
+    * size(filter(zip_with(a,b,_===_),identity)) on the long arrays). */
   def agreeCount(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.{ArrayAgreeCount, Bridge}
     Bridge.column(ArrayAgreeCount(Bridge.expression(a), Bridge.expression(b)))

@@ -17,10 +17,13 @@ import graft.functions.PortableHash
   *     needs O(S) state per doc and no global dict. At 100 TB this
   *     removes a broadcast of an unbounded vocabulary AND the driver
   *     bottleneck by construction.
-  *   - Whole pipeline is one DataFrame lineage: explode (narrow) →
-  *     ONE hash-agg shuffle for signatures → explode bands (narrow)
-  *     → ONE shuffle for the band self-join → distinct. Compare: the
-  *     reference materializes 3 CSV file pipes between jobs.
+  *   - Whole pipeline is one DataFrame lineage: per-row sketch
+  *     (narrow, no shuffle) → explode bands (narrow) → ONE shuffle
+  *     for the band self-join → distinct. Compare: the reference
+  *     materializes 3 CSV file pipes between jobs.
+  *   - Inside the self-join the signature and band key travel packed
+  *     (4 bytes per component, see bandsCarryingSig); the public
+  *     `signatures`/`bands` schemas keep their long/CSV forms.
   *   - Band index IS part of the bucket key (fixes SURVEY.md Q5).
   *   - Verification = exact shingle-set Jaccard between the two pair
   *     members (fixes Q1/Q9), threshold on similarity.
@@ -40,26 +43,20 @@ object MinHashLsh {
     * (default 2 MB). Rationale (r13 mid-scale diagnosis + guide §3.1):
     * the frames these joins carry are corpus-DERIVED payloads — the
     * shingle-hash sets (~8 B per input char), the exploded band+sig
-    * frame (~10 bands x 60 longs per doc), the raw texts — whose
-    * in-memory size is up to ~32-64x the compressed parquet bytes,
-    * while Catalyst's size estimate descends from the parquet scan and
-    * stays under the broadcast threshold long after the real relation
-    * is GBs (at 250k docs the statically-planned broadcast collected
-    * GBs through one driver thread while 31 executors idled). 2 MB
+    * frame (~10 bands x 264 B of packed sig+key per doc), the raw
+    * texts — whose in-memory size is up to ~32-64x the compressed
+    * parquet bytes, while Catalyst's size estimate descends from the
+    * parquet scan and stays under the broadcast threshold long after
+    * the real relation is GBs (at 250k docs the statically-planned
+    * broadcast collected GBs through one driver thread while 31
+    * executors idled). 2 MB
     * source x 32x expansion ≈ the session's 64 MB broadcast threshold:
     * below it the planner's broadcast pick is provably safe (sf0.1 is
     * 0.58 MB — broadcast measured 0.3-1.8 s faster per query there);
     * above it the side is pinned sort-merge regardless of estimates.
     * Deployment knob: GRAFT_BCAST_CORPUS_MAX_KB. */
   private val BoundedCorpusSourceBytes: Long =
-    sys.env.get("GRAFT_BCAST_CORPUS_MAX_KB").map { v =>
-      // parse defensively: a malformed value would otherwise surface
-      // as ExceptionInInitializerError on first MinHashLsh use, far
-      // from the bad env var
-      scala.util.Try(v.trim.toLong * 1024L).getOrElse(
-        throw new IllegalArgumentException(
-          s"GRAFT_BCAST_CORPUS_MAX_KB must be a whole number of KB, got '$v'"))
-    }.getOrElse(2L * 1024 * 1024)
+    Config.envBytes("GRAFT_BCAST_CORPUS_MAX_KB", 1024L, "KB", 2L * 1024 * 1024)
 
   /** TRUE iff `docs` reads from source files totalling at most
     * [[BoundedCorpusSourceBytes]] — a driver metadata probe (no job).
@@ -297,35 +294,39 @@ object MinHashLsh {
     cross.union(within).distinct()
   }
 
-  /** Per-doc distinct SHINGLE-HASH set (long array) — verification
-    * currency. Hash-set Jaccard differs from string-set Jaccard only
-    * on intra-doc hash collisions (~(n_shingles)^2 / 2^32 per doc,
-    * ~1e-5 here) and is mirrored exactly by the oracle; long-array
-    * set ops are far cheaper than string-array ones at scale. */
-  def hashedShingleSets(docs: DataFrame, k: Int = Config.K): DataFrame =
-    Shingling.shingleHashed(docs, k)
-      .groupBy("doc_id")
-      .agg(collect_set(col("h")).as("hset"))
+  /** (doc_id, sig): the LSH chain's internal signature form — the S
+    * components packed losslessly into one binary of 4-byte words
+    * (PortableHash.packInts; every component is < 2^31, and packing
+    * throws rather than narrow anything else). 240 B per doc where
+    * the long columns are 480 B. */
+  private def packedSignatures(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), PortableHash.packInts(
+      array((0 until Config.NumHashes).map(i => col(Config.sigCol(i))): _*)).as("sig"))
 
-  /** (doc_id, sig, band, band_key): the band explode with the whole
-    * signature array carried through (~0.5 KB per band row, O(#docs
-    * × Bands)) — self-join consumers get both members' signatures
-    * directly from the join output and never join back against a
-    * signature table (which at 100 TB would be a second corpus-wide
-    * shuffle). maxBucket optionally drops degenerate buckets. */
-  private def bandsCarryingSig(base: DataFrame, maxBucket: Option[Int],
+  /** (doc_id, sig, band, band_key): the band explode of a
+    * [[packedSignatures]] frame with the whole packed signature
+    * carried through, so self-join consumers get both members'
+    * signatures directly from the join output and never join back
+    * against a signature table (which at 100 TB would be a second
+    * corpus-wide shuffle). `band_key` is the band's 24-byte slice of
+    * `sig`: ~264 B of payload per band row, where the 60-long array
+    * plus the decimal CSV key was ~560 B. Measured on perfbench
+    * dedup_batch (20k docs, 200k band rows, 4-core box): the stage
+    * feeding the band exchange writes 22.2 MB instead of 36.2 MB, and
+    * a whole similarPairs op 25.6 MB instead of 39.6 MB. Bucket
+    * equality is unchanged — both key forms are injective in the
+    * band's components. maxBucket optionally drops degenerate
+    * buckets. */
+  private def bandsCarryingSig(packed: DataFrame, maxBucket: Option[Int],
                                bands: Int = Config.Bands,
                                rowsPerBand: Int = Config.RowsPerBand): DataFrame = {
     require(bands * rowsPerBand <= Config.NumHashes,
       s"operating point $bands x $rowsPerBand exceeds ${Config.NumHashes} hashes")
-    val r0 = rowsPerBand
+    val w = 4 * rowsPerBand
     val bandStructs = (0 until bands).map { j =>
-      val cols = (j * r0 until (j + 1) * r0).map(i => col(Config.sigCol(i)).cast("string"))
-      struct(lit(j).as("band"), concat_ws(",", cols: _*).as("band_key"))
+      struct(lit(j).as("band"), substring(col("sig"), j * w + 1, w).as("band_key"))
     }
-    val b0 = base.select(col("doc_id"),
-      array((0 until Config.NumHashes).map(i => col(Config.sigCol(i))): _*).as("sig"),
-      explode(array(bandStructs: _*)).as("bk"))
+    val b0 = packed.select(col("doc_id"), col("sig"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("doc_id"), col("sig"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
     maxBucket match {
       case Some(m) =>
@@ -389,10 +390,11 @@ object MinHashLsh {
                                   rowsPerBand: Int = Config.RowsPerBand,
                                   bounded: Boolean = false)
       : (DataFrame, DataFrame) = {
-    // Signatures only (60 longs/doc ≈ 0.5 KB) are materialized for
-    // the whole corpus — the band explode and the prefilter read this
-    // slim frame. The O(text)-sized shingle-hash SETS are NOT: they
-    // are recomputed later only for docs that survive the prefilter
+    // Signatures only (one 240-byte packed binary per doc) are
+    // materialized for the whole corpus — the band explode and the
+    // prefilter read this slim frame. The O(text)-sized shingle-hash
+    // SETS are NOT: they are recomputed later only for docs that
+    // survive the prefilter
     // (checkpointing sets for every doc measured ~1s of the chain at
     // sf0.1 and would be O(corpus) state at 100 TB).
     // Checkpointed deliberately: ReuseExchange does cover the bare
@@ -401,8 +403,8 @@ object MinHashLsh {
     // extra plan context around the chain defeats exchange reuse and
     // the sketch ran twice — measured +0.8 s per composite query
     // without this checkpoint.
-    val base = signatures(docs, k).graftCheckpoint()
-    // the sig array rides the band explode (bandsCarryingSig) so the
+    val base = packedSignatures(signatures(docs, k)).graftCheckpoint()
+    // the packed sig rides the band explode (bandsCarryingSig) so the
     // agreement prefilter is a join-residual condition — no joins
     // against the multi-million-pair stream at all, and no DISTINCT
     // until the prefiltered survivors
@@ -420,7 +422,7 @@ object MinHashLsh {
       col("doc_id").as("id_r"), col("sig").as("sig_r"))
     // materialized: consumed twice below (survivor ids + verify join)
     // — without this the band self-join would execute per consumer.
-    // scale-adaptive (r14): both sides carry the 60-long sig array, so
+    // scale-adaptive (r14): both sides carry the packed sig, so
     // the exploded frame is GBs at mid-scale while its estimate (from
     // the compressed parquet scan under the checkpoint) stays under
     // the broadcast threshold — a statically-planned broadcast here
@@ -482,7 +484,7 @@ object MinHashLsh {
     // joins of the naive plan (corpus-wide shuffles at 100 TB) are
     // gone. The estimate is deterministic per pair, so DISTINCT over
     // (id_l, id_r, est) equals dedup-then-estimate.
-    val b = bandsCarryingSig(signatures(docs, k), maxBucket = None)
+    val b = bandsCarryingSig(packedSignatures(signatures(docs, k)), maxBucket = None)
     val bl = b.select(col("band"), col("band_key"),
       col("doc_id").as("id_l"), col("sig").as("sig_l"))
     // renamed right-side keys: see prefilteredWithSets — avoids the
@@ -492,7 +494,7 @@ object MinHashLsh {
       col("doc_id").as("id_r"), col("sig").as("sig_r"))
     val eq = PortableHash.agreeCount(col("sig_l"), col("sig_r"))
     // scale-adaptive: same corpus-payload self-join shape as
-    // prefilteredWithSets (sig arrays on both sides)
+    // prefilteredWithSets (packed sigs on both sides)
     val bounded = corpusIsBounded(docs)
     payloadSide(bl, bounded).join(payloadSide(br, bounded),
         col("band") === col("band_r") &&

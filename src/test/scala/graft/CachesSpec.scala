@@ -38,6 +38,18 @@ class CachesSpec extends SparkSpec {
     user.unpersist()
   }
 
+  test("byte-size env knobs parse whole units and name the variable when malformed") {
+    val mb = 1024L * 1024
+    def reclaim(env: Map[String, String]) =
+      Config.envBytes("GRAFT_BCAST_RECLAIM_MB", mb, "MB", 256 * mb, env)
+    assert(reclaim(Map.empty) == 256 * mb)
+    assert(reclaim(Map("GRAFT_BCAST_RECLAIM_MB" -> " 512 ")) == 512 * mb)
+    for (bad <- Seq("256MB", "", "1.5")) {
+      val e = intercept[IllegalArgumentException](reclaim(Map("GRAFT_BCAST_RECLAIM_MB" -> bad)))
+      assert(e.getMessage == s"GRAFT_BCAST_RECLAIM_MB must be a whole number of MB, got '$bad'")
+    }
+  }
+
   test("a second releaseAll after the registry is drained is a no-op") {
     Caches.releaseAll(spark) // must not throw with an empty registry
   }

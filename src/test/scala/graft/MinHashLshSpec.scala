@@ -189,6 +189,39 @@ class MinHashLshSpec extends SparkSpec {
     assert(pts == pts.sorted)
   }
 
+  test("packed chain equals the public long/CSV pieces on a duplicate flood") {
+    // ~200 copies of one text put one mega-bucket in every band: the
+    // packed band key and signature must decide exactly what the
+    // user-visible CSV candidates and long signatures decide
+    val base = spark.read.parquet(s"$Sf0001/documents.parquet").select("doc_id", "text")
+    val first = base.orderBy("doc_id").head()
+    val maxId = base.agg(max("doc_id")).head().getLong(0)
+    val docs = base.union(spark.range(200).select(
+      (col("id") + maxId + 1).as("doc_id"), lit(first.getString(1)).as("text")))
+    val sigs = MinHashLsh.signatures(docs).collect()
+      .map(r => r.getLong(0) -> (1 to Config.NumHashes).map(r.getLong)).toMap
+    val sets = MinHashLsh.signaturesWithSets(docs).select("doc_id", "hset").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    val cand = MinHashLsh.candidatePairs(docs).collect().map(r => (r.getLong(0), r.getLong(1)))
+    def agree(l: Long, r: Long) = sigs(l).zip(sigs(r)).count { case (x, y) => x == y }
+    val minAgree = Config.estPrefilterMinCount(Config.Threshold)
+    val expected = cand.filter { case (l, r) => agree(l, r) >= minAgree }.flatMap { case (l, r) =>
+      val inter = sets(l).intersect(sets(r)).size
+      val jac = inter.toDouble / (sets(l).size + sets(r).size - inter)
+      if (jac >= Config.Threshold) Some((l, r, jac)) else None
+    }.toSet
+    assert(expected.count { case (l, r, _) => l == first.getLong(0) || l > maxId } >= 200 * 201 / 2)
+    val got = MinHashLsh.similarPairs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(got.length == got.toSet.size && got.toSet == expected)
+
+    val est = MinHashLsh.estimatedPairs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+    assert(est.length == cand.length)
+    assert(est.toMap == cand.map { case (l, r) =>
+      (l, r) -> agree(l, r).toDouble / Config.NumHashes }.toMap)
+  }
+
   test("flagship on sf0.001 finds the planted near-dup pairs") {
     val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
     val n = MinHashLsh.similarPairs(docs).count()
