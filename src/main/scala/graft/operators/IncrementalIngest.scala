@@ -13,14 +13,23 @@ import graft.functions.PortableHash
   * against the index, EXACT-verified against only the matched
   * corpus docs, and survivors are appended to both stores.
   *
-  * Scale shape: all per-batch work is batch-sized — the corpus is
-  * touched only through (a) the slim band index on the join's build
-  * side and (b) the handful of matched docs re-read for exact
-  * verification (predicate-pushed doc_id IN (...) scan). Nothing
-  * ever re-bands or re-reads the whole corpus. Verification uses
-  * the same fused sorted-set intersection as the batch path, so a
-  * batch doc is dropped iff a batch-mode run over corpus+batch
-  * would have paired it.
+  * Scale shape: a batch is banded ONCE; the probe and the index
+  * write both read that one checkpointed band frame, and the
+  * verified duplicate ids reach the left-anti and both store writes
+  * as a tiny broadcast. What a batch still reads beyond itself:
+  * (a) the whole band index, on the probe join's build side (about
+  * 5.5 MB at 10k docs), and (b) the whole corpus text column for the
+  * verify's semi-join against the candidate ids — about 95% of the
+  * store's bytes; no doc_id IN (...) predicate reaches the parquet
+  * scan. The candidate-id list is materialized before that
+  * semi-join: left lazy, its distinct aggregate is a shuffle that
+  * Spark's runtime-filter rule offers to prune, sourcing a bloom
+  * filter from the corpus scan (its ingest_batch partition filter
+  * looks selective) — one more job over the whole corpus doc_id
+  * column. A materialized list has no shuffle left to prune.
+  * Verification uses the same fused sorted-set intersection as the
+  * batch path, so a batch doc is dropped iff a batch-mode run over
+  * corpus+batch would have paired it.
   */
 object IncrementalIngest {
 
@@ -38,9 +47,11 @@ object IncrementalIngest {
     * ingest uses a real batch column — see [[ingestDedupStream]]. */
   val FrontierPct: Int = 80
 
+  /** 0 on an empty `docs` (no max): corpus and batch are then both
+    * empty, the oracle's result when its max(doc_id) is null. */
   def frontierId(docs: DataFrame): Long = {
-    val mx = docs.agg(max("doc_id")).head().getLong(0)
-    (mx + 1) * FrontierPct / 100
+    val mx = docs.agg(max("doc_id")).head()
+    if (mx.isNullAt(0)) 0L else (mx.getLong(0) + 1) * FrontierPct / 100
   }
 
   /** One ingest round, pure batch-to-batch (the foreachBatch body,
@@ -50,14 +61,29 @@ object IncrementalIngest {
   def filterBatch(batch: DataFrame, corpusBands: DataFrame, corpusTexts: DataFrame,
                   k: Int = Config.K,
                   threshold: Double = Config.Threshold): DataFrame = {
-    val cand = MinHashLsh.incrementalCandidates(corpusBands, batch, k)
+    val nb = MinHashLsh.bands(batch, k).graftCheckpoint() // both probe joins
+    verifiedDupIds(batch, nb, corpusBands, corpusTexts, k, threshold)
+      .fold(batch)(dropIds(batch, _))
+  }
+
+  /** The batch doc ids that verify as near-dups — of a corpus doc or
+    * of a smaller-id batch doc — given the batch's checkpointed bands
+    * `nb`; None when the probe finds no candidate pair. Lazy: the
+    * caller decides whether to materialize it. */
+  private def verifiedDupIds(batch: DataFrame, nb: DataFrame, corpusBands: DataFrame,
+                             corpusTexts: DataFrame, k: Int,
+                             threshold: Double): Option[DataFrame] = {
+    val cand = MinHashLsh.incrementalCandidatesOf(corpusBands, nb)
       .graftCheckpoint() // consumed for both sides' doc-id lists below
-    if (cand.isEmpty) return batch
+    if (cand.isEmpty) return None
     val hset = array_sort(array_distinct(Shingling.shingleHashArray(col("text"), k)))
     // sets ONLY for docs that appear in some candidate pair: batch
-    // side from the batch, corpus side via a pruned corpus read
+    // side from the batch, corpus side via the corpus text read. The
+    // id list is materialized first, so no runtime bloom filter
+    // re-scans the corpus doc_id column (see the object doc)
     val ids = cand.select(col("id_l").as("doc_id"))
       .union(cand.select(col("id_r").as("doc_id"))).distinct()
+      .graftCheckpoint()
     val sets = batch.select(col("doc_id"), col("text"))
       .union(corpusTexts.select(col("doc_id"), col("text")))
       .join(broadcast(ids), Seq("doc_id"), "left_semi")
@@ -68,13 +94,16 @@ object IncrementalIngest {
     // drop the LARGER id of each verified pair — corpus ids are
     // smaller than batch ids by construction (monotonic ingest), so
     // corpus docs always win and within-batch dups keep the min id
-    val dupIds = cand
+    Some(cand
       .join(sets.as("l"), col("id_l") === col("l.doc_id"))
       .join(sets.as("r"), col("id_r") === col("r.doc_id"))
       .filter(jac >= threshold)
-      .select(col("id_r").as("doc_id")).distinct()
-    batch.join(dupIds, Seq("doc_id"), "left_anti")
+      .select(col("id_r").as("doc_id")).distinct())
   }
+
+  /** `df` without the rows whose doc_id is in the (small) `ids`. */
+  private def dropIds(df: DataFrame, ids: DataFrame): DataFrame =
+    df.join(broadcast(ids), Seq("doc_id"), "left_anti")
 
   /** The continuous loop: stream of (doc_id, text, ...) docs →
     * per-micro-batch incremental dedup against the persistent stores
@@ -137,8 +166,16 @@ object IncrementalIngest {
           org.apache.spark.sql.types.StringType))))
     val corpusTexts = readOr(corpusDir, batch.limit(0))
     val corpusBands = readOr(indexDir, emptyBands)
-    val kept = filterBatch(batch, corpusBands, corpusTexts, k, threshold)
-      .graftCheckpoint() // consumed by two writes below
+    // the batch's bands feed the probe AND are the index rows of the
+    // docs it keeps: banded once, never re-sketched for the write
+    val nb = MinHashLsh.bands(batch, k).graftCheckpoint()
+    val (kept, keptBands) =
+      verifiedDupIds(batch, nb, corpusBands, corpusTexts, k, threshold) match {
+        case None => (batch, nb)
+        case Some(dups) =>
+          val d = dups.graftCheckpoint() // consumed by both writes below
+          (dropIds(batch, d), dropIds(nb, d))
+      }
     def writePartition(df: DataFrame, dir: String): Unit =
       df.withColumn("ingest_batch", lit(batchId))
         .write.mode("overwrite")
@@ -146,7 +183,7 @@ object IncrementalIngest {
         .partitionBy("ingest_batch")
         .parquet(dir)
     writePartition(kept, corpusDir)
-    writePartition(MinHashLsh.bands(kept, k), indexDir)
+    writePartition(keptBands, indexDir)
   }
 
   /** SCHEMA EVOLUTION across landing batches — the ingest reality

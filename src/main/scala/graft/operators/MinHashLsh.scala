@@ -271,8 +271,15 @@ object MinHashLsh {
     * touching the batch (the oracle replays it that way). */
   def incrementalCandidates(corpusBands: DataFrame, newDocs: DataFrame,
                             k: Int = Config.K,
-                            mergeHint: Boolean = false): DataFrame = {
-    val nb = bands(newDocs, k).graftCheckpoint() // consumed by both joins below
+                            mergeHint: Boolean = false): DataFrame =
+    incrementalCandidatesOf(corpusBands,
+      bands(newDocs, k).graftCheckpoint(), mergeHint) // consumed by both joins
+
+  /** [[incrementalCandidates]] over the batch's already-banded,
+    * checkpointed `bands` frame `nb` — lets IncrementalIngest band a
+    * batch once and reuse those rows for its index write. */
+  private[operators] def incrementalCandidatesOf(corpusBands: DataFrame, nb: DataFrame,
+                                                 mergeHint: Boolean = false): DataFrame = {
     // mergeHint pins sort-merge for a BUCKETED corpusBands (sources
     // .BandIndex): without it Catalyst broadcasts the small side at
     // test scale and the layout's zero-exchange property is invisible

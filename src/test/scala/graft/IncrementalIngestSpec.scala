@@ -1,8 +1,10 @@
 package graft
 
 import graft.operators.{IncrementalIngest, MinHashLsh}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.Files
 
 class IncrementalIngestSpec extends SparkSpec {
@@ -28,6 +30,84 @@ class IncrementalIngestSpec extends SparkSpec {
         docsDf(1L -> a, 2L -> b), MinHashLsh.bands(empty), empty)
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 2L))
+  }
+
+  test("frontierId on an empty corpus: the incremental queries return no rows") {
+    val dir = Files.createTempDirectory("graft-ingest-empty").toString
+    spark.read.parquet(s"$Sf0001/documents.parquet").limit(0)
+      .write.parquet(s"$dir/documents.parquet")
+    assert(IncrementalIngest.frontierId(spark.read.parquet(s"$dir/documents.parquet")) == 0L)
+    for (q <- Seq("ingest_filter", "incremental_pairs"))
+      assert(SparkEntry.queries(q)(spark, dir).count() == 0L, q)
+  }
+
+  private def ingest(dir: String, batchId: Long, rows: (Long, String)*): Unit =
+    IncrementalIngest.ingestBatch(docsDf(rows: _*), batchId, s"$dir/corpus", s"$dir/index")
+
+  private def partition(dir: String, store: String, batchId: Long) =
+    spark.read.parquet(s"$dir/$store").filter(col("ingest_batch") === batchId)
+      .drop("ingest_batch")
+
+  private def docIds(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.select("doc_id").collect().map(_.getLong(0)).toSet
+
+  private def rowMultiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("doc_id", "band", "band_key").collect().map(_.toString).sorted.toSeq
+
+  test("ingestBatch indexes exactly the bands of the docs it keeps") {
+    val dir = Files.createTempDirectory("graft-ingest-index").toString
+    ingest(dir, 0L, 1L -> a, 2L -> b)
+    // corpus near-dup (10), novel doc (11), within-batch dup of it (12)
+    ingest(dir, 1L, 10L -> a, 11L -> c, 12L -> c)
+    val kept = partition(dir, "corpus", 1L)
+    assert(docIds(kept) == Set(11L))
+    assert(rowMultiset(partition(dir, "index", 1L)) == rowMultiset(MinHashLsh.bands(kept)))
+  }
+
+  test("ingestBatch with zero candidates keeps and indexes every doc") {
+    val dir = Files.createTempDirectory("graft-ingest-nocand").toString
+    ingest(dir, 0L, 1L -> a, 2L -> b)
+    val batch = docsDf(10L -> c)
+    assert(MinHashLsh.incrementalCandidates(partition(dir, "index", 0L), batch).isEmpty)
+    ingest(dir, 1L, 10L -> c)
+    val corpus = spark.read.parquet(s"$dir/corpus")
+    assert(docIds(corpus) == Set(1L, 2L, 10L))
+    val index = spark.read.parquet(s"$dir/index")
+    assert(rowMultiset(index) == rowMultiset(MinHashLsh.bands(corpus)))
+  }
+
+  test("ingestBatch plans: no runtime bloom filter, the left-anti is a broadcast join") {
+    val dir = Files.createTempDirectory("graft-ingest-plans").toString
+    val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
+    val store = s"$dir/store"
+    IncrementalIngest.ingestBatch(docs.filter(col("doc_id") < 400), 0L,
+      s"$store/corpus", s"$store/index")
+    // the later docs plus an exact copy of a corpus doc: the probe
+    // finds candidates and the verify drops at least one doc
+    val copy = docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(100000L))
+    val arriving = docs.filter(col("doc_id") >= 400).unionByName(copy)
+    // RDD-backed, as foreachBatch delivers a micro-batch: a frame with
+    // no size statistics, which is what lets the runtime-filter rule
+    // take the candidate frames derived from it for a huge join side
+    val batch = spark.createDataFrame(arriving.rdd, arriving.schema)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      IncrementalIngest.ingestBatch(batch, 1L, s"$store/corpus", s"$store/index")
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val kept = docIds(partition(store, "corpus", 1L))
+    assert(kept.nonEmpty && !kept.contains(100000L))
+    import scala.jdk.CollectionConverters._
+    val lines = plans.asScala.toSeq.flatMap(_.split("\n"))
+    assert(!lines.exists(_.contains("bloom_filter_agg")), "runtime bloom filter planned")
+    val antis = lines.filter(_.contains("LeftAnti"))
+    assert(antis.nonEmpty && antis.forall(_.contains("BroadcastHashJoin")), antis.mkString("\n"))
   }
 
   test("streaming ingest loop: second batch deduped against the first's persisted state") {
