@@ -2,21 +2,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr, xxhash64}
 object Bench {
-  // see graft.Caches — the r02 2.8× regression lesson
-  private def releaseCaches(spark: SparkSession): Unit =
-    Caches.releaseAll(spark)
-
-  /** `only` = the SPARK_GRAFT_ONLY selection: the model prewarms are
+  /** `names` = the queries this run times: the model prewarms are
     * corpus-sized fits (CountVectorizer vocabulary, KMeans quantizer)
     * that only the ML/ANN families consume — a filtered run over other
     * queries must not pay minutes of irrelevant warmup at scale
     * corpora (the 500k-doc headline chain spent longer in prewarmFit
-    * than in its own queries). Full runs (`only` empty) prewarm
-    * everything, as before. */
+    * than in its own queries). */
   private def warmup(spark: SparkSession, sfDir: String,
-                     only: Option[Set[String]]): Unit = {
+                     names: Seq[String]): Unit = {
     def selected(prefixes: String*): Boolean =
-      only.forall(sel => sel.exists(n => prefixes.exists(n.startsWith)))
+      names.exists(n => prefixes.exists(n.startsWith))
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{broadcast, count, lit, row_number}
     val o = spark.read.parquet(s"$sfDir/orders.parquet").limit(2000)
@@ -166,33 +161,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) — surface as long ns
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // single-JVM harness: driver and "executor" share the process, so
-      // heartbeat failure detection adds no safety — but a saturated
-      // 32-thread scale run CAN starve the heartbeat thread past the
-      // 120 s default, and the receiver then kills the only executor
-      // mid-query (observed at 500k docs: "Removing executor driver
-      // with no recent heartbeats: 127773 ms"). Widen both timeouts;
-      // a real cluster deployment would keep the defaults.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      // per-doc set/signature frames are O(#docs) while candidate-pair
-      // streams are O(#pairs): let Catalyst broadcast the former when
-      // stats allow instead of shuffling array payloads pair-wise
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // forcing hashes every output column; some queries emit map columns
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional comma-joined query-name filter (iteration aid, same as
+    // Verify); SORTED run order: queries is a hash Map, so adding a
+    // query used to reshuffle the whole run order — and which neighbor
+    // pays a JVM/cache warm-up effect — making per-query times
+    // incomparable round over round (r6 measured tfidf_top_terms 0.9 s
+    // clean vs 5.6 s after an order shuffle)
+    val names = Harness.select(sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq))
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Warm up the whole execution stack UNTIMED so init cost doesn't
     // land on whichever query runs first (measured ~3.5s of parquet
     // reader + codegen + broadcast + window machinery startup being
@@ -201,17 +177,8 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
-    // optional comma-joined query-name filter (iteration aid, same as Verify)
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    warmup(spark, sfDir, only)
+    warmup(spark, sfDir, names)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    // SORTED run order: queries is a hash Map, so adding a query used
-    // to reshuffle the whole run order — and which neighbor pays a
-    // JVM/cache warm-up effect — making per-query times incomparable
-    // round over round (r6 measured tfidf_top_terms 0.9 s clean vs
-    // 5.6 s after an order shuffle). Alphabetical is arbitrary but
-    // STABLE under insertion.
     // isolated min-of-reps baseline for the retry gate (committed
     // artifact of the PREVIOUS round's isolated protocol; overridable,
     // absent → gate off)
@@ -221,10 +188,7 @@ object Bench {
     canarySamples += ((0, canaryOnce(spark)))
     var done = 0
     val retriedNames = scala.collection.mutable.ArrayBuffer[String]()
-    val toRun = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    val totalToRun = toRun.size
-    val results = toRun.map { case (name, fn) =>
+    val results = names.map { name =>
       def oneRep(): (Double, RepMetrics) = {
         // count() alone lets Catalyst prune unreferenced Project
         // expressions, so projection-only queries would never run the
@@ -233,14 +197,13 @@ object Bench {
         // (bit_xor: no ANSI overflow).
         metrics.snapshotAndReset(spark.sparkContext) // clear pre-query residue
         val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        df.select(xxhash64(df.columns.map(col): _*).as("h"))
-          .agg(expr("bit_xor(h)")).collect()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val m = metrics.snapshotAndReset(spark.sparkContext)
-        // each rep re-invokes fn and re-checkpoints — release the
-        // blocks so rep N+1 (and every later query) starts clean
-        releaseCaches(spark)
+        // each rep rebuilds the query and re-checkpoints — run releases
+        // the blocks so rep N+1 (and every later query) starts clean
+        val (dt, m) = Harness.run(spark, name, sfDir) { df =>
+          df.select(xxhash64(df.columns.map(col): _*).as("h"))
+            .agg(expr("bit_xor(h)")).collect()
+          ((System.nanoTime() - t0) / 1e9, metrics.snapshotAndReset(spark.sparkContext))
+        }
         // broadcast residue AFTER release: bounded over a chained run
         // is the receipt that r13's accumulation defect stays fixed
         val bcast = org.apache.spark.sql.graft.Bridge
@@ -266,7 +229,6 @@ object Bench {
         case e: Throwable =>
           // a broken query must NOT masquerade as a fast one
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          releaseCaches(spark)
           name -> Seq((-1.0, RepMetrics(0L, 0L, 0L)))
       }
       done += 1
@@ -274,7 +236,7 @@ object Bench {
       // run with only start/end samples let a mid-run CPU-steal burst
       // inflate one query 26x invisibly (factor-50 receipt, r13) — the
       // per-query cost of ~0.1 s only matters when there are hundreds
-      val everyN = if (totalToRun <= 40) 1 else CanaryEveryN
+      val everyN = if (names.size <= 40) 1 else CanaryEveryN
       if (done % everyN == 0) canarySamples += ((done, canaryOnce(spark)))
       r
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -12,7 +11,7 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.Explain <sfDir> [--out dir] [query ...]
   * With --out, writes one `<dir>/<name>.txt` per query (all queries
-  * when none are named) — commit the directory as PLANS_r{N}/.
+  * when none are named).
   * Without --out, prints the (selected or default) plans to stdout.
   */
 object Explain {
@@ -22,31 +21,21 @@ object Explain {
     val outDir = rest.sliding(2).collectFirst { case Seq("--out", d) => d }
     val named = rest.filterNot(_.startsWith("--"))
       .filterNot(d => outDir.contains(d))
-    val names =
-      if (named.nonEmpty) named
-      else if (outDir.nonEmpty) SparkEntry.queries.keys.toSeq.sorted
-      else Seq("q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
+    val names = Harness.select(
+      if (named.nonEmpty) Some(named)
+      else if (outDir.nonEmpty) None
+      else Some(Seq("q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
         "similar_pairs", "cosine_topk", "events_sessionize",
         "embed_dedup_pairs", "simhash_dedup_pairs", "events_range_join",
         "tfidf_top_terms", "events_asof_native", "events_range_native",
-        "incremental_pairs", "pipeline_kept", "group_sketch")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // mirror Bench/Verify so audited plans are the executed plans
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+        "incremental_pairs", "pipeline_kept", "group_sketch")))
+    val spark = Harness.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     outDir.foreach(d => new java.io.File(d).mkdirs())
     names.foreach { n =>
       val plan =
-        try SparkEntry.queries(n)(spark, sfDir).queryExecution
-          .explainString(ExplainMode.fromString("formatted"))
+        try Harness.run(spark, n, sfDir)(
+          _.queryExecution.explainString(ExplainMode.fromString("formatted")))
         catch { case e: Throwable => s"FAILED TO PLAN: ${e.getMessage}" }
       outDir match {
         case Some(d) => Files.writeString(Paths.get(s"$d/$n.txt"), plan)
@@ -54,8 +43,6 @@ object Explain {
           println(s"\n========== $n ==========")
           println(plan)
       }
-      // some query constructors materialize checkpoints — release them
-      Caches.releaseAll(spark)
     }
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.graft._
 
 /** SparkSessionExtensions entry point: registers the engine's native
@@ -11,50 +11,17 @@ import org.apache.spark.sql.graft._
   * `SELECT graft_minhash_sketch(graft_shingle_hashes(text, 3)) ...`.
   * Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` (see
-  * Verify/Bench) — the DataFrame API path does not require it.
+  * graft.Harness) — the DataFrame API path does not require it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def intLit(e: Expression, fn: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn expects an integer literal parameter, got $other")
-  }
-
-  private def one(fn: String, build: Expression => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (new FunctionIdentifier(fn), new ExpressionInfo(fn, fn),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, s"$fn expects 1 argument, got ${children.length}")
-        build(children.head)
-      })
-
-  private def two(fn: String, build: (Expression, Expression) => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (new FunctionIdentifier(fn), new ExpressionInfo(fn, fn),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, s"$fn expects 2 arguments, got ${children.length}")
-        build(children(0), children(1))
-      })
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // whole-operator tier: logical AsOfJoinNode → AsOfJoinExec
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     // optimizer-rule tier: declarative |Δt| <= w joins → bucketed form
     ext.injectOptimizerRule(_ => RangeJoinRule)
-    ext.injectFunction(one("graft_polyhash", PolyHash))
-    ext.injectFunction(two("graft_shingle_hashes",
-      (t, k) => ShingleHashes(t, intLit(k, "graft_shingle_hashes"))))
-    ext.injectFunction(one("graft_minhash_sketch", MinHashSketch))
-    ext.injectFunction(two("graft_vec_dot", VecDot))
-    ext.injectFunction(two("graft_array_agree_count", ArrayAgreeCount))
-    ext.injectFunction(two("graft_sorted_intersect_count", SortedIntersectCount))
-    ext.injectFunction(two("graft_feature_hash_vec",
-      (a, d) => FeatureHashVec(a, intLit(d, "graft_feature_hash_vec"))))
-    ext.injectFunction(two("graft_simhash_bits",
-      (a, b) => SimHashBits(a, intLit(b, "graft_simhash_bits"))))
-    ext.injectFunction(two("graft_shingle_windows",
-      (t, k) => ShingleWindows(t, intLit(k, "graft_shingle_windows"))))
-    ext.injectFunction(one("graft_word_bigrams", WordBigrams))
+    Bridge.sqlFunctions.foreach { case (name, build) =>
+      ext.injectFunction((new FunctionIdentifier(name), new ExpressionInfo(name, name), build))
+    }
   }
 }

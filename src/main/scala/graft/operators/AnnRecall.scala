@@ -173,18 +173,6 @@ object AnnRecall {
   def recallGate(emb: DataFrame, docs: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    // dev-aid stage attribution (GRAFT_RECALL_DEBUG only — the gate's
-    // cost is 4 families x (exact baseline + approximate serve), and
-    // optimizing it blind misattributed the cost twice already)
-    val debug = sys.env.contains("GRAFT_RECALL_DEBUG")
-    def timed[A](name: String)(f: => A): A =
-      if (!debug) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[ann_recall] $name%-18s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-        r
-      }
     // The four family gates are INDEPENDENT job chains over bounded
     // frames; running them sequentially left most of the machine idle
     // through each family's straggler stages (measured: stage sums
@@ -221,17 +209,15 @@ object AnnRecall {
         df.withColumn("rank", row_number().over(we))
           .filter(col("rank") <= K).select("query_id", "neighbor_id")
       val fIvf = Future {
-        val exactE = timed("exact_cosine")(
-          cachedExact("exact_cosine", emb)(topK(scored)))
+        val exactE = cachedExact("exact_cosine", emb)(topK(scored))
         val ivf = EmbeddingSim.ivfTopK(emb, K).select("query_id", "neighbor_id")
-        timed("ivf_serve")(
-          recallCounts(exactE, ivf, Seq("query_id", "neighbor_id")))
+        recallCounts(exactE, ivf, Seq("query_id", "neighbor_id"))
       }
       // --- text domain: MLlib minhash ANN vs exact shingle-set
       // Jaccard top-k on the same input slice and query set ---
       val d500 = docs.filter(col("doc_id") < 500)
       val fMl = Future {
-        val exactT = timed("exact_jaccard")(cachedExact("exact_jaccard", d500) {
+        val exactT = cachedExact("exact_jaccard", d500) {
           val sets = d500.select(col("doc_id"),
             array_sort(array_distinct(Shingling.shingleHashArray(col("text")))).as("hset"))
             .graftCheckpoint()
@@ -247,19 +233,17 @@ object AnnRecall {
             .withColumn("rank", row_number().over(w))
             .filter(col("rank") <= K)
             .select("query_id", "neighbor_id")
-        })
+        }
         val ml = graft.ml.MlMinHash.annTopK(d500).select("query_id", "neighbor_id")
-        timed("ml_ann_serve")(
-          recallCounts(exactT, ml, Seq("query_id", "neighbor_id")))
+        recallCounts(exactT, ml, Seq("query_id", "neighbor_id"))
       }
       // --- pairs domain: MLlib AND-OR banded similarity join vs the
       // exact verified pairs, same slice (both emit id_l < id_r) ---
       val fPairs = Future {
-        val exactP = timed("exact_pairs")(cachedExact("exact_pairs", d500)(
-          MinHashLsh.similarPairs(d500).select("id_l", "id_r")))
+        val exactP = cachedExact("exact_pairs", d500)(
+          MinHashLsh.similarPairs(d500).select("id_l", "id_r"))
         val mlP = graft.ml.MlMinHash.pairsBanded(d500).select("id_l", "id_r")
-        timed("ml_pairs_serve")(
-          recallCounts(exactP, mlP, Seq("id_l", "id_r")))
+        recallCounts(exactP, mlP, Seq("id_l", "id_r"))
       }
       // --- maintained-index domain (r10): the FEED-MAINTAINED IVF
       // (held-out tenth inserted, %10==5 band deleted, one span) vs
@@ -268,15 +252,13 @@ object AnnRecall {
       // is part of what's gated: a deleted vector the probe still
       // serves displaces true neighbors and drops recall. ---
       val fMaint = Future {
-        val exactM = timed("exact_maintained")(cachedExact("exact_maintained", emb)(
-          topK(scored.filter(col("neighbor_id") % 10 =!= 5))))
-        val (mModel, mIndex, mTomb) = timed("ensure_maintained")(
-          EmbeddingSim.ensureMaintainedIvf(emb))
+        val exactM = cachedExact("exact_maintained", emb)(
+          topK(scored.filter(col("neighbor_id") % 10 =!= 5)))
+        val (mModel, mIndex, mTomb) = EmbeddingSim.ensureMaintainedIvf(emb)
         val maint = EmbeddingSim.ivfProbeMaintained(
           emb.filter(col("vec_id") % 100 === 0), mModel, mIndex, mTomb, K)
           .select("query_id", "neighbor_id")
-        timed("maintained_serve")(
-          recallCounts(exactM, maint, Seq("query_id", "neighbor_id")))
+        recallCounts(exactM, maint, Seq("query_id", "neighbor_id"))
       }
       import scala.concurrent.duration.Duration
       // await EVERY family before propagating any failure (r15, r14
@@ -297,10 +279,6 @@ object AnnRecall {
       val (mTot, mHits) = rMaint.get
       def pct(hits: Long, total: Long): Long =
         if (total == 0) 100L else hits * 100L / total
-      if (sys.env.contains("GRAFT_RECALL_DEBUG"))
-        System.err.println(s"[ann_recall] ivf=${pct(ivfHits, eTot)} " +
-          s"ml_minhash=${pct(mlHits, tTot)} ml_pairs=${pct(pHits, pTot)} " +
-          s"ivf_maintained=${pct(mHits, mTot)}")
       Seq(
         ("ivf", IvfFloorPct.toLong,
           if (pct(ivfHits, eTot) >= IvfFloorPct) 1L else 0L),

@@ -108,7 +108,14 @@ object Dedup {
   def nearDupGroups(spark: SparkSession, docs: DataFrame,
                     k: Int = Config.K,
                     threshold: Double = Config.Threshold,
-                    maxIter: Int = 40): DataFrame = {
+                    maxIter: Int = 40): DataFrame =
+    nearDupGroupsCounted(spark, docs, k, threshold, maxIter)._1
+
+  /** [[nearDupGroups]] with the number of iterations it took to
+    * converge (specs pin the O(log diameter) claim on it). */
+  private[graft] def nearDupGroupsCounted(spark: SparkSession, docs: DataFrame,
+                                          k: Int, threshold: Double,
+                                          maxIter: Int): (DataFrame, Int) = {
     val shufP = spark.sessionState.conf.numShufflePartitions
     // ONE materialization of the verified-pair list, symmetrized in
     // the same pass (explode of the two directions) — the r11 form
@@ -173,13 +180,6 @@ object Dedup {
       converged = changed == 0
       iter += 1
     }
-    lastGroupIterations = iter
-    // one line of instrumentation per call (r11 verdict item 2): the
-    // driver-bench tail then records iterations-to-convergence, so a
-    // driver-vs-isolated wall-clock gap can be attributed (iterations
-    // x per-action scheduling overhead) without a re-run
-    System.err.println(s"[near_dup_groups] converged in $iter iterations " +
-      s"(1 action each, maxIter=$maxIter)")
     if (!converged)
       // a component with log-diameter > maxIter would get a silently
       // split clustering — surface it loudly (with the jump term that
@@ -187,13 +187,8 @@ object Dedup {
       throw new IllegalStateException(
         s"nearDupGroups did not converge in $maxIter iterations; " +
           "raise maxIter (component diameter exceeds it)")
-    labels
+    (labels, iter)
   }
-
-  /** Iterations the last [[nearDupGroups]] call took to converge —
-    * instrumentation (specs pin the O(log diameter) claim; the bench
-    * gap analysis reads it from the stderr line). */
-  @volatile private[graft] var lastGroupIterations: Int = 0
 
   /** CLUSTER-level consolidation: one surviving doc per connected
     * near-dup component — the richest member (most tokens, ties by

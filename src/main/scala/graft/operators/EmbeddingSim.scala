@@ -91,7 +91,7 @@ object EmbeddingSim {
     * note Spark's CacheManager substitutes EQUIVALENT sub-plans with
     * a registered cache automatically — so in a session where the
     * recall gate already ran, cosine_topk serves the matrix from
-    * storage too (visible as an InMemoryRelation in PLANS_r11;
+    * storage too (visible as an InMemoryRelation in its formatted plan;
     * results identical by canonicalized-plan equality). That is the
     * intended session economics, same as any user cache. */
   private val MaxScoredCacheEntries = 2

@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
   *
   * The parquet carries TIMESTAMP(NANOS) which Spark 4 won't map to a
   * timestamp type — sessions set
-  * `spark.sql.legacy.parquet.nanosAsLong=true` (see Verify/Bench)
+  * `spark.sql.legacy.parquet.nanosAsLong=true` (see graft.Harness)
   * and we normalize to integer epoch MICROseconds here, exactly what
   * DuckDB sees after its ns→us truncation, so ordering and bucketing
   * agree across engines bit-for-bit. All window/session arithmetic

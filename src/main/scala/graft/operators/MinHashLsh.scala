@@ -219,13 +219,9 @@ object MinHashLsh {
                      maxBucket: Option[Int] = None): DataFrame =
     candidatesFromBands(bands(docs, k), maxBucket)
 
-  /** dedupe=false skips the DISTINCT shuffle over the raw pair
-    * stream (a pair appears once per colliding band, ≤ Bands times)
-    * — callers that filter the stream down to a tiny verified set
-    * dedup AFTER the filter instead. */
+  /** [[candidatePairs]] over an already-banded frame. */
   def candidatesFromBands(b: DataFrame,
-                          maxBucket: Option[Int] = None,
-                          dedupe: Boolean = true): DataFrame = {
+                          maxBucket: Option[Int] = None): DataFrame = {
     val bounded = maxBucket match {
       case Some(m) =>
         val sizes = b.groupBy("band", "band_key").agg(count(lit(1)).as("bucket_n"))
@@ -235,10 +231,10 @@ object MinHashLsh {
     }
     val l = bounded.select(col("band"), col("band_key"), col("doc_id").as("id_l"))
     val r = bounded.select(col("band"), col("band_key"), col("doc_id").as("id_r"))
-    val raw = l.join(r, Seq("band", "band_key"))
+    l.join(r, Seq("band", "band_key"))
       .filter(col("id_l") < col("id_r"))
       .select("id_l", "id_r")
-    if (dedupe) raw.distinct() else raw
+      .distinct()
   }
 
   /** Collision-COUNTING candidates (cf. C2Net, ICDE 2019 — counting
@@ -322,9 +318,8 @@ object MinHashLsh {
     * feeding the band exchange writes 22.2 MB instead of 36.2 MB, and
     * a whole similarPairs op 25.6 MB instead of 39.6 MB. Bucket
     * equality is unchanged — both key forms are injective in the
-    * band's components. maxBucket optionally drops degenerate
-    * buckets. */
-  private def bandsCarryingSig(packed: DataFrame, maxBucket: Option[Int],
+    * band's components. */
+  private def bandsCarryingSig(packed: DataFrame,
                                bands: Int = Config.Bands,
                                rowsPerBand: Int = Config.RowsPerBand): DataFrame = {
     require(bands * rowsPerBand <= Config.NumHashes,
@@ -333,15 +328,8 @@ object MinHashLsh {
     val bandStructs = (0 until bands).map { j =>
       struct(lit(j).as("band"), substring(col("sig"), j * w + 1, w).as("band_key"))
     }
-    val b0 = packed.select(col("doc_id"), col("sig"), explode(array(bandStructs: _*)).as("bk"))
+    packed.select(col("doc_id"), col("sig"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("doc_id"), col("sig"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
-    maxBucket match {
-      case Some(m) =>
-        val sizes = b0.groupBy("band", "band_key").agg(count(lit(1)).as("bucket_n"))
-        b0.join(sizes.filter(col("bucket_n") <= m), Seq("band", "band_key"))
-          .select("doc_id", "sig", "band", "band_key")
-      case None => b0
-    }
   }
 
   /** Candidates verified with EXACT shingle-hash-set Jaccard >=
@@ -356,13 +344,11 @@ object MinHashLsh {
     * Output: id_l, id_r, jaccard. */
   def similarPairs(docs: DataFrame, k: Int = Config.K,
                    threshold: Double = Config.Threshold,
-                   maxBucket: Option[Int] = None,
                    bands: Int = Config.Bands,
                    rowsPerBand: Int = Config.RowsPerBand): DataFrame = {
     val bounded = corpusIsBounded(docs)
     val (prefiltered, sets) =
-      prefilteredWithSets(docs, k, maxBucket, threshold, bands, rowsPerBand,
-        bounded)
+      prefilteredWithSets(docs, k, threshold, bands, rowsPerBand, bounded)
     // |A∩B| by merge scan over the sorted sets; |A∪B| = |A|+|B|-|A∩B|
     // — same integers as array_intersect/array_union, no hash sets or
     // output arrays built per pair
@@ -391,7 +377,6 @@ object MinHashLsh {
     * high-containment/low-Jaccard pairs; see
     * CorpusStats.containmentPairs' prefix filter.) */
   private def prefilteredWithSets(docs: DataFrame, k: Int,
-                                  maxBucket: Option[Int],
                                   threshold: Double = Config.Threshold,
                                   bands: Int = Config.Bands,
                                   rowsPerBand: Int = Config.RowsPerBand,
@@ -415,7 +400,7 @@ object MinHashLsh {
     // agreement prefilter is a join-residual condition — no joins
     // against the multi-million-pair stream at all, and no DISTINCT
     // until the prefiltered survivors
-    val bandsWithSig = bandsCarryingSig(base, maxBucket, bands, rowsPerBand)
+    val bandsWithSig = bandsCarryingSig(base, bands, rowsPerBand)
     // right side's key columns RENAMED (not disambiguated-by-dataset):
     // same-name same-exprId keys in a self-join condition construct a
     // trivially-true predicate first and rely on the analyzer's
@@ -466,7 +451,7 @@ object MinHashLsh {
     // the union below reads p twice — materialize the (tiny) verified
     // pair list or the whole LSH chain executes once per branch
     val p = similarPairs(docs, k, threshold,
-      maxBucket = None, bands = bands, rowsPerBand = rowsPerBand).graftCheckpoint()
+      bands = bands, rowsPerBand = rowsPerBand).graftCheckpoint()
     val both = p.select(col("id_l").as("id_a"), col("id_r").as("id_b"))
       .union(p.select(col("id_r").as("id_a"), col("id_l").as("id_b")))
     val texts = docs.select(col("doc_id"), col("text"))
@@ -491,7 +476,7 @@ object MinHashLsh {
     // joins of the naive plan (corpus-wide shuffles at 100 TB) are
     // gone. The estimate is deterministic per pair, so DISTINCT over
     // (id_l, id_r, est) equals dedup-then-estimate.
-    val b = bandsCarryingSig(packedSignatures(signatures(docs, k)), maxBucket = None)
+    val b = bandsCarryingSig(packedSignatures(signatures(docs, k)))
     val bl = b.select(col("band"), col("band_key"),
       col("doc_id").as("id_l"), col("sig").as("sig_l"))
     // renamed right-side keys: see prefilteredWithSets — avoids the

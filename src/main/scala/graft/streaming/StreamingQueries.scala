@@ -139,26 +139,6 @@ object StreamingQueries {
   private def widen(stream: DataFrame, n: Int): DataFrame =
     if (n > 0) stream.repartition(n) else stream
 
-  /** Dev aid (GRAFT_STREAM_DEBUG only): per-batch wall/duration
-    * breakdown from the progress log, so a slow harness query can be
-    * attributed to planning vs state commit vs sink without
-    * re-instrumenting (the r14 optimization pass needed this twice). */
-  private def debugProgress(name: String,
-                            q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach { p =>
-        val d = p.durationMs
-        System.err.println(f"[stream] $name%-28s batch=${p.batchId}%2d " +
-          f"total=${d.getOrDefault("triggerExecution", -1L)}%5d ms " +
-          f"(addBatch=${d.getOrDefault("addBatch", -1L)}%5d " +
-          f"getBatch=${d.getOrDefault("getBatch", -1L)}%3d " +
-          f"latestOffset=${d.getOrDefault("latestOffset", -1L)}%3d " +
-          f"queryPlanning=${d.getOrDefault("queryPlanning", -1L)}%4d " +
-          f"commitOffsets=${d.getOrDefault("commitOffsets", -1L)}%3d " +
-          f"walCommit=${d.getOrDefault("walCommit", -1L)}%3d) " +
-          f"rows=${p.numInputRows}%6d")
-      }
-
   /** Harness hygiene: state-store PROVIDERS (and their in-memory
     * version maps) outlive the query that created them — in a
     * session running many harness queries they accumulate and the
@@ -188,8 +168,7 @@ object StreamingQueries {
     def run(): Unit = withStatePartitions(spark, stateParts) {
       val q = transform(widen(stream, widenTo)).writeStream
         .format("memory").queryName(name).outputMode(outputMode).start()
-      try { q.processAllAvailable(); graft.PlanCapture.record(name, q)
-            debugProgress(name, q) }
+      try { q.processAllAvailable(); graft.PlanCapture.record(name, q) }
       finally { q.stop(); unloadStateStores() }
     }
     if (noDataBatch) run() else withoutNoDataBatch(spark)(run())
@@ -221,8 +200,7 @@ object StreamingQueries {
       // projection-only work before their own user_id exchange
       val q = transform(src("a", feedA.schema), src("b", feedB.schema))
         .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try { q.processAllAvailable(); graft.PlanCapture.record(name, q)
-            debugProgress(name, q) }
+      try { q.processAllAvailable(); graft.PlanCapture.record(name, q) }
       finally { q.stop(); unloadStateStores() }
     }
     if (noDataBatch) run() else withoutNoDataBatch(spark)(run())

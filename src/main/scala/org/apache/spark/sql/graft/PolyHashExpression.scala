@@ -147,40 +147,45 @@ object Bridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
-  /** Register graft_polyhash on an EXISTING session (the
-    * spark.sql.extensions route only applies at session creation). */
-  def registerPolyHash(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_polyhash", exprs => PolyHash(exprs.head), "scala_udf")
-
-  /** Register the WHOLE expression tier on an existing session —
-    * same surface GraftExtensions injects at session creation. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
+  /** The engine's SQL function tier, one (name, builder) entry per
+    * function, each declared with its arity: the builder checks the
+    * argument count and names the function when it is wrong.
+    * GraftExtensions injects these at session creation;
+    * [[registerAll]] registers the same entries on a live session. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
     def intLit(e: Expression, fn: String): Int = e match {
       case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
       case other => throw new IllegalArgumentException(
         s"$fn expects an integer literal parameter, got $other")
     }
-    reg.createOrReplaceTempFunction("graft_polyhash",
-      es => PolyHash(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      es => ShingleHashes(es(0), intLit(es(1), "graft_shingle_hashes")), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_minhash_sketch",
-      es => MinHashSketch(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_vec_dot",
-      es => VecDot(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_array_agree_count",
-      es => ArrayAgreeCount(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_sorted_intersect_count",
-      es => SortedIntersectCount(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_feature_hash_vec",
-      es => FeatureHashVec(es(0), intLit(es(1), "graft_feature_hash_vec")), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_simhash_bits",
-      es => SimHashBits(es(0), intLit(es(1), "graft_simhash_bits")), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_shingle_windows",
-      es => ShingleWindows(es(0), intLit(es(1), "graft_shingle_windows")), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_word_bigrams",
-      es => WordBigrams(es.head), "scala_udf")
+    def fn(name: String, arity: Int)(build: Seq[Expression] => Expression) =
+      (name, (es: Seq[Expression]) => {
+        require(es.length == arity, s"$name expects $arity argument" +
+          s"${if (arity == 1) "" else "s"}, got ${es.length}")
+        build(es)
+      })
+    Seq(
+      fn("graft_polyhash", 1)(es => PolyHash(es(0))),
+      fn("graft_shingle_hashes", 2)(es =>
+        ShingleHashes(es(0), intLit(es(1), "graft_shingle_hashes"))),
+      fn("graft_minhash_sketch", 1)(es => MinHashSketch(es(0))),
+      fn("graft_vec_dot", 2)(es => VecDot(es(0), es(1))),
+      fn("graft_array_agree_count", 2)(es => ArrayAgreeCount(es(0), es(1))),
+      fn("graft_sorted_intersect_count", 2)(es => SortedIntersectCount(es(0), es(1))),
+      fn("graft_feature_hash_vec", 2)(es =>
+        FeatureHashVec(es(0), intLit(es(1), "graft_feature_hash_vec"))),
+      fn("graft_simhash_bits", 2)(es =>
+        SimHashBits(es(0), intLit(es(1), "graft_simhash_bits"))),
+      fn("graft_shingle_windows", 2)(es =>
+        ShingleWindows(es(0), intLit(es(1), "graft_shingle_windows"))),
+      fn("graft_word_bigrams", 1)(es => WordBigrams(es(0))))
   }
+
+  /** Register the whole [[sqlFunctions]] tier on an EXISTING session
+    * (the spark.sql.extensions route only applies at session
+    * creation). */
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+    sqlFunctions.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
 }

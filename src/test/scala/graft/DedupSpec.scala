@@ -72,16 +72,17 @@ class DedupSpec extends SparkSpec {
     val want = (0L until (n - 1).toLong).map(i => (i, i + 1)).toSet
     assert(pairs == want,
       s"chain shape broken: extra=${(pairs -- want).take(5)} missing=${(want -- pairs).take(5)}")
-    val groups = Dedup.nearDupGroups(spark, docs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (labels, iterations) =
+      Dedup.nearDupGroupsCounted(spark, docs, Config.K, Config.Threshold, maxIter = 40)
+    val groups = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(groups.size == n && groups.values.forall(_ == 0L),
       s"the whole chain must collapse to group 0: ${groups.toSeq.sortBy(_._1).take(6)}...")
     // pin the O(log diameter) claim itself, not just the result:
     // measured 8 rounds on the 41-hop path (~log2 + detection);
     // 12 allows jitter while still failing any O(diameter) regression
     // (plain propagation needs 42)
-    assert(Dedup.lastGroupIterations <= 12,
-      s"pointer jumping regressed: ${Dedup.lastGroupIterations} iterations on a 41-hop path")
+    assert(iterations <= 12,
+      s"pointer jumping regressed: $iterations iterations on a 41-hop path")
   }
 
   test("group keep-best: exactly one survivor per component — its richest member") {

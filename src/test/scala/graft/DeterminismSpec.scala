@@ -26,11 +26,8 @@ class DeterminismSpec extends SparkSpec {
 
   private def run(name: String, parts: Int): Seq[String] = {
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-      val rows = SparkEntry.queries(name)(spark, Sf0001).collect()
-      Caches.releaseAll(spark)
-      rows.map(_.toString).sorted.toSeq
-    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try Harness.run(spark, name, Sf0001)(_.collect()).map(_.toString).sorted.toSeq
+    finally spark.conf.set("spark.sql.shuffle.partitions", "4")
   }
 
   test("FP-sensitive queries are bit-identical at 3 vs 17 shuffle partitions") {

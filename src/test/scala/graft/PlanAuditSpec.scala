@@ -97,10 +97,9 @@ class PlanAuditSpec extends SparkSpec {
   private lazy val digests: Seq[(String, Digest)] = {
     graft.streaming.StreamingQueries.resetFeedDirs()
     val batch = PlanCapture.withCapture {
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val plan = fn(spark, Sf0001).queryExecution.executedPlan.toString
-        Caches.releaseAll(spark)
-        name -> digestOf(plan)
+      Harness.select(None).map { name =>
+        name -> Harness.run(spark, name, Sf0001)(df =>
+          digestOf(df.queryExecution.executedPlan.toString))
       }
     }
     val streamed = PlanCapture.capturedPlans.toSeq

@@ -32,9 +32,8 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("graft_polyhash is callable from SQL once registered") {
-    // (the extensions config route only applies at session creation;
-    // the shared test session already exists, so use the registry)
-    org.apache.spark.sql.graft.Bridge.registerPolyHash(spark)
+    // the shared test session is a Harness session: GraftExtensions
+    // registered the function tier at its creation
     val v = spark.sql("SELECT graft_polyhash('abc ') AS h").collect().head.getLong(0)
     val model = "abc ".foldLeft(0L)((a, c) => (a * 31 + c.toInt) % Config.P)
     assert(v == model)
@@ -46,10 +45,8 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("the full expression tier works end-to-end from SQL") {
-    // builder-with-extensions would return the existing shared session
-    // (and stopping it would kill the context for every other suite) —
-    // register on the live session, the same surface GraftExtensions
-    // injects at real session creation (Verify/Bench use that route)
+    // re-registered on the live session: the surface signaturesSql
+    // installs, which replaces the one GraftExtensions injected
     org.apache.spark.sql.graft.Bridge.registerAll(spark)
     locally {
       val r = spark.sql(
@@ -77,5 +74,15 @@ class PolyHashSpec extends SparkSpec {
       assert(r.getSeq[String](r.fieldIndex("sw")) == Seq("abc", "bcd", "cd ", "d "))
       assert(r.getSeq[String](r.fieldIndex("wb")) == Seq("a b", "b c"))
     }
+  }
+
+  test("a graft_* function called with the wrong arity names itself and its arity") {
+    // registerAll replaces the injected builders of the same names, so
+    // the arity check must survive it
+    org.apache.spark.sql.graft.Bridge.registerAll(spark)
+    val e = intercept[Exception](
+      spark.sql("SELECT graft_shingle_hashes('abc') AS sh").collect())
+    assert(e.getMessage.contains("graft_shingle_hashes expects 2 arguments, got 1"),
+      e.getMessage)
   }
 }
