@@ -81,8 +81,9 @@ object Bench {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
       val sfOk = sfDir.forall { want =>
-        """"sf"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt)
-          .exists(_.group(1) == want)
+        // the artifact holds the path as an escaped JSON literal
+        """"sf"\s*:\s*("(?:[^"\\]|\\.)*")""".r.findFirstMatchIn(txt)
+          .exists(_.group(1) == jsonStr(want))
       }
       if (!sfOk) Map.empty
       else """"queries"\s*:\s*\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
@@ -135,6 +136,19 @@ object Bench {
     }
   }
 
+  /** `s` as a JSON string literal: backslash, quote and ALL control
+    * chars (< 0x20) escaped — a path, query name or SQL text holding
+    * one would otherwise make the driver's JSON parse fail. */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** The stdout-budgeted summary line. `reps_in` must name the ACTUAL
     * per-rep record file (SPARK_GRAFT_BENCH_OUT when set) — a reader
     * following the pointer from a captured tail has to land on the
@@ -148,7 +162,7 @@ object Bench {
                                  retried: Int = 0): String = {
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qsKept = kept.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
+    val qsKept = kept.map { case (k, v) => jsonStr(k) + ":" + fmt(v) }
       .mkString("{", ",", "}")
     val canaryPart =
       if (canary.isEmpty) ""
@@ -156,7 +170,7 @@ object Bench {
         val ts = canary.map(_._2)
         s""","canary_min":${fmt(ts.min)},"canary_max":${fmt(ts.max)},"retried":$retried"""
       }
-    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsKept,"queries_total":$totalQueries,"queries_omitted":${totalQueries - kept.size},"sf":"$sfDir","reps_in":"$outFile"$canaryPart}"""
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsKept,"queries_total":$totalQueries,"queries_omitted":${totalQueries - kept.size},"sf":${jsonStr(sfDir)},"reps_in":${jsonStr(outFile)}$canaryPart}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -244,19 +258,19 @@ object Bench {
     // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v.map(_._1).min) }
+    val qs = results.map { case (k, v) => jsonStr(k) + ":" + fmt(v.map(_._1).min) }
       .mkString("{", ",", "}")
     // raw per-rep times (run order): lets a reader separate noise from a
     // real regression without re-running — headline stays min-of-reps
     val repsJson = results.map { case (k, v) =>
-      s"\"" + k + "\":" + v.map(t => fmt(t._1)).mkString("[", ",", "]")
+      jsonStr(k) + ":" + v.map(t => fmt(t._1)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // resource counters of the MIN-TIME rep (the one the headline
     // reports): shuffle volume + spill pressure + per-task peak memory
     def mb(bytes: Long): String = fmt(bytes / (1024.0 * 1024.0))
     val metricsJson = results.map { case (k, v) =>
       val m = v.minBy(_._1)._2
-      s"\"" + k + "\":" +
+      jsonStr(k) + ":" +
         s"""{"shuffle_mb":${mb(m.shuffleWriteBytes)},"spill_mb":${mb(m.spillBytes)},"peak_task_mem_mb":${mb(m.peakTaskMemBytes)},"bcast_after_mb":${mb(m.bcastAfterBytes)}}"""
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2.map(_._1).min).sum else 0.0
@@ -264,9 +278,9 @@ object Bench {
     // reader aligns contention windows with the queries they hit
     val canaryJson = canarySamples
       .map { case (n, t) => s"[$n,${fmt(t)}]" }.mkString("[", ",", "]")
-    val retriedJson = retriedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val retriedJson = retriedNames.map(jsonStr).mkString("[", ",", "]")
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"reps":$repsJson,"metrics":$metricsJson,"canary":$canaryJson,"retried":$retriedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"reps":$repsJson,"metrics":$metricsJson,"canary":$canaryJson,"retried":$retriedJson,"sf":${jsonStr(sfDir)}}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $outFile: ${e.getMessage}") }

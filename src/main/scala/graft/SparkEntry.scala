@@ -35,7 +35,9 @@ object SparkEntry {
     "minhash_signatures" -> ((s, d) => MinHashLsh.signatures(docs(s, d))),
     "group_sketch" -> ((s, d) => MinHashLsh.groupSketch(docs(s, d))),
     "sql_signatures" -> ((s, d) => MinHashLsh.signaturesSql(docs(s, d))),
-    "lsh_bands" -> ((s, d) => MinHashLsh.bands(docs(s, d))),
+    // the packed band key rendered as its decimal CSV at this one edge
+    "lsh_bands" -> ((s, d) => MinHashLsh.bands(docs(s, d)).withColumn("band_key",
+      MinHashLsh.bandKeyCsv(org.apache.spark.sql.functions.col("band_key")))),
     "candidate_pairs" -> ((s, d) => MinHashLsh.candidatePairs(docs(s, d))),
     // scale posture: the degenerate-bucket guard ON (cap chosen so it
     // genuinely drops buckets at sf0.01 — max bucket there is 58)

@@ -57,7 +57,9 @@ object IncrementalIngest {
   /** One ingest round, pure batch-to-batch (the foreachBatch body,
     * factored for testability): returns the batch docs that survive
     * near-dup filtering against the corpus AND against earlier-id
-    * batch members. */
+    * batch members. `corpusBands` must carry the packed binary
+    * band_key of MinHashLsh.bands; an index written with the older
+    * CSV key fails instead of silently matching nothing. */
   def filterBatch(batch: DataFrame, corpusBands: DataFrame, corpusTexts: DataFrame,
                   k: Int = Config.K,
                   threshold: Double = Config.Threshold): DataFrame = {
@@ -155,17 +157,8 @@ object IncrementalIngest {
         case e: org.apache.spark.sql.AnalysisException
             if e.getCondition == "PATH_NOT_FOUND" => empty
       }
-    val emptyBands = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("band",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("band_key",
-          org.apache.spark.sql.types.StringType))))
     val corpusTexts = readOr(corpusDir, batch.limit(0))
-    val corpusBands = readOr(indexDir, emptyBands)
+    val corpusBands = readOr(indexDir, MinHashLsh.bands(batch.limit(0), k))
     // the batch's bands feed the probe AND are the index rows of the
     // docs it keeps: banded once, never re-sketched for the write
     val nb = MinHashLsh.bands(batch, k).graftCheckpoint()

@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.Caches.CheckpointSyntax
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 import graft.Config
 import graft.functions.PortableHash
 
@@ -21,9 +22,12 @@ import graft.functions.PortableHash
   *     (narrow, no shuffle) → explode bands (narrow) → ONE shuffle
   *     for the band self-join → distinct. Compare: the reference
   *     materializes 3 CSV file pipes between jobs.
-  *   - Inside the self-join the signature and band key travel packed
-  *     (4 bytes per component, see bandsCarryingSig); the public
-  *     `signatures`/`bands` schemas keep their long/CSV forms.
+  *   - Every band key is the band's 24-byte slice of the packed
+  *     signature (4 bytes per component, see [[bands]]): one explode
+  *     builds every band row and one self-join ([[bandPairs]]) joins
+  *     them. Only the `lsh_bands` query renders the key as the
+  *     decimal CSV ([[bandKeyCsv]]); the public `signatures` schema
+  *     keeps its long columns.
   *   - Band index IS part of the bucket key (fixes SURVEY.md Q5).
   *   - Verification = exact shingle-set Jaccard between the two pair
   *     members (fixes Q1/Q9), threshold on similarity.
@@ -39,40 +43,41 @@ import graft.functions.PortableHash
 object MinHashLsh {
 
   /** Corpus-payload join sides may be left to the planner's broadcast
-    * choice only while the SOURCE parquet stays under this many bytes
-    * (default 2 MB). Rationale (r13 mid-scale diagnosis + guide §3.1):
-    * the frames these joins carry are corpus-DERIVED payloads — the
-    * shingle-hash sets (~8 B per input char), the exploded band+sig
-    * frame (~10 bands x 264 B of packed sig+key per doc), the raw
-    * texts — whose in-memory size is up to ~32-64x the compressed
-    * parquet bytes, while Catalyst's size estimate descends from the
-    * parquet scan and stays under the broadcast threshold long after
-    * the real relation is GBs (at 250k docs the statically-planned
-    * broadcast collected GBs through one driver thread while 31
-    * executors idled). 2 MB
-    * source x 32x expansion ≈ the session's 64 MB broadcast threshold:
-    * below it the planner's broadcast pick is provably safe (sf0.1 is
-    * 0.58 MB — broadcast measured 0.3-1.8 s faster per query there);
-    * above it the side is pinned sort-merge regardless of estimates.
-    * Deployment knob: GRAFT_BCAST_CORPUS_MAX_KB. */
-  private val BoundedCorpusSourceBytes: Long =
-    Config.envBytes("GRAFT_BCAST_CORPUS_MAX_KB", 1024L, "KB", 2L * 1024 * 1024)
+    * choice only while the SOURCE parquet stays under the session's
+    * broadcast threshold divided by this factor. Rationale (r13
+    * mid-scale diagnosis + guide §3.1): the frames these joins carry
+    * are corpus-DERIVED payloads — the shingle-hash sets (~8 B per
+    * input char), the exploded band+sig frame (~10 bands x 264 B of
+    * packed sig+key per doc), the raw texts — whose in-memory size is
+    * up to ~32-64x the compressed parquet bytes, while Catalyst's size
+    * estimate descends from the parquet scan and stays under the
+    * broadcast threshold long after the real relation is GBs (at 250k
+    * docs the statically-planned broadcast collected GBs through one
+    * driver thread while 31 executors idled). Below the cut the
+    * planner's broadcast pick is provably safe (the 64 MB threshold
+    * gives a 2 MiB cut; sf0.1 is 0.58 MB — broadcast measured
+    * 0.3-1.8 s faster per query there); above it the side is pinned
+    * sort-merge regardless of estimates. */
+  private val PayloadExpansion = 32
 
-  /** TRUE iff `docs` reads from source files totalling at most
-    * [[BoundedCorpusSourceBytes]] — a driver metadata probe (no job).
-    * A non-file input (in-memory test frame, a stream) can't prove a
-    * bound, so it gets the conservative answer. */
-  private[operators] def corpusIsBounded(docs: DataFrame): Boolean = {
+  /** TRUE iff `docs` reads from source files totalling at most the
+    * session's broadcast threshold / [[PayloadExpansion]] — a driver
+    * metadata probe (no job). Broadcast switched off (threshold <= 0)
+    * bounds nothing. A non-file input (in-memory test frame, a stream)
+    * can't prove a bound, so it gets the conservative answer. */
+  private[graft] def corpusIsBounded(docs: DataFrame): Boolean = {
+    val cut = docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold /
+      PayloadExpansion
     val files = docs.inputFiles
-    files.nonEmpty && {
+    cut > 0 && files.nonEmpty && {
       val conf = docs.sparkSession.sessionState.newHadoopConf()
       var total = 0L
       val it = files.iterator
-      while (it.hasNext && total <= BoundedCorpusSourceBytes) {
+      while (it.hasNext && total <= cut) {
         val p = new org.apache.hadoop.fs.Path(it.next())
         total += p.getFileSystem(conf).getFileStatus(p).getLen
       }
-      total <= BoundedCorpusSourceBytes
+      total <= cut
     }
   }
 
@@ -84,7 +89,7 @@ object MinHashLsh {
 
   /** The whole-row minhash sketch of a text column (fused native
     * expression, MinHashSketchExpression.scala). */
-  private def sketchCol(text: org.apache.spark.sql.Column, k: Int) = {
+  private def sketchCol(text: Column, k: Int) = {
     import org.apache.spark.sql.graft.{Bridge, MinHashSketch}
     Bridge.column(MinHashSketch(
       Bridge.expression(Shingling.shingleHashArray(text, k))))
@@ -167,48 +172,93 @@ object MinHashLsh {
             FROM graft_documents_v WHERE length(text) >= 1)""")
   }
 
-  /** (doc_id, band, band_key) — band_key is the CSV of the band's r
-    * signature values; (band, band_key) is the LSH bucket key. */
+  /** (doc_id, band, band_key): the LSH band rows; (band, band_key) is
+    * the bucket key. `band_key` is the band's 4·r-byte slice of the
+    * packed signature — 24 bytes where the decimal CSV of the same
+    * components was ~65, equally injective. [[bandKeyCsv]] renders the
+    * CSV for output. */
   def bands(docs: DataFrame, k: Int = Config.K): DataFrame =
-    bandsFromSignatures(signatures(docs, k))
+    explodeBands(packedSketches(docs, k))
 
-  /** Per-ROW signature + hash set + band keys, via array expressions
-    * only — no aggregation, no shuffle. Semantically identical to
-    * the groupBy formulation (min over the same affine hashes) but
-    * streaming-compatible: a document is one row, so Structured
-    * Streaming can band it statelessly before a single stateful
-    * operator. Batch callers prefer [[signatures]] (codegen'd hash
-    * agg); this trades that for zero stateful ops. */
+  /** Per-ROW band rows plus each doc's SORTED distinct shingle-hash
+    * set: (doc_id, band, band_key, hset), projections and an explode
+    * only — no aggregation, no shuffle — so Structured Streaming can
+    * band a document statelessly before a single stateful operator. */
   def rowwiseBands(docs: DataFrame, k: Int = Config.K): DataFrame = {
     // SORTED set: the streaming consumer stores hset in per-bucket
     // state and verifies arrivals with a primitive merge-walk
     // intersect — sorting once here (per doc) beats sorting per
     // (doc, band) member downstream. Set semantics are unchanged.
     val harr = array_sort(array_distinct(Shingling.shingleHashArray(col("text"), k)))
-    val sigArr = sketchCol(col("text"), k)
-    val r = Config.RowsPerBand
-    val bandStructs = (0 until Config.Bands).map { j =>
-      struct(lit(j).as("band"),
-        array_join(transform(slice(col("sig"), j * r + 1, r), x => x.cast("string")), ",")
-          .as("band_key"))
-    }
-    docs.filter(length(col("text")) >= 1)
-      .select(col("doc_id"), harr.as("hset"), sigArr.as("sig")) // both need `text` in scope
-      .select(col("doc_id"), col("hset"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.band_key").as("band_key"),
-        col("doc_id"), col("hset"))
+    explodeBands(packedSketches(docs, k, harr.as("hset")), carry = Seq("hset"))
   }
 
-  /** Banding from a precomputed signature frame (lets one query
-    * materialize signatures once and derive everything from it). */
-  def bandsFromSignatures(sigs: DataFrame): DataFrame = {
-    val r = Config.RowsPerBand
-    val bandStructs = (0 until Config.Bands).map { j =>
-      val cols = (j * r until (j + 1) * r).map(i => col(Config.sigCol(i)).cast("string"))
-      struct(lit(j).as("band"), concat_ws(",", cols: _*).as("band_key"))
+  /** (doc_id, sig, extra…) for the docs with text: `sig` is the sketch
+    * packed into 4-byte big-endian words (PortableHash.packInts; every
+    * component is < 2^31) — 240 B per doc where the long columns are
+    * 480 B. */
+  private def packedSketches(docs: DataFrame, k: Int,
+                             extra: Column*): DataFrame =
+    docs.filter(length(col("text")) >= 1) // the extra columns need `text` in scope
+      .select(col("doc_id") +: PortableHash.packInts(sketchCol(col("text"), k)).as("sig") +:
+        extra: _*)
+
+  /** The one band explode: each [[packedSketches]] row becomes `bands`
+    * rows (doc_id, band, band_key, carry…). The LSH chain carries `sig`
+    * itself, so self-join consumers read both members' signatures from
+    * the join output and never join back against a signature table (at
+    * 100 TB a second corpus-wide shuffle). perfbench dedup_batch (20k
+    * docs, 4-core box): ~264 B per band row against ~560 B for the long
+    * array plus a CSV key; 22.2 MB into the band exchange, not 36.2. */
+  private def explodeBands(packed: DataFrame, carry: Seq[String] = Nil,
+                           bands: Int = Config.Bands,
+                           rowsPerBand: Int = Config.RowsPerBand): DataFrame = {
+    require(bands * rowsPerBand <= Config.NumHashes,
+      s"operating point $bands x $rowsPerBand exceeds ${Config.NumHashes} hashes")
+    val w = 4 * rowsPerBand
+    val bandStructs = (0 until bands).map { j =>
+      struct(lit(j).as("band"), substring(col("sig"), j * w + 1, w).as("band_key"))
     }
-    sigs.select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
+    val kept = carry.map(col)
+    packed.select(col("doc_id") +: kept :+ explode(array(bandStructs: _*)).as("bk"): _*)
+      .select(Seq(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key")) ++
+        kept: _*)
+  }
+
+  /** A packed `band_key` rendered as the decimal CSV of its 4-byte
+    * words ("v1,v2,…,vr") — the form `lsh_bands` outputs. Built-ins
+    * only: each word's hex read back in base 10. */
+  def bandKeyCsv(key: Column): Column =
+    concat_ws(",", (0 until Config.RowsPerBand).map(i =>
+      conv(hex(substring(key, 4 * i + 1, 4)), 16, 10)): _*)
+
+  /** The one band self-join: pairs of `left` and `right` band rows
+    * (doc_id, band, band_key, payload…) sharing a bucket and meeting
+    * `idCond` and `residual`, both over the renamed columns: doc_id →
+    * id_l/id_r, payload p → p_l/p_r, right keys → band_r/band_key_r.
+    * Distinct names keep the equi-keys unambiguous at construction (a
+    * same-name self-join condition WARNs on every run). The residual
+    * runs inside the join, so the raw pair stream never materializes;
+    * `pinMerge` pins sort-merge (see [[payloadSide]]). A band index
+    * written with the older CSV key would match nothing, so a
+    * non-binary band_key fails here. */
+  private def bandPairs(left: DataFrame, right: DataFrame, idCond: Column,
+                        residual: Column = lit(true),
+                        pinMerge: Boolean = false): DataFrame = {
+    def side(df: DataFrame, keySuffix: String, suffix: String): DataFrame = {
+      val keyType = df.schema("band_key").dataType
+      require(keyType == BinaryType,
+        s"band_key must be the packed binary key of MinHashLsh.bands, got " +
+          s"${keyType.simpleString}: rebuild a band index written by an older build")
+      val payload = df.columns.filterNot(Set("doc_id", "band", "band_key"))
+      val s = df.select(Seq(col("band").as("band" + keySuffix),
+        col("band_key").as("band_key" + keySuffix), col("doc_id").as("id" + suffix)) ++
+        payload.map(p => col(p).as(p + suffix)): _*)
+      if (pinMerge) s.hint("merge") else s
+    }
+    side(left, "", "_l").join(side(right, "_r", "_r"),
+      col("band") === col("band_r") && col("band_key") === col("band_key_r") &&
+        idCond && residual)
   }
 
   /** Distinct candidate pairs (id_l < id_r) from the band self-join.
@@ -229,10 +279,7 @@ object MinHashLsh {
           .select("doc_id", "band", "band_key")
       case None => b
     }
-    val l = bounded.select(col("band"), col("band_key"), col("doc_id").as("id_l"))
-    val r = bounded.select(col("band"), col("band_key"), col("doc_id").as("id_r"))
-    l.join(r, Seq("band", "band_key"))
-      .filter(col("id_l") < col("id_r"))
+    bandPairs(bounded, bounded, col("id_l") < col("id_r"))
       .select("id_l", "id_r")
       .distinct()
   }
@@ -246,10 +293,7 @@ object MinHashLsh {
     * candidatePairs — the DISTINCT just becomes a count aggregate. */
   def collisionCounts(docs: DataFrame, k: Int = Config.K): DataFrame = {
     val b = bands(docs, k)
-    val l = b.select(col("band"), col("band_key"), col("doc_id").as("id_l"))
-    val r = b.select(col("band"), col("band_key"), col("doc_id").as("id_r"))
-    l.join(r, Seq("band", "band_key"))
-      .filter(col("id_l") < col("id_r"))
+    bandPairs(b, b, col("id_l") < col("id_r"))
       .groupBy("id_l", "id_r")
       .agg(count(lit(1)).as("n_collisions"))
   }
@@ -264,7 +308,9 @@ object MinHashLsh {
     * batch-sized, not corpus-sized. Output: canonical distinct
     * (id_l < id_r) pairs with at least one batch member. Semantics
     * equal filtering the full-corpus candidatePairs to pairs
-    * touching the batch (the oracle replays it that way). */
+    * touching the batch (the oracle replays it that way). An index
+    * whose band_key is not the packed binary key fails (see
+    * [[bandPairs]]). */
   def incrementalCandidates(corpusBands: DataFrame, newDocs: DataFrame,
                             k: Int = Config.K,
                             mergeHint: Boolean = false): DataFrame =
@@ -279,57 +325,12 @@ object MinHashLsh {
     // mergeHint pins sort-merge for a BUCKETED corpusBands (sources
     // .BandIndex): without it Catalyst broadcasts the small side at
     // test scale and the layout's zero-exchange property is invisible
-    val corpusSide = {
-      val c = corpusBands.select(col("band"), col("band_key"), col("doc_id").as("id_a"))
-      if (mergeHint) c.hint("merge") else c
-    }
-    val cross = corpusSide
-      .join(nb.select(col("band"), col("band_key"), col("doc_id").as("id_b")),
-        Seq("band", "band_key"))
-      .filter(col("id_a") =!= col("id_b"))
-      .select(least(col("id_a"), col("id_b")).as("id_l"),
-        greatest(col("id_a"), col("id_b")).as("id_r"))
-    val within = nb.select(col("band"), col("band_key"), col("doc_id").as("id_l"))
-      .join(nb.select(col("band"), col("band_key"), col("doc_id").as("id_r")),
-        Seq("band", "band_key"))
-      .filter(col("id_l") < col("id_r"))
-      .select("id_l", "id_r")
+    val cross = bandPairs(corpusBands.select("doc_id", "band", "band_key"), nb,
+        col("id_l") =!= col("id_r"), pinMerge = mergeHint)
+      .select(least(col("id_l"), col("id_r")).as("id_l"),
+        greatest(col("id_l"), col("id_r")).as("id_r"))
+    val within = bandPairs(nb, nb, col("id_l") < col("id_r")).select("id_l", "id_r")
     cross.union(within).distinct()
-  }
-
-  /** (doc_id, sig): the LSH chain's internal signature form — the S
-    * components packed losslessly into one binary of 4-byte words
-    * (PortableHash.packInts; every component is < 2^31, and packing
-    * throws rather than narrow anything else). 240 B per doc where
-    * the long columns are 480 B. */
-  private def packedSignatures(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"), PortableHash.packInts(
-      array((0 until Config.NumHashes).map(i => col(Config.sigCol(i))): _*)).as("sig"))
-
-  /** (doc_id, sig, band, band_key): the band explode of a
-    * [[packedSignatures]] frame with the whole packed signature
-    * carried through, so self-join consumers get both members'
-    * signatures directly from the join output and never join back
-    * against a signature table (which at 100 TB would be a second
-    * corpus-wide shuffle). `band_key` is the band's 24-byte slice of
-    * `sig`: ~264 B of payload per band row, where the 60-long array
-    * plus the decimal CSV key was ~560 B. Measured on perfbench
-    * dedup_batch (20k docs, 200k band rows, 4-core box): the stage
-    * feeding the band exchange writes 22.2 MB instead of 36.2 MB, and
-    * a whole similarPairs op 25.6 MB instead of 39.6 MB. Bucket
-    * equality is unchanged — both key forms are injective in the
-    * band's components. */
-  private def bandsCarryingSig(packed: DataFrame,
-                               bands: Int = Config.Bands,
-                               rowsPerBand: Int = Config.RowsPerBand): DataFrame = {
-    require(bands * rowsPerBand <= Config.NumHashes,
-      s"operating point $bands x $rowsPerBand exceeds ${Config.NumHashes} hashes")
-    val w = 4 * rowsPerBand
-    val bandStructs = (0 until bands).map { j =>
-      struct(lit(j).as("band"), substring(col("sig"), j * w + 1, w).as("band_key"))
-    }
-    packed.select(col("doc_id"), col("sig"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("sig"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
 
   /** Candidates verified with EXACT shingle-hash-set Jaccard >=
@@ -395,23 +396,12 @@ object MinHashLsh {
     // extra plan context around the chain defeats exchange reuse and
     // the sketch ran twice — measured +0.8 s per composite query
     // without this checkpoint.
-    val base = packedSignatures(signatures(docs, k)).graftCheckpoint()
-    // the packed sig rides the band explode (bandsCarryingSig) so the
-    // agreement prefilter is a join-residual condition — no joins
-    // against the multi-million-pair stream at all, and no DISTINCT
-    // until the prefiltered survivors
-    val bandsWithSig = bandsCarryingSig(base, bands, rowsPerBand)
-    // right side's key columns RENAMED (not disambiguated-by-dataset):
-    // same-name same-exprId keys in a self-join condition construct a
-    // trivially-true predicate first and rely on the analyzer's
-    // self-join disambiguation to re-point it — correct, but it WARNs
-    // on every run; distinct names make the equi-keys unambiguous at
-    // construction (identical physical plan)
-    val bl = bandsWithSig.select(col("band"), col("band_key"),
-      col("doc_id").as("id_l"), col("sig").as("sig_l"))
-    val br = bandsWithSig.select(col("band").as("band_r"),
-      col("band_key").as("band_key_r"),
-      col("doc_id").as("id_r"), col("sig").as("sig_r"))
+    val base = packedSketches(docs, k).graftCheckpoint()
+    // the packed sig rides the band explode so the agreement
+    // prefilter is a join-residual condition — no joins against the
+    // multi-million-pair stream at all, and no DISTINCT until the
+    // prefiltered survivors
+    val bandsWithSig = explodeBands(base, Seq("sig"), bands, rowsPerBand)
     // materialized: consumed twice below (survivor ids + verify join)
     // — without this the band self-join would execute per consumer.
     // scale-adaptive (r14): both sides carry the packed sig, so
@@ -421,11 +411,10 @@ object MinHashLsh {
     // collects the whole banded corpus through one driver thread.
     // Pinned sort-merge unless the corpus is provably bounded
     // (corpusIsBounded), where the planner's broadcast is safe+faster.
-    val prefiltered = payloadSide(bl, bounded).join(payloadSide(br, bounded),
-        col("band") === col("band_r") && col("band_key") === col("band_key_r") &&
-          col("id_l") < col("id_r") &&
-          PortableHash.agreeCount(col("sig_l"), col("sig_r")) >=
-            Config.estPrefilterMinCount(threshold))
+    val prefiltered = bandPairs(bandsWithSig, bandsWithSig, col("id_l") < col("id_r"),
+        residual = PortableHash.agreeCount(col("sig_l"), col("sig_r")) >=
+          Config.estPrefilterMinCount(threshold),
+        pinMerge = !bounded)
       .select("id_l", "id_r")
       .distinct()
       .graftCheckpoint()
@@ -476,22 +465,11 @@ object MinHashLsh {
     // joins of the naive plan (corpus-wide shuffles at 100 TB) are
     // gone. The estimate is deterministic per pair, so DISTINCT over
     // (id_l, id_r, est) equals dedup-then-estimate.
-    val b = bandsCarryingSig(packedSignatures(signatures(docs, k)))
-    val bl = b.select(col("band"), col("band_key"),
-      col("doc_id").as("id_l"), col("sig").as("sig_l"))
-    // renamed right-side keys: see prefilteredWithSets — avoids the
-    // trivially-true-predicate WARN of a same-name self-join condition
-    val br = b.select(col("band").as("band_r"),
-      col("band_key").as("band_key_r"),
-      col("doc_id").as("id_r"), col("sig").as("sig_r"))
+    val b = explodeBands(packedSketches(docs, k), Seq("sig"))
     val eq = PortableHash.agreeCount(col("sig_l"), col("sig_r"))
     // scale-adaptive: same corpus-payload self-join shape as
     // prefilteredWithSets (packed sigs on both sides)
-    val bounded = corpusIsBounded(docs)
-    payloadSide(bl, bounded).join(payloadSide(br, bounded),
-        col("band") === col("band_r") &&
-        col("band_key") === col("band_key_r") &&
-        col("id_l") < col("id_r"))
+    bandPairs(b, b, col("id_l") < col("id_r"), pinMerge = !corpusIsBounded(docs))
       .select(col("id_l"), col("id_r"),
         (eq.cast("double") / lit(Config.NumHashes)).as("est_jaccard"))
       .distinct()

@@ -375,7 +375,7 @@ object BandIndex {
     val table = liveTableFor(name)
     val tombDir = defaultSidecarDir(spark, name)
     val want =
-      s"bandfeed1:${Snapshots.fingerprint(spark, s"$dir/documents.parquet")}"
+      s"bandfeed2:${Snapshots.fingerprint(spark, s"$dir/documents.parquet")}"
     val marker = s"$tombDir._applied"
     val applied = Sidecars.readMarker(spark, marker).contains(want)
     if (!applied || !spark.catalog.tableExists(table)) {

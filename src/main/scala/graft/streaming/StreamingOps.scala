@@ -146,7 +146,7 @@ object StreamingOps {
       .select("doc_id", "ts_ts", "n_chars", "n_tokens")
   }
 
-  case class BandMember(band: Int, band_key: String, doc_id: Long, hset: Seq[Long])
+  case class BandMember(band: Int, band_key: Array[Byte], doc_id: Long, hset: Seq[Long])
   case class CandidatePair(id_l: Long, id_r: Long, jaccard: Double)
 
   /** Incremental near-duplicate detection over a document STREAM:
@@ -177,7 +177,10 @@ object StreamingOps {
     import graft.operators.MinHashLsh
     implicit val bmEnc = Encoders.product[BandMember]
     implicit val cpEnc = Encoders.product[CandidatePair]
-    implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.STRING)
+    // the bucket key is the packed band_key; groupByKey groups on the
+    // ENCODED key, so two equal byte arrays are one bucket (Array
+    // identity never decides it)
+    implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.BINARY)
     // state = sorted PRIMITIVE arrays, not Set[Long]: kryo writes a
     // long[] as a compact block (a boxed HashSet costs per-element
     // object headers on every store read/write, every micro-batch),
@@ -195,7 +198,7 @@ object StreamingOps {
       .groupByKey(m => (m.band, m.band_key))
       .flatMapGroupsWithState[List[(Long, Array[Long])], CandidatePair](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: (Int, String), rows: Iterator[BandMember], state: GroupState[List[(Long, Array[Long])]]) =>
+        (_: (Int, Array[Byte]), rows: Iterator[BandMember], state: GroupState[List[(Long, Array[Long])]]) =>
           var members = state.getOption.getOrElse(Nil)
           val out = scala.collection.mutable.ListBuffer.empty[CandidatePair]
           rows.toSeq.sortBy(_.doc_id).foreach { m =>

@@ -181,11 +181,16 @@ object Bridge {
       fn("graft_word_bigrams", 1)(es => WordBigrams(es(0))))
   }
 
-  /** Register the whole [[sqlFunctions]] tier on an EXISTING session
-    * (the spark.sql.extensions route only applies at session
-    * creation). */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+  /** Register the [[sqlFunctions]] tier on an EXISTING session (the
+    * spark.sql.extensions route only applies at session creation).
+    * Idempotent: a name the session's registry already holds — e.g.
+    * injected by GraftExtensions — keeps its builder. */
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     sqlFunctions.foreach { case (name, build) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "scala_udf")
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.createOrReplaceTempFunction(name, build, "scala_udf")
     }
+  }
 }

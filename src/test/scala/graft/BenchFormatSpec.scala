@@ -45,6 +45,21 @@ class BenchFormatSpec extends AnyFunSuite {
     java.nio.file.Files.delete(f)
   }
 
+  test("compact line and baseline guard survive a path holding a quote or a backslash") {
+    val sf = "/data/we\"ird\\sf\t0.1"
+    val out = "/tmp/o\"ut.json"
+    val line = Bench.compactLine(1.0, Seq("q" -> 1.0), 1, sf, out)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(node.get("sf").asText == sf && node.get("reps_in").asText == out)
+    assert(node.get("queries").get("q").asDouble == 1.0)
+    val f = java.nio.file.Files.createTempFile("bench_baseline", ".json")
+    java.nio.file.Files.writeString(f,
+      s"""{"queries":{"q":1.000},"sf":${Bench.jsonStr(sf)}}""")
+    assert(Bench.loadBaseline(f.toString, Some(sf)) == Map("q" -> 1.0))
+    assert(Bench.loadBaseline(f.toString, Some("/data/we")).isEmpty)
+    java.nio.file.Files.delete(f)
+  }
+
   test("outlier gate: 3x baseline AND non-trivial absolute excess") {
     assert(Bench.isOutlier(minSec = 4.0, baselineSec = 1.0))
     assert(!Bench.isOutlier(minSec = 2.9, baselineSec = 1.0))   // under 3x

@@ -52,7 +52,9 @@ class IncrementalIngestSpec extends SparkSpec {
     df.select("doc_id").collect().map(_.getLong(0)).toSet
 
   private def rowMultiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.select("doc_id", "band", "band_key").collect().map(_.toString).sorted.toSeq
+    // hex: Row.toString prints a byte array's identity, not its content
+    df.select(col("doc_id"), col("band"), hex(col("band_key")))
+      .collect().map(_.toString).sorted.toSeq
 
   test("ingestBatch indexes exactly the bands of the docs it keeps") {
     val dir = Files.createTempDirectory("graft-ingest-index").toString
@@ -162,8 +164,12 @@ class IncrementalIngestSpec extends SparkSpec {
     IncrementalIngest.ingestBatch(batchDf(10L -> a, 11L -> c), 1L,
       s"$dir/crash/corpus", s"$dir/crash/index") // the replay
     // bit-identical stores vs the clean run
+    // byte arrays as hex: Row.toString prints an array's identity
     def dump(path: String): Seq[String] =
-      s.read.parquet(path).collect().map(_.toString).sorted.toSeq
+      s.read.parquet(path).collect().map(_.toSeq.map {
+        case k: Array[Byte] => k.map("%02x".format(_)).mkString
+        case v => v
+      }.mkString(",")).sorted.toSeq
     assert(dump(s"$dir/crash/corpus") == dump(s"$dir/ref/corpus"))
     assert(dump(s"$dir/crash/index") == dump(s"$dir/ref/index"))
   }

@@ -131,11 +131,79 @@ class MinHashLshSpec extends SparkSpec {
   }
 
   test("rowwise (streaming) bands equal the aggregated formulation") {
-    val agg = MinHashLsh.bands(nearDup).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val row = MinHashLsh.rowwiseBands(nearDup).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).map(t => (t._3, t._1, t._2)).toSet
-    assert(row == agg)
+    def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("band"),
+        r.getAs[Array[Byte]]("band_key").toSeq)).toSet
+    val agg = keyed(MinHashLsh.bands(nearDup))
+    assert(agg.nonEmpty && agg.forall(_._3.length == 4 * Config.RowsPerBand))
+    assert(keyed(MinHashLsh.rowwiseBands(nearDup)) == agg)
+  }
+
+  test("lsh_bands renders each packed key as the decimal CSV of its band's signatures") {
+    val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
+    val r = Config.RowsPerBand
+    val sigs = MinHashLsh.signatures(docs)
+    val reference = sigs.select(col("doc_id"), explode(array((0 until Config.Bands).map { j =>
+      struct(lit(j).as("band"),
+        concat_ws(",", (j * r until (j + 1) * r).map(i => col(Config.sigCol(i)).cast("string")): _*)
+          .as("band_key"))
+    }: _*)).as("bk")).select(col("doc_id"), col("bk.band"), col("bk.band_key"))
+    val rendered = SparkEntry.queries("lsh_bands")(spark, Sf0001)
+    assert(rendered.schema("band_key").dataType == org.apache.spark.sql.types.StringType)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(x => (x.getLong(0), x.getInt(1), x.getString(2))).toSet
+    val want = rows(reference)
+    assert(want.size == sigs.count() * Config.Bands && rows(rendered) == want)
+    // a literal key at the edges of the 31-bit component range
+    val words = Seq(0L, 1L, 2147483646L, 7L, 1L << 24, 255L).take(r)
+    val key = words.flatMap(v => Seq(v >>> 24, v >>> 16, v >>> 8, v).map(_.toByte)).toArray
+    val s = spark
+    import s.implicits._
+    val csv = Seq(key).toDF("band_key").select(MinHashLsh.bandKeyCsv(col("band_key"))).head().getString(0)
+    assert(csv == words.mkString(","))
+  }
+
+  test("a band index with a CSV (string) band_key fails naming band_key, not zero candidates") {
+    val corpus = nearDup.filter(col("doc_id") < 3)
+    val batch = nearDup.filter(col("doc_id") >= 3)
+    val stale = MinHashLsh.bands(corpus).withColumn("band_key", MinHashLsh.bandKeyCsv(col("band_key")))
+    val e1 = intercept[IllegalArgumentException](MinHashLsh.incrementalCandidates(stale, batch))
+    assert(e1.getMessage.contains("band_key"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      graft.operators.IncrementalIngest.filterBatch(batch, stale, corpus).collect())
+    assert(e2.getMessage.contains("band_key"), e2.getMessage)
+  }
+
+  test("bounded-corpus cut is the broadcast threshold / 32; broadcast off bounds nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bounded").toString + "/docs"
+    // ~1 MB of incompressible text: under the 2 MiB cut of the 64 MB threshold
+    spark.range(0, 2600, 1, 1).select(col("id").as("doc_id"),
+        concat((0 until 6).map(i => sha2(concat(col("id").cast("string"), lit(s"#$i")), 256)): _*)
+          .as("text"))
+      .write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val bytes = docs.inputFiles.map(f => new java.io.File(new java.net.URI(f)).length).sum
+    assert(bytes > 512L * 1024 && bytes < 2L * 1024 * 1024, s"$bytes bytes")
+    assert(MinHashLsh.corpusIsBounded(docs))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      assert(!MinHashLsh.corpusIsBounded(docs))
+      spark.conf.set(key, (bytes * 32 - 32).toString)
+      assert(!MinHashLsh.corpusIsBounded(docs))
+      spark.conf.set(key, (bytes * 32).toString)
+      assert(MinHashLsh.corpusIsBounded(docs))
+    } finally spark.conf.set(key, old)
+  }
+
+  test("signaturesSql leaves the session's injected graft_* builders in place") {
+    val registry = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash_sketch")
+    val before = registry.lookupFunctionBuilder(id)
+    assert(before.isDefined)
+    MinHashLsh.signaturesSql(nearDup).collect()
+    assert(registry.lookupFunctionBuilder(id).exists(_ eq before.get))
   }
 
   test("reference-corpus parity: the two golden clusters, both directions, nothing else") {

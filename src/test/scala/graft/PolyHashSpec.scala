@@ -45,8 +45,8 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("the full expression tier works end-to-end from SQL") {
-    // re-registered on the live session: the surface signaturesSql
-    // installs, which replaces the one GraftExtensions injected
+    // registerAll on a live session (what signaturesSql calls): it
+    // keeps the builders GraftExtensions injected and adds none twice
     org.apache.spark.sql.graft.Bridge.registerAll(spark)
     locally {
       val r = spark.sql(
@@ -77,8 +77,8 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("a graft_* function called with the wrong arity names itself and its arity") {
-    // registerAll replaces the injected builders of the same names, so
-    // the arity check must survive it
+    // the arity check holds after registerAll, whichever builder the
+    // session keeps
     org.apache.spark.sql.graft.Bridge.registerAll(spark)
     val e = intercept[Exception](
       spark.sql("SELECT graft_shingle_hashes('abc') AS sh").collect())

@@ -17,7 +17,7 @@ cd "$(dirname "$0")/.."
 TAG=${1:?usage: bench_isolated.sh <tag> [runs] [sfdir]}
 RUNS=${2:-4}
 SF=${3:-/root/testdata/sf0.1}
-CPUS=${SPARK_GRAFT_CPUS:-32}
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}  # the box it runs on
 REPS=${SPARK_GRAFT_REPS:-2}
 
 sbt -batch compile > /dev/null
