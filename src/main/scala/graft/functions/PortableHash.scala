@@ -48,6 +48,20 @@ object PortableHash {
     Bridge.column(ArrayAgreeCount(Bridge.expression(a), Bridge.expression(b)))
   }
 
+  /** Equal-byte count of two equal-length binaries — the agreement of
+    * two [[lowBytes]] fingerprints (see ByteAgreeCount). Fails loudly
+    * on a length mismatch. */
+  def agreeBytes(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graft.{Bridge, ByteAgreeCount}
+    Bridge.column(ByteAgreeCount(Bridge.expression(a), Bridge.expression(b)))
+  }
+
+  /** The fingerprint of a packed signature ([[packInts]] of S
+    * components): the low (last, big-endian) byte of each 4-byte word,
+    * S bytes. Two equal words give equal fingerprint bytes. */
+  def lowBytes(packed: Column): Column =
+    concat((0 until Config.NumHashes).map(i => substring(packed, 4 * i + 4, 1)): _*)
+
   /** |A∩B| of two sorted distinct long-array columns (fused
     * two-pointer merge; see SortedIntersectCountExpression). */
   def sortedIntersectCount(a: Column, b: Column): Column = {

@@ -32,8 +32,8 @@ import graft.functions.PortableHash
   *   - Verification = exact shingle-set Jaccard between the two pair
   *     members (fixes Q1/Q9), threshold on similarity.
   *
-  * Scale notes (100 TB): the signature agg is a standard partial/final
-  * hash aggregate on doc_id (combiner-style map-side mins). Skewed
+  * Scale notes (100 TB): the signature is a narrow per-row sketch
+  * (see [[signatures]]; no shuffle, no per-doc state). Skewed
   * LSH buckets (a band value shared by millions of docs) would make
   * the self-join quadratic — `candidatePairs(maxBucket=...)` caps
   * bucket size (drops degenerate buckets like stop-shingle clusters,
@@ -47,8 +47,9 @@ object MinHashLsh {
     * broadcast threshold divided by this factor. Rationale (r13
     * mid-scale diagnosis + guide §3.1): the frames these joins carry
     * are corpus-DERIVED payloads — the shingle-hash sets (~8 B per
-    * input char), the exploded band+sig frame (~10 bands x 264 B of
-    * packed sig+key per doc), the raw texts — whose in-memory size is
+    * input char), the exploded band frame (~10 bands x 84 B of
+    * fingerprint+key per doc in similarPairs, x 264 B of packed sig+key
+    * in estimatedPairs), the raw texts — whose in-memory size is
     * up to ~32-64x the compressed parquet bytes, while Catalyst's size
     * estimate descends from the parquet scan and stays under the
     * broadcast threshold long after the real relation is GBs (at 250k
@@ -161,15 +162,13 @@ object MinHashLsh {
     * SQL-addressable and this query is oracle-checked to be
     * indistinguishable from the DataFrame form. */
   def signaturesSql(docs: DataFrame, k: Int = Config.K): DataFrame = {
-    val spark = docs.sparkSession
-    org.apache.spark.sql.graft.Bridge.registerAll(spark)
-    docs.createOrReplaceTempView("graft_documents_v")
-    val sigSelects = (0 until Config.NumHashes)
-      .map(i => s"element_at(sk, ${i + 1}) AS ${Config.sigCol(i)}").mkString(", ")
-    spark.sql(
-      s"""SELECT doc_id, $sigSelects FROM (
-            SELECT doc_id, graft_minhash_sketch(graft_shingle_hashes(text, $k)) AS sk
-            FROM graft_documents_v WHERE length(text) >= 1)""")
+    org.apache.spark.sql.graft.Bridge.registerAll(docs.sparkSession)
+    // SQL expressions over `docs` itself: no session temp view to
+    // clobber a caller's or to race another thread's
+    docs.filter("length(text) >= 1")
+      .selectExpr("doc_id", s"graft_minhash_sketch(graft_shingle_hashes(text, $k)) AS sk")
+      .selectExpr("doc_id" +: (0 until Config.NumHashes)
+        .map(i => s"element_at(sk, ${i + 1}) AS ${Config.sigCol(i)}"): _*)
   }
 
   /** (doc_id, band, band_key): the LSH band rows; (band, band_key) is
@@ -204,12 +203,14 @@ object MinHashLsh {
         extra: _*)
 
   /** The one band explode: each [[packedSketches]] row becomes `bands`
-    * rows (doc_id, band, band_key, carry…). The LSH chain carries `sig`
-    * itself, so self-join consumers read both members' signatures from
-    * the join output and never join back against a signature table (at
-    * 100 TB a second corpus-wide shuffle). perfbench dedup_batch (20k
-    * docs, 4-core box): ~264 B per band row against ~560 B for the long
-    * array plus a CSV key; 22.2 MB into the band exchange, not 36.2. */
+    * rows (doc_id, band, band_key, carry…). A self-join consumer that
+    * needs both members' sketches in its residual or projection carries
+    * them here, so it never joins back against a signature table (at
+    * 100 TB a second corpus-wide shuffle): similarPairs carries the
+    * 60-byte fingerprint (~84 B per band row), estimatedPairs the
+    * 240-byte signature (~264 B). perfbench dedup_batch seed 1 (20k
+    * docs, 4-core box): 10.5 MB into the band exchange with the
+    * fingerprint, 17.0 MB with the signature. */
   private def explodeBands(packed: DataFrame, carry: Seq[String] = Nil,
                            bands: Int = Config.Bands,
                            rowsPerBand: Int = Config.RowsPerBand): DataFrame = {
@@ -336,12 +337,16 @@ object MinHashLsh {
   /** Candidates verified with EXACT shingle-hash-set Jaccard >=
     * threshold, after a cheap sketch pre-filter: pairs must agree on
     * >= Config.estPrefilterMinCount(threshold) of the S signature
-    * components before the set-intersection join runs (36 at the
-    * default t=0.8). At sf0.1 this cuts the verify join from ~1M
-    * candidate pairs to a few thousand. (bands, rowsPerBand) pick the
-    * LSH operating point over the same S hashes — the default
-    * (10, 6) targets t=0.8; lower thresholds want more, shorter
-    * bands (e.g. (30, 2) for t≈0.3-0.5) or band recall collapses.
+    * components before the set-intersection runs (36 at the default
+    * t=0.8). The band join checks that bound on the 60-byte
+    * fingerprints (a superset: byte agreement >= word agreement), and
+    * the verify join checks it exactly on the signatures, so the pair
+    * set equals the word-count prefilter's. At sf0.1 this cuts the
+    * verify join from ~1M candidate pairs to a few thousand.
+    * (bands, rowsPerBand) pick the LSH operating point over the same
+    * S hashes — the default (10, 6) targets t=0.8; lower thresholds
+    * want more, shorter bands (e.g. (30, 2) for t≈0.3-0.5) or band
+    * recall collapses.
     * Output: id_l, id_r, jaccard. */
   def similarPairs(docs: DataFrame, k: Int = Config.K,
                    threshold: Double = Config.Threshold,
@@ -366,17 +371,21 @@ object MinHashLsh {
     prefiltered
       .join(payloadSide(sets.as("l"), bounded), col("id_l") === col("l.doc_id"))
       .join(payloadSide(sets.as("r"), bounded), col("id_r") === col("r.doc_id"))
+      // the exact word-agreement prefilter; the band join's
+      // fingerprint count is only an upper bound of it
+      .filter(PortableHash.agreeCount(col("l.sig"), col("r.sig")) >=
+        Config.estPrefilterMinCount(threshold))
       .withColumn("jaccard", jac)
       .filter(col("jaccard") >= threshold)
       .select(col("id_l"), col("id_r"), col("jaccard"))
   }
 
-  /** Verify-stage feed for [[similarPairs]]: the sketch-prefiltered
-    * candidate pair list plus the sorted shingle-hash sets of ONLY
-    * the surviving docs. (Containment deliberately does NOT share
-    * these candidates — band recall is Jaccard-shaped and would miss
-    * high-containment/low-Jaccard pairs; see
-    * CorpusStats.containmentPairs' prefix filter.) */
+  /** Verify-stage feed for [[similarPairs]]: the fingerprint-prefiltered
+    * candidate pair list plus the packed signatures and sorted
+    * shingle-hash sets of ONLY the surviving docs. (Containment
+    * deliberately does NOT share these candidates — band recall is
+    * Jaccard-shaped and would miss high-containment/low-Jaccard pairs;
+    * see CorpusStats.containmentPairs' prefix filter.) */
   private def prefilteredWithSets(docs: DataFrame, k: Int,
                                   threshold: Double = Config.Threshold,
                                   bands: Int = Config.Bands,
@@ -397,35 +406,40 @@ object MinHashLsh {
     // the sketch ran twice — measured +0.8 s per composite query
     // without this checkpoint.
     val base = packedSketches(docs, k).graftCheckpoint()
-    // the packed sig rides the band explode so the agreement
-    // prefilter is a join-residual condition — no joins against the
-    // multi-million-pair stream at all, and no DISTINCT until the
-    // prefiltered survivors
-    val bandsWithSig = explodeBands(base, Seq("sig"), bands, rowsPerBand)
+    // the 60-byte fingerprint (the low byte of each signature word)
+    // rides the band explode so the agreement prefilter is a
+    // join-residual condition — no joins against the multi-million-pair
+    // stream at all, and no DISTINCT until the prefiltered survivors.
+    // Byte agreement is never below word agreement, so this keeps every
+    // pair the word count would; verify re-checks the words exactly.
+    // The 240-byte sig is read to cut the band keys but does not ride.
+    val bandsWithFp = explodeBands(
+      base.withColumn("fp", PortableHash.lowBytes(col("sig"))), Seq("fp"), bands, rowsPerBand)
     // materialized: consumed twice below (survivor ids + verify join)
     // — without this the band self-join would execute per consumer.
-    // scale-adaptive (r14): both sides carry the packed sig, so
+    // scale-adaptive (r14): both sides carry the fingerprint, so
     // the exploded frame is GBs at mid-scale while its estimate (from
     // the compressed parquet scan under the checkpoint) stays under
     // the broadcast threshold — a statically-planned broadcast here
     // collects the whole banded corpus through one driver thread.
     // Pinned sort-merge unless the corpus is provably bounded
     // (corpusIsBounded), where the planner's broadcast is safe+faster.
-    val prefiltered = bandPairs(bandsWithSig, bandsWithSig, col("id_l") < col("id_r"),
-        residual = PortableHash.agreeCount(col("sig_l"), col("sig_r")) >=
+    val prefiltered = bandPairs(bandsWithFp, bandsWithFp, col("id_l") < col("id_r"),
+        residual = PortableHash.agreeBytes(col("fp_l"), col("fp_r")) >=
           Config.estPrefilterMinCount(threshold),
         pinMerge = !bounded)
       .select("id_l", "id_r")
       .distinct()
       .graftCheckpoint()
-    // hash sets ONLY for surviving docs: broadcast-semi-join the tiny
-    // survivor id list against the corpus, then the narrow per-row
-    // set projection runs on that sliver
+    // hash sets and signatures ONLY for surviving docs:
+    // broadcast-semi-join the tiny survivor id list against the corpus,
+    // then the narrow per-row projection runs on that sliver
     val ids = prefiltered.select(col("id_l").as("doc_id"))
       .union(prefiltered.select(col("id_r").as("doc_id"))).distinct()
     val hset = array_sort(array_distinct(Shingling.shingleHashArray(col("text"), k)))
     val sets = docs.join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), hset.as("hset"))
+      .select(col("doc_id"), hset.as("hset"),
+        PortableHash.packInts(sketchCol(col("text"), k)).as("sig"))
     (prefiltered, sets)
   }
 
@@ -468,7 +482,7 @@ object MinHashLsh {
     val b = explodeBands(packedSketches(docs, k), Seq("sig"))
     val eq = PortableHash.agreeCount(col("sig_l"), col("sig_r"))
     // scale-adaptive: same corpus-payload self-join shape as
-    // prefilteredWithSets (packed sigs on both sides)
+    // prefilteredWithSets (here the packed sigs ride on both sides)
     bandPairs(b, b, col("id_l") < col("id_r"), pinMerge = !corpusIsBounded(docs))
       .select(col("id_l"), col("id_r"),
         (eq.cast("double") / lit(Config.NumHashes)).as("est_jaccard"))

@@ -16,10 +16,12 @@ import org.apache.spark.unsafe.Platform
   *
   * Why custom: the built-ins form
   * `size(filter(zip_with(a, b, _ === _), identity))` is three nested
-  * interpreted HOFs allocating two intermediate arrays per pair; it
-  * runs on EVERY candidate pair (~1M at sf0.1) as the sketch
-  * pre-filter gating exact verification. This is one fused loop,
-  * codegen-friendly via a static call. */
+  * interpreted HOFs allocating two intermediate arrays per pair. This
+  * is one fused loop, codegen-friendly via a static call. In
+  * MinHashLsh.similarPairs the word count runs only in the verify
+  * join, on the pairs that passed the band join's [[ByteAgreeCount]]
+  * residual (a few thousand at sf0.1); estimatedPairs runs it on
+  * every band-join pair. */
 case class ArrayAgreeCount(left: Expression, right: Expression)
   extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[AbstractDataType] =
@@ -56,6 +58,33 @@ case class ArrayAgreeCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Number of byte positions where two equal-length binaries hold the
+  * same byte: the agreement count of two minhash FINGERPRINTS (the
+  * low byte of each packed signature word, b-bit minwise hashing with
+  * b = 8). Equal words have equal low bytes, so on fingerprints this
+  * count is never below [[ArrayAgreeCount]]'s word count on the
+  * signatures: `>= m` keeps every pair the word count keeps. The
+  * width is fixed at one byte by the function, never inferred from
+  * the length (a 60-byte fingerprint is also a 15-word packed
+  * binary). */
+case class ByteAgreeCount(left: Expression, right: Expression)
+  extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_byte_agree_count"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    ArrayAgreeCountUtil.countBytes(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"org.apache.spark.sql.graft.ArrayAgreeCountUtil.countBytes($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): ByteAgreeCount =
+    copy(left = newLeft, right = newRight)
+}
+
 object ArrayAgreeCountUtil {
   /** Signatures are fixed-size (S components); a length mismatch is a
     * pipeline bug — fail loudly rather than truncate (which would also
@@ -88,6 +117,21 @@ object ArrayAgreeCountUtil {
     while (o < end) {
       if (Platform.getInt(a, o) == Platform.getInt(b, o)) c += 1
       o += 4
+    }
+    c
+  }
+
+  /** Equal bytes, under the same fail-loud length rule. */
+  def countBytes(a: Array[Byte], b: Array[Byte]): Int = {
+    if (a.length != b.length) {
+      throw new IllegalArgumentException(
+        s"graft_byte_agree_count: length mismatch (${a.length} vs ${b.length} bytes)")
+    }
+    var c = 0
+    var i = 0
+    while (i < a.length) {
+      if (a(i) == b(i)) c += 1
+      i += 1
     }
     c
   }

@@ -206,6 +206,51 @@ class MinHashLshSpec extends SparkSpec {
     assert(registry.lookupFunctionBuilder(id).exists(_ eq before.get))
   }
 
+  test("signaturesSql creates no temp view and leaves a caller's graft_documents_v alone") {
+    val mine = docsDf(7L -> "the caller's own view of the same name")
+    mine.createOrReplaceTempView("graft_documents_v")
+    try {
+      val views = spark.catalog.listTables().collect().map(_.name).toSet
+      assert(MinHashLsh.signaturesSql(nearDup).count() == 4)
+      assert(spark.catalog.listTables().collect().map(_.name).toSet == views)
+      assert(spark.table("graft_documents_v").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toSeq ==
+        Seq(7L -> "the caller's own view of the same name"))
+    } finally spark.catalog.dropTempView("graft_documents_v")
+  }
+
+  test("similarPairs' band sort-merge join ships fingerprints, never the signature") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // an in-memory frame is not a bounded corpus: the band join is
+    // pinned sort-merge, so both sides cross an exchange
+    assert(!MinHashLsh.corpusIsBounded(nearDup))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(MinHashLsh.similarPairs(nearDup).collect().nonEmpty)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val bandJoins = plans.asScala.toSeq.flatMap(p => helper.collect(p) {
+      case j: SortMergeJoinExec if j.leftKeys.exists(_.references.exists(_.name == "band")) => j
+    })
+    assert(bandJoins.nonEmpty, plans.asScala.mkString("\n"))
+    bandJoins.foreach { j =>
+      val cols = j.children.flatMap(_.output.map(_.name))
+      assert(cols.contains("fp_l") && cols.contains("fp_r"), cols)
+      assert(!cols.exists(_.startsWith("sig")), cols)
+    }
+  }
+
   test("reference-corpus parity: the two golden clusters, both directions, nothing else") {
     // The reference's ONLY committed semantic expectation: its 5-doc
     // corpus (src/main/resources/documents.txt:1-5) must yield the

@@ -111,6 +111,68 @@ class PortableHashSpec extends SparkSpec {
     }
   }
 
+  test("fingerprint byte agreement is never below word agreement, boundary values included") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(13)
+    // small values and 0 / P-1 force word agreements; 256-strides force
+    // low-byte agreements between unequal words
+    def comp(): Long = rnd.nextInt(5) match {
+      case 0 => 0L
+      case 1 => Config.P - 1
+      case 2 => rnd.nextInt(3).toLong
+      case 3 => 255L + 256L * rnd.nextInt(4)
+      case _ => (rnd.nextDouble() * Config.P).toLong
+    }
+    val rows = Seq.fill(300)((Seq.fill(Config.NumHashes)(comp()), Seq.fill(Config.NumHashes)(comp())))
+    val (pa, pb) = (PortableHash.packInts(col("a")), PortableHash.packInts(col("b")))
+    val out = rows.toDF("a", "b").select(
+      PortableHash.agreeBytes(PortableHash.lowBytes(pa), PortableHash.lowBytes(pb)),
+      PortableHash.agreeCount(pa, pb),
+      PortableHash.lowBytes(pa))
+      .collect()
+    var byteOnly = 0
+    rows.zip(out).foreach { case ((a, b), r) =>
+      val bytes = a.zip(b).count { case (x, y) => (x & 0xff) == (y & 0xff) }
+      val words = a.zip(b).count { case (x, y) => x == y }
+      assert(r.getInt(0) == bytes && r.getInt(1) == words && bytes >= words)
+      if (bytes > words) byteOnly += 1
+      assert(r.getAs[Array[Byte]](2).toSeq == a.map(_.toByte))
+    }
+    assert(byteOnly > 0, "no pair agrees on more bytes than words")
+  }
+
+  test("fingerprints of words that differ only above the low byte agree fully, words not at all") {
+    val s = spark
+    import s.implicits._
+    // word i: low byte i, upper bytes 1 on one side and 0x7fffff (the
+    // top of the 31-bit range) on the other
+    val a = (0 until Config.NumHashes).map(i => 256L + i)
+    val b = (0 until Config.NumHashes).map(i => 0x7fffffL * 256 + i)
+    assert(a.zip(b).forall { case (x, y) => x != y && (x & 0xff) == (y & 0xff) })
+    assert(b.forall(_ < Config.P))
+    val (pa, pb) = (PortableHash.packInts(col("a")), PortableHash.packInts(col("b")))
+    val r = Seq((a, b)).toDF("a", "b").select(
+      PortableHash.agreeBytes(PortableHash.lowBytes(pa), PortableHash.lowBytes(pb)),
+      PortableHash.agreeCount(pa, pb)).head()
+    assert(r.getInt(0) == Config.NumHashes && r.getInt(1) == 0)
+  }
+
+  test("byte agreement rejects length mismatches loudly, the full signature included") {
+    val s = spark
+    import s.implicits._
+    val df = Seq(Seq.tabulate(Config.NumHashes)(_.toLong)).toDF("a")
+    val fa = PortableHash.lowBytes(PortableHash.packInts(col("a")))
+    for (other <- Seq(substring(fa, 2, Config.NumHashes), PortableHash.packInts(col("a")))) {
+      val e = intercept[Exception](df.select(PortableHash.agreeBytes(fa, other)).collect())
+      assert(messages(e).contains("graft_byte_agree_count: length mismatch"), messages(e))
+    }
+    // bytes, never long arrays
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(PortableHash.agreeBytes(col("a"), col("a"))).collect()
+    }
+  }
+
   test("packing throws on any component outside [0, Int.MaxValue]") {
     val s = spark
     import s.implicits._
