@@ -62,8 +62,9 @@ object PortableHash {
   def lowBytes(packed: Column): Column =
     concat((0 until Config.NumHashes).map(i => substring(packed, 4 * i + 4, 1)): _*)
 
-  /** |A∩B| of two sorted distinct long-array columns (fused
-    * two-pointer merge; see SortedIntersectCountExpression). */
+  /** |A∩B| of two sorted distinct long-array columns, or of two
+    * int-array columns (fused two-pointer merge; see
+    * SortedIntersectCountExpression). */
   def sortedIntersectCount(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.{Bridge, SortedIntersectCount}
     Bridge.column(SortedIntersectCount(Bridge.expression(a), Bridge.expression(b)))

@@ -25,7 +25,11 @@ import graft.functions.PortableHash
   *   - Every band key is the band's 24-byte slice of the packed
   *     signature (4 bytes per component, see [[bands]]): one explode
   *     builds every band row and one self-join ([[bandPairs]]) joins
-  *     them. Only the `lsh_bands` query renders the key as the
+  *     them on (band, key). similarPairs' prefilter joins on an
+  *     8-byte hash of (band, key) instead ([[bucketPairs]]) and its
+  *     verify drops hash collisions with an exact whole-band test on
+  *     the signatures ([[sharesBand]]), so its pairs are the exact
+  *     join's. Only the `lsh_bands` query renders the key as the
   *     decimal CSV ([[bandKeyCsv]]); the public `signatures` schema
   *     keeps its long columns.
   *   - Band index IS part of the bucket key (fixes SURVEY.md Q5).
@@ -46,11 +50,11 @@ object MinHashLsh {
     * choice only while the SOURCE parquet stays under the session's
     * broadcast threshold divided by this factor. Rationale (r13
     * mid-scale diagnosis + guide §3.1): the frames these joins carry
-    * are corpus-DERIVED payloads — the shingle-hash sets (~8 B per
-    * input char), the exploded band frame (~10 bands x 84 B of
-    * fingerprint+key per doc in similarPairs, x 264 B of packed sig+key
-    * in estimatedPairs), the raw texts — whose in-memory size is
-    * up to ~32-64x the compressed parquet bytes, while Catalyst's size
+    * are corpus-DERIVED payloads — the shingle-hash sets (4-8 B per
+    * input char), the exploded band frame (~10 bands x 76 B of
+    * fingerprint+bucket+id per doc in similarPairs, x 264 B of packed
+    * sig+key in estimatedPairs), the raw texts — whose in-memory
+    * size is up to ~32-64x the compressed parquet bytes, while Catalyst's size
     * estimate descends from the parquet scan and stays under the
     * broadcast threshold long after the real relation is GBs (at 250k
     * docs the statically-planned broadcast collected GBs through one
@@ -207,10 +211,11 @@ object MinHashLsh {
     * needs both members' sketches in its residual or projection carries
     * them here, so it never joins back against a signature table (at
     * 100 TB a second corpus-wide shuffle): similarPairs carries the
-    * 60-byte fingerprint (~84 B per band row), estimatedPairs the
-    * 240-byte signature (~264 B). perfbench dedup_batch seed 1 (20k
-    * docs, 4-core box): 10.5 MB into the band exchange with the
-    * fingerprint, 17.0 MB with the signature. */
+    * 60-byte fingerprint keyed on the 8-byte bucket ([[bucketPairs]];
+    * ~76 B per band row with the doc_id), estimatedPairs the 240-byte
+    * signature keyed on (band, band_key) (~264 B). perfbench
+    * dedup_batch seed 1 (20k docs, 4-core box): 7.1 MB into
+    * similarPairs' band exchange, 17.0 MB into estimatedPairs'. */
   private def explodeBands(packed: DataFrame, carry: Seq[String] = Nil,
                            bands: Int = Config.Bands,
                            rowsPerBand: Int = Config.RowsPerBand): DataFrame = {
@@ -234,32 +239,67 @@ object MinHashLsh {
       conv(hex(substring(key, 4 * i + 1, 4)), 16, 10)): _*)
 
   /** The one band self-join: pairs of `left` and `right` band rows
-    * (doc_id, band, band_key, payload…) sharing a bucket and meeting
-    * `idCond` and `residual`, both over the renamed columns: doc_id →
-    * id_l/id_r, payload p → p_l/p_r, right keys → band_r/band_key_r.
-    * Distinct names keep the equi-keys unambiguous at construction (a
-    * same-name self-join condition WARNs on every run). The residual
-    * runs inside the join, so the raw pair stream never materializes;
-    * `pinMerge` pins sort-merge (see [[payloadSide]]). A band index
-    * written with the older CSV key would match nothing, so a
-    * non-binary band_key fails here. */
+    * (doc_id, keys…, payload…) sharing `keys` — (band, band_key), or
+    * [[bucketPairs]]' one bucket — and meeting `idCond` and `residual`,
+    * both over the renamed columns: doc_id → id_l/id_r, payload p →
+    * p_l/p_r, right key k → k_r. Distinct names keep the equi-keys
+    * unambiguous at construction (a same-name self-join condition
+    * WARNs on every run). The residual runs inside the join, so the
+    * raw pair stream never materializes; `pinMerge` pins sort-merge
+    * (see [[payloadSide]]). */
   private def bandPairs(left: DataFrame, right: DataFrame, idCond: Column,
                         residual: Column = lit(true),
-                        pinMerge: Boolean = false): DataFrame = {
+                        pinMerge: Boolean = false,
+                        keys: Seq[String] = Seq("band", "band_key")): DataFrame = {
     def side(df: DataFrame, keySuffix: String, suffix: String): DataFrame = {
-      val keyType = df.schema("band_key").dataType
-      require(keyType == BinaryType,
-        s"band_key must be the packed binary key of MinHashLsh.bands, got " +
-          s"${keyType.simpleString}: rebuild a band index written by an older build")
-      val payload = df.columns.filterNot(Set("doc_id", "band", "band_key"))
-      val s = df.select(Seq(col("band").as("band" + keySuffix),
-        col("band_key").as("band_key" + keySuffix), col("doc_id").as("id" + suffix)) ++
-        payload.map(p => col(p).as(p + suffix)): _*)
+      val payload = df.columns.filterNot(keys.toSet + "doc_id")
+      val s = df.select(keys.map(k => col(k).as(k + keySuffix)) ++
+        (col("doc_id").as("id" + suffix) +: payload.map(p => col(p).as(p + suffix))): _*)
       if (pinMerge) s.hint("merge") else s
     }
     side(left, "", "_l").join(side(right, "_r", "_r"),
-      col("band") === col("band_r") && col("band_key") === col("band_key_r") &&
-        idCond && residual)
+      keys.map(k => col(k) === col(k + "_r")).reduce(_ && _) && idCond && residual)
+  }
+
+  /** similarPairs' prefilter self-join: [[explodeBands]] rows re-keyed
+    * on ONE 8-byte `bucket` = xxhash64(band, band_key) and joined with
+    * themselves (id_l < id_r) under `residual`. Equal (band, band_key)
+    * give equal buckets, so every band-sharing pair is produced; a hash
+    * collision can only ADD a pair, and the verify removes those with
+    * the exact [[sharesBand]] test on the signatures it holds anyway —
+    * the output is the exact band join's, by construction. The 24-byte
+    * key and the band number stay off the wire, and the join sorts one
+    * long key (a full sort prefix) instead of (band, 24-byte binary).
+    * The other band joins key on (band, band_key): the public band
+    * form (bands, candidatePairs, collisionCounts, the band indexes)
+    * has no signature to re-check against, and estimatedPairs would
+    * pay the band test on every pair to save ~4% of its bytes. */
+  private def bucketPairs(b: DataFrame, residual: Column, pinMerge: Boolean): DataFrame = {
+    val keyed = b.select(col("doc_id") +: xxhash64(col("band"), col("band_key")).as("bucket") +:
+      b.columns.filterNot(Set("doc_id", "band", "band_key")).map(col): _*)
+    bandPairs(keyed, keyed, col("id_l") < col("id_r"), residual, pinMerge, keys = Seq("bucket"))
+  }
+
+  /** A band index written with the older CSV key would match nothing,
+    * so a band frame handed in by a caller must carry the packed
+    * binary band_key. */
+  private def requirePackedKey(b: DataFrame): DataFrame = {
+    val keyType = b.schema("band_key").dataType
+    require(keyType == BinaryType,
+      s"band_key must be the packed binary key of MinHashLsh.bands, got " +
+        s"${keyType.simpleString}: rebuild a band index written by an older build")
+    b
+  }
+
+  /** TRUE iff two packed signatures agree on at least one WHOLE band
+    * at the (bands, rowsPerBand) operating point — exactly the pairs
+    * the exact (band, band_key) join produces. Built-ins only: one
+    * slice equality per band. */
+  private[graft] def sharesBand(a: Column, b: Column, bands: Int = Config.Bands,
+                                rowsPerBand: Int = Config.RowsPerBand): Column = {
+    val w = 4 * rowsPerBand
+    (0 until bands).map(j => substring(a, j * w + 1, w) === substring(b, j * w + 1, w))
+      .reduce(_ || _)
   }
 
   /** Distinct candidate pairs (id_l < id_r) from the band self-join.
@@ -273,6 +313,7 @@ object MinHashLsh {
   /** [[candidatePairs]] over an already-banded frame. */
   def candidatesFromBands(b: DataFrame,
                           maxBucket: Option[Int] = None): DataFrame = {
+    requirePackedKey(b)
     val bounded = maxBucket match {
       case Some(m) =>
         val sizes = b.groupBy("band", "band_key").agg(count(lit(1)).as("bucket_n"))
@@ -310,8 +351,7 @@ object MinHashLsh {
     * (id_l < id_r) pairs with at least one batch member. Semantics
     * equal filtering the full-corpus candidatePairs to pairs
     * touching the batch (the oracle replays it that way). An index
-    * whose band_key is not the packed binary key fails (see
-    * [[bandPairs]]). */
+    * whose band_key is not the packed binary key fails. */
   def incrementalCandidates(corpusBands: DataFrame, newDocs: DataFrame,
                             k: Int = Config.K,
                             mergeHint: Boolean = false): DataFrame =
@@ -326,7 +366,7 @@ object MinHashLsh {
     // mergeHint pins sort-merge for a BUCKETED corpusBands (sources
     // .BandIndex): without it Catalyst broadcasts the small side at
     // test scale and the layout's zero-exchange property is invisible
-    val cross = bandPairs(corpusBands.select("doc_id", "band", "band_key"), nb,
+    val cross = bandPairs(requirePackedKey(corpusBands).select("doc_id", "band", "band_key"), nb,
         col("id_l") =!= col("id_r"), pinMerge = mergeHint)
       .select(least(col("id_l"), col("id_r")).as("id_l"),
         greatest(col("id_l"), col("id_r")).as("id_r"))
@@ -371,10 +411,12 @@ object MinHashLsh {
     prefiltered
       .join(payloadSide(sets.as("l"), bounded), col("id_l") === col("l.doc_id"))
       .join(payloadSide(sets.as("r"), bounded), col("id_r") === col("r.doc_id"))
-      // the exact word-agreement prefilter; the band join's
-      // fingerprint count is only an upper bound of it
-      .filter(PortableHash.agreeCount(col("l.sig"), col("r.sig")) >=
-        Config.estPrefilterMinCount(threshold))
+      // the exact band test (the band join matched on a bucket hash)
+      // and the exact word-agreement prefilter (its fingerprint count
+      // is only an upper bound of it)
+      .filter(sharesBand(col("l.sig"), col("r.sig"), bands, rowsPerBand) &&
+        PortableHash.agreeCount(col("l.sig"), col("r.sig")) >=
+          Config.estPrefilterMinCount(threshold))
       .withColumn("jaccard", jac)
       .filter(col("jaccard") >= threshold)
       .select(col("id_l"), col("id_r"), col("jaccard"))
@@ -424,8 +466,10 @@ object MinHashLsh {
     // collects the whole banded corpus through one driver thread.
     // Pinned sort-merge unless the corpus is provably bounded
     // (corpusIsBounded), where the planner's broadcast is safe+faster.
-    val prefiltered = bandPairs(bandsWithFp, bandsWithFp, col("id_l") < col("id_r"),
-        residual = PortableHash.agreeBytes(col("fp_l"), col("fp_r")) >=
+    // Keyed on the 8-byte bucket hash (see bucketPairs): a collision
+    // survivor is dropped by the verify's exact band test.
+    val prefiltered = bucketPairs(bandsWithFp,
+        PortableHash.agreeBytes(col("fp_l"), col("fp_r")) >=
           Config.estPrefilterMinCount(threshold),
         pinMerge = !bounded)
       .select("id_l", "id_r")
@@ -436,7 +480,15 @@ object MinHashLsh {
     // then the narrow per-row projection runs on that sliver
     val ids = prefiltered.select(col("id_l").as("doc_id"))
       .union(prefiltered.select(col("id_r").as("doc_id"))).distinct()
-    val hset = array_sort(array_distinct(Shingling.shingleHashArray(col("text"), k)))
+    // int sets: every shingle hash is below P = 2^31-1, so the cast is
+    // exact and keeps order and distinctness — half the bytes of the
+    // long set through the verify exchanges. sort_array is the
+    // codegen'd primitive sort; array_sort runs a comparator lambda
+    // (sets of all 20k perfbench dedup_batch docs, 4 local cores: 1.4
+    // s vs 3.9 s). Casting the sorted set, not the raw hash array,
+    // boxes fewer elements (1.4 s vs 2.2 s)
+    val hset = sort_array(array_distinct(Shingling.shingleHashArray(col("text"), k)))
+      .cast("array<int>")
     val sets = docs.join(broadcast(ids), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), hset.as("hset"),
         PortableHash.packInts(sketchCol(col("text"), k)).as("sig"))

@@ -5,8 +5,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType}
 
-/** |A ∩ B| of two SORTED distinct long arrays via a two-pointer
-  * merge — O(|A|+|B|) with zero allocation.
+/** |A ∩ B| of two SORTED distinct long arrays, or of two int arrays,
+  * via a two-pointer merge — O(|A|+|B|) with zero allocation. Any
+  * pair but two int arrays must be two long arrays: an int side next
+  * to a long one fails analysis, as in [[ArrayAgreeCount]].
   *
   * Why custom: exact-Jaccard verification runs
   * `size(array_intersect(a, b)) / size(array_union(a, b))` on every
@@ -24,17 +26,25 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Intege
 case class SortedIntersectCount(left: Expression, right: Expression)
   extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
+    Seq.fill(2)(ArrayType(if (ints) IntegerType else LongType))
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_sorted_intersect_count"
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectCountUtil.count(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  private def ints: Boolean = (left.dataType, right.dataType) match {
+    case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) => true
+    case _ => false
+  }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (ints) SortedIntersectCountUtil.countInts(x, y) else SortedIntersectCountUtil.count(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fn = if (ints) "countInts" else "count"
     defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graft.SortedIntersectCountUtil.count($a, $b)")
+      s"org.apache.spark.sql.graft.SortedIntersectCountUtil.$fn($a, $b)")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =
@@ -51,6 +61,23 @@ object SortedIntersectCountUtil {
     while (i < na && j < nb) {
       val x = a.getLong(i)
       val y = b.getLong(j)
+      if (x == y) { c += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    c
+  }
+
+  /** The same merge over two int arrays. */
+  def countInts(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    var c = 0
+    while (i < na && j < nb) {
+      val x = a.getInt(i)
+      val y = b.getInt(j)
       if (x == y) { c += 1; i += 1; j += 1 }
       else if (x < y) i += 1
       else j += 1

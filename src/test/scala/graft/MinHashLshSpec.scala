@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.PortableHash
 import graft.operators.{MinHashLsh, Shingling}
 
 class MinHashLshSpec extends SparkSpec {
@@ -240,14 +241,16 @@ class MinHashLshSpec extends SparkSpec {
       org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     val helper = new AdaptiveSparkPlanHelper {}
+    // the band join is keyed on the 8-byte bucket hash: neither the
+    // signature nor the 24-byte band key (nor `band`) crosses it
     val bandJoins = plans.asScala.toSeq.flatMap(p => helper.collect(p) {
-      case j: SortMergeJoinExec if j.leftKeys.exists(_.references.exists(_.name == "band")) => j
+      case j: SortMergeJoinExec if j.leftKeys.exists(_.references.exists(_.name == "bucket")) => j
     })
     assert(bandJoins.nonEmpty, plans.asScala.mkString("\n"))
     bandJoins.foreach { j =>
       val cols = j.children.flatMap(_.output.map(_.name))
       assert(cols.contains("fp_l") && cols.contains("fp_r"), cols)
-      assert(!cols.exists(_.startsWith("sig")), cols)
+      assert(!cols.exists(c => c.startsWith("sig") || c.startsWith("band")), cols)
     }
   }
 
@@ -302,10 +305,42 @@ class MinHashLshSpec extends SparkSpec {
     assert(pts == pts.sorted)
   }
 
+  test("sharesBand is the exact whole-band test on packed signatures") {
+    val s = spark
+    import s.implicits._
+    val base = (0 until Config.NumHashes).map(i => 1000L + i)
+    // 50 equal words, but every default band (6 words) has one unequal
+    // word: far over the prefilter's agreement, no shared band
+    val noBand = base.zipWithIndex.map { case (v, i) => if (i % 6 == 5) v + 7 else v }
+    // exactly one whole band (band 3, words 18..23) equal
+    val oneBand = base.zipWithIndex.map { case (v, i) => if (i / 6 == 3) v else v + 7 }
+    // at 30 x 2: only band 29 (words 58, 59) equal; at 10 x 6 that is
+    // two of band 9's six words
+    val lastPair = base.zipWithIndex.map { case (v, i) => if (i >= 58) v else v + 7 }
+    val out = Seq((base, noBand), (base, oneBand), (base, lastPair)).toDF("a", "b")
+      .select(PortableHash.packInts(col("a")).as("a"), PortableHash.packInts(col("b")).as("b"))
+      .select(
+        MinHashLsh.sharesBand(col("a"), col("b")),
+        MinHashLsh.sharesBand(col("a"), col("b"), 30, 2),
+        PortableHash.agreeCount(col("a"), col("b")))
+      .collect().map(r => (r.getBoolean(0), r.getBoolean(1), r.getInt(2))).toSeq
+    assert(noBand.zip(base).count { case (x, y) => x == y } >= Config.EstPrefilterMinCount)
+    assert(out == Seq(
+      (false, true, 50), // 30 x 2 has bands whose both words agree
+      (true, true, 6),
+      (false, true, 2)))
+    // at 30 x 2, one equal word per band is not a band
+    val oddWords = base.zipWithIndex.map { case (v, i) => if (i % 2 == 0) v else v + 7 }
+    assert(!Seq((base, oddWords)).toDF("a", "b")
+      .select(MinHashLsh.sharesBand(PortableHash.packInts(col("a")), PortableHash.packInts(col("b")),
+        30, 2)).head().getBoolean(0))
+  }
+
   test("packed chain equals the public long/CSV pieces on a duplicate flood") {
     // ~200 copies of one text put one mega-bucket in every band: the
     // packed band key and signature must decide exactly what the
-    // user-visible CSV candidates and long signatures decide
+    // user-visible CSV candidates and long signatures decide, at the
+    // default operating point and at 30 x 2
     val base = spark.read.parquet(s"$Sf0001/documents.parquet").select("doc_id", "text")
     val first = base.orderBy("doc_id").head()
     val maxId = base.agg(max("doc_id")).head().getLong(0)
@@ -317,16 +352,34 @@ class MinHashLshSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     val cand = MinHashLsh.candidatePairs(docs).collect().map(r => (r.getLong(0), r.getLong(1)))
     def agree(l: Long, r: Long) = sigs(l).zip(sigs(r)).count { case (x, y) => x == y }
-    val minAgree = Config.estPrefilterMinCount(Config.Threshold)
-    val expected = cand.filter { case (l, r) => agree(l, r) >= minAgree }.flatMap { case (l, r) =>
-      val inter = sets(l).intersect(sets(r)).size
-      val jac = inter.toDouble / (sets(l).size + sets(r).size - inter)
-      if (jac >= Config.Threshold) Some((l, r, jac)) else None
-    }.toSet
-    assert(expected.count { case (l, r, _) => l == first.getLong(0) || l > maxId } >= 200 * 201 / 2)
+    def expected(cand: Seq[(Long, Long)], threshold: Double) = {
+      val minAgree = Config.estPrefilterMinCount(threshold)
+      cand.filter { case (l, r) => agree(l, r) >= minAgree }.flatMap { case (l, r) =>
+        val inter = sets(l).intersect(sets(r)).size
+        val jac = inter.toDouble / (sets(l).size + sets(r).size - inter)
+        if (jac >= threshold) Some((l, r, jac)) else None
+      }.toSet
+    }
+    val want = expected(cand.toSeq, Config.Threshold)
+    assert(want.count { case (l, r, _) => l == first.getLong(0) || l > maxId } >= 200 * 201 / 2)
     val got = MinHashLsh.similarPairs(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(got.length == got.toSet.size && got.toSet == expected)
+    assert(got.length == got.toSet.size && got.toSet == want)
+
+    // 30 x 2: the candidates are the pairs equal on some whole pair of
+    // words, from the long signatures
+    val cand30 = sigs.toSeq.flatMap { case (id, sg) =>
+      (0 until 30).map(j => (j, sg.slice(2 * j, 2 * j + 2)) -> id)
+    }.groupBy(_._1).values.flatMap { m =>
+      val ids = m.map(_._2).sorted
+      for (l <- ids; r <- ids if l < r) yield (l, r)
+    }.toSeq.distinct
+    assert(cand30.length > cand.length)
+    val want30 = expected(cand30, 0.5)
+    assert(want30.size > want.size)
+    val got30 = MinHashLsh.similarPairs(docs, threshold = 0.5, bands = 30, rowsPerBand = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(got30.length == got30.toSet.size && got30.toSet == want30)
 
     val est = MinHashLsh.estimatedPairs(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))

@@ -96,6 +96,37 @@ class PortableHashSpec extends SparkSpec {
     }
   }
 
+  test("sorted intersect count on int sets equals the long count, boundary values included") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(17)
+    // a small pool forces overlaps; 0 and P-1 are the hash range's ends
+    def elem(): Long = rnd.nextInt(4) match {
+      case 0 => 0L
+      case 1 => Config.P - 1
+      case 2 => rnd.nextInt(40).toLong
+      case _ => (rnd.nextDouble() * Config.P).toLong
+    }
+    def set(): Seq[Long] = Seq.fill(rnd.nextInt(60))(elem()).distinct.sorted
+    val rows = Seq.fill(300)((set(), set()))
+    val df = rows.toDF("a", "b")
+    val (ia, ib) = (col("a").cast("array<int>"), col("b").cast("array<int>"))
+    val out = df.select(
+      PortableHash.sortedIntersectCount(ia, ib),
+      PortableHash.sortedIntersectCount(col("a"), col("b"))).collect()
+    var overlaps = 0
+    rows.zip(out).foreach { case ((a, b), r) =>
+      val model = a.intersect(b).size
+      assert(r.getInt(0) == model && r.getInt(1) == model)
+      if (model > 0) overlaps += 1
+    }
+    assert(overlaps > 100, s"$overlaps overlapping pairs")
+    // an int side never pairs with a long side
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(PortableHash.sortedIntersectCount(ia, col("b"))).collect()
+    }
+  }
+
   test("packed agree count rejects length mismatches loudly") {
     val s = spark
     import s.implicits._
