@@ -67,30 +67,24 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Per-query min-of-reps from a prior bench artifact (our own JSON,
-    * hand-parsed — no JSON dep in the build): the `"queries":{…}`
-    * object is scalar name→sec pairs. Missing/unreadable file, a file
-    * without the section, or — when `sfDir` is given — an artifact
-    * recorded at a DIFFERENT scale factor all yield an empty map
-    * (retry gate simply off): sf0.1 baselines against a 1M-doc scale
-    * corpus would flag every query an outlier and re-run the whole
-    * suite once for nothing. */
+  /** Per-query min-of-reps from a prior bench artifact: the numeric
+    * members of its `"queries"` object, name→sec. Missing/unreadable
+    * file, a file without the section, or — when `sfDir` is given — an
+    * artifact recorded at a DIFFERENT scale factor all yield an empty
+    * map (retry gate simply off): sf0.1 baselines against a 1M-doc
+    * scale corpus would flag every query an outlier and re-run the
+    * whole suite once for nothing. */
   private[graft] def loadBaseline(path: String,
                                   sfDir: Option[String] = None): Map[String, Double] =
     try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-      val sfOk = sfDir.forall { want =>
-        // the artifact holds the path as an escaped JSON literal
-        """"sf"\s*:\s*("(?:[^"\\]|\\.)*")""".r.findFirstMatchIn(txt)
-          .exists(_.group(1) == jsonStr(want))
-      }
+      import scala.jdk.CollectionConverters._
+      val root = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(path))
+      val sfOk = sfDir.forall(want =>
+        Option(root.get("sf")).exists(n => n.isTextual && n.asText == want))
       if (!sfOk) Map.empty
-      else """"queries"\s*:\s*\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-        """"([A-Za-z0-9_]+)"\s*:\s*(-?[0-9][0-9.eE+-]*)""".r
-          .findAllMatchIn(m.group(1))
-          .map(g => g.group(1) -> g.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
+      else Option(root.get("queries")).toSeq.flatMap(_.properties().asScala)
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
     } catch { case _: Throwable => Map.empty }
 
   /** Retry gate (r12 verdict): a query is an OUTLIER worth one extra

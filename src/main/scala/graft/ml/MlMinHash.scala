@@ -171,8 +171,8 @@ object MlMinHash {
     // sides' indices for every one of the ~1M candidates; the banded
     // admit rate is the documented pillar-B semantics, so the win is
     // per-pair cost). SparseVector.indices is strictly increasing, so
-    // the fused sorted-intersect runs codegen'd per pair; jaccard is
-    // the same inter/(|x|+|y|-inter) double.
+    // the fused sorted-intersect runs codegen'd per pair (the shingle
+    // verify's Jaccard column, over long index sets).
     val idxOf = udf { (v: Vector) =>
       v match {
         case s: SparseVector => s.indices.map(_.toLong)
@@ -181,15 +181,12 @@ object MlMinHash {
       }
     }
     val docIdx = vecs.select(col("doc_id"), idxOf(col("features")).as("ix"))
-    val inter = graft.functions.PortableHash
-      .sortedIntersectCount(col("ix_l"), col("ix_r"))
     l.join(r, Seq("band", "band_key"))
       .filter(col("id_l") < col("id_r"))
       .select("id_l", "id_r").distinct()
       .join(docIdx.select(col("doc_id").as("id_l"), col("ix").as("ix_l")), "id_l")
       .join(docIdx.select(col("doc_id").as("id_r"), col("ix").as("ix_r")), "id_r")
-      .withColumn("jaccard", inter.cast("double") /
-        (size(col("ix_l")) + size(col("ix_r")) - inter))
+      .withColumn("jaccard", graft.operators.Shingling.jaccard(col("ix_l"), col("ix_r")))
       .filter(col("jaccard") >= threshold)
       .select("id_l", "id_r", "jaccard")
   }

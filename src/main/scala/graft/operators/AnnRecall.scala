@@ -4,7 +4,6 @@ import graft.Caches.CheckpointSyntax
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.PortableHash
 
 /** Bit-checked QUALITY GATE for the approximate-NN family.
   *
@@ -219,17 +218,15 @@ object AnnRecall {
       val fMl = Future {
         val exactT = cachedExact("exact_jaccard", d500) {
           val sets = d500.select(col("doc_id"),
-            array_sort(array_distinct(Shingling.shingleHashArray(col("text")))).as("hset"))
+            Shingling.shingleHashSet(col("text")).as("hset"))
             .graftCheckpoint()
           val q = sets.filter(col("doc_id") % 100 === 0)
             .select(col("doc_id").as("query_id"), col("hset").as("q_set"))
-          val inter = PortableHash.sortedIntersectCount(col("q_set"), col("hset"))
-          val jac = inter.cast("double") /
-            (size(col("q_set")) + size(col("hset")) - inter)
           val w = Window.partitionBy("query_id")
             .orderBy(col("jaccard").desc, col("neighbor_id"))
           sets.join(broadcast(q), col("doc_id") =!= col("query_id"))
-            .select(col("query_id"), col("doc_id").as("neighbor_id"), jac.as("jaccard"))
+            .select(col("query_id"), col("doc_id").as("neighbor_id"),
+              Shingling.jaccard(col("q_set"), col("hset")).as("jaccard"))
             .withColumn("rank", row_number().over(w))
             .filter(col("rank") <= K)
             .select("query_id", "neighbor_id")

@@ -4,7 +4,6 @@ import graft.Caches.CheckpointSyntax
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Config
-import graft.functions.PortableHash
 
 /** Continuous corpus ingest with incremental near-dup filtering —
   * the production loop the incremental candidate operator exists
@@ -27,9 +26,10 @@ import graft.functions.PortableHash
   * filter from the corpus scan (its ingest_batch partition filter
   * looks selective) — one more job over the whole corpus doc_id
   * column. A materialized list has no shuffle left to prune.
-  * Verification uses the same fused sorted-set intersection as the
-  * batch path, so a batch doc is dropped iff a batch-mode run over
-  * corpus+batch would have paired it.
+  * Verification uses the same set and Jaccard as the batch path
+  * ([[Shingling.shingleHashSet]], [[Shingling.jaccard]]), so a batch
+  * doc is dropped iff a batch-mode run over corpus+batch would have
+  * paired it.
   */
 object IncrementalIngest {
 
@@ -78,7 +78,6 @@ object IncrementalIngest {
     val cand = MinHashLsh.incrementalCandidatesOf(corpusBands, nb)
       .graftCheckpoint() // consumed for both sides' doc-id lists below
     if (cand.isEmpty) return None
-    val hset = array_sort(array_distinct(Shingling.shingleHashArray(col("text"), k)))
     // sets ONLY for docs that appear in some candidate pair: batch
     // side from the batch, corpus side via the corpus text read. The
     // id list is materialized first, so no runtime bloom filter
@@ -89,17 +88,14 @@ object IncrementalIngest {
     val sets = batch.select(col("doc_id"), col("text"))
       .union(corpusTexts.select(col("doc_id"), col("text")))
       .join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), hset.as("hset"))
-    val inter = PortableHash.sortedIntersectCount(col("l.hset"), col("r.hset"))
-    val jac = inter.cast("double") /
-      (size(col("l.hset")) + size(col("r.hset")) - inter)
+      .select(col("doc_id"), Shingling.shingleHashSet(col("text"), k).as("hset"))
     // drop the LARGER id of each verified pair — corpus ids are
     // smaller than batch ids by construction (monotonic ingest), so
     // corpus docs always win and within-batch dups keep the min id
     Some(cand
       .join(sets.as("l"), col("id_l") === col("l.doc_id"))
       .join(sets.as("r"), col("id_r") === col("r.doc_id"))
-      .filter(jac >= threshold)
+      .filter(Shingling.jaccard(col("l.hset"), col("r.hset")) >= threshold)
       .select(col("id_r").as("doc_id")).distinct())
   }
 

@@ -128,19 +128,6 @@ object MinHashLsh {
     sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
 
-  /** Signatures AND the sorted distinct shingle-hash set — both
-    * narrow per-row projections (no shuffle at all; the sort enables
-    * the merge-scan intersection in verify). */
-  def signaturesWithSets(docs: DataFrame, k: Int = Config.K): DataFrame = {
-    val sketch = sketchCol(col("text"), k)
-    val hset = array_sort(array_distinct(Shingling.shingleHashArray(col("text"), k)))
-    docs.filter(length(col("text")) >= 1)
-      .select(col("doc_id") +:
-        (0 until Config.NumHashes).map(i =>
-          element_at(sketch, i + 1).as(Config.sigCol(i))) :+
-        hset.as("hset"): _*)
-  }
-
   /** Per-GROUP minhash sketch via the MinHashMerge typed Aggregator
     * (UDAF tier): each doc's narrow per-row sketch is merged
     * elementwise-min within its group — the minhash of the group's
@@ -183,18 +170,16 @@ object MinHashLsh {
   def bands(docs: DataFrame, k: Int = Config.K): DataFrame =
     explodeBands(packedSketches(docs, k))
 
-  /** Per-ROW band rows plus each doc's SORTED distinct shingle-hash
-    * set: (doc_id, band, band_key, hset), projections and an explode
-    * only — no aggregation, no shuffle — so Structured Streaming can
-    * band a document statelessly before a single stateful operator. */
-  def rowwiseBands(docs: DataFrame, k: Int = Config.K): DataFrame = {
-    // SORTED set: the streaming consumer stores hset in per-bucket
-    // state and verifies arrivals with a primitive merge-walk
-    // intersect — sorting once here (per doc) beats sorting per
-    // (doc, band) member downstream. Set semantics are unchanged.
-    val harr = array_sort(array_distinct(Shingling.shingleHashArray(col("text"), k)))
-    explodeBands(packedSketches(docs, k, harr.as("hset")), carry = Seq("hset"))
-  }
+  /** Per-ROW band rows plus each doc's shingle-hash set
+    * ([[Shingling.shingleHashSet]], sorted `array<int>`): (doc_id,
+    * band, band_key, hset), projections and an explode only — no
+    * aggregation, no shuffle — so Structured Streaming can band a
+    * document statelessly before a single stateful operator. The set
+    * is sorted once per doc here, so the streaming state's merge-walk
+    * verify never sorts. */
+  def rowwiseBands(docs: DataFrame, k: Int = Config.K): DataFrame =
+    explodeBands(packedSketches(docs, k, Shingling.shingleHashSet(col("text"), k).as("hset")),
+      carry = Seq("hset"))
 
   /** (doc_id, sig, extra…) for the docs with text: `sig` is the sketch
     * packed into 4-byte big-endian words (PortableHash.packInts; every
@@ -395,12 +380,6 @@ object MinHashLsh {
     val bounded = corpusIsBounded(docs)
     val (prefiltered, sets) =
       prefilteredWithSets(docs, k, threshold, bands, rowsPerBand, bounded)
-    // |A∩B| by merge scan over the sorted sets; |A∪B| = |A|+|B|-|A∩B|
-    // — same integers as array_intersect/array_union, no hash sets or
-    // output arrays built per pair
-    val inter = PortableHash.sortedIntersectCount(col("l.hset"), col("r.hset"))
-    val jac = inter.cast("double") /
-      (size(col("l.hset")) + size(col("r.hset")) - inter)
     // scale-adaptive (r14, was blanket-merge-hinted in r13): the set
     // frame carries ~8 bytes per input CHAR (the hset array), but its
     // size estimate descends from the compressed parquet scan — at
@@ -417,7 +396,7 @@ object MinHashLsh {
       .filter(sharesBand(col("l.sig"), col("r.sig"), bands, rowsPerBand) &&
         PortableHash.agreeCount(col("l.sig"), col("r.sig")) >=
           Config.estPrefilterMinCount(threshold))
-      .withColumn("jaccard", jac)
+      .withColumn("jaccard", Shingling.jaccard(col("l.hset"), col("r.hset")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_l"), col("id_r"), col("jaccard"))
   }
@@ -480,17 +459,8 @@ object MinHashLsh {
     // then the narrow per-row projection runs on that sliver
     val ids = prefiltered.select(col("id_l").as("doc_id"))
       .union(prefiltered.select(col("id_r").as("doc_id"))).distinct()
-    // int sets: every shingle hash is below P = 2^31-1, so the cast is
-    // exact and keeps order and distinctness — half the bytes of the
-    // long set through the verify exchanges. sort_array is the
-    // codegen'd primitive sort; array_sort runs a comparator lambda
-    // (sets of all 20k perfbench dedup_batch docs, 4 local cores: 1.4
-    // s vs 3.9 s). Casting the sorted set, not the raw hash array,
-    // boxes fewer elements (1.4 s vs 2.2 s)
-    val hset = sort_array(array_distinct(Shingling.shingleHashArray(col("text"), k)))
-      .cast("array<int>")
     val sets = docs.join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), hset.as("hset"),
+      .select(col("doc_id"), Shingling.shingleHashSet(col("text"), k).as("hset"),
         PortableHash.packInts(sketchCol(col("text"), k)).as("sig"))
     (prefiltered, sets)
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Config
+import graft.functions.PortableHash
 
 /** Character k-shingling with the reference's canonical semantics
   * (Shingling.java:32-42): stride 1, one window per character
@@ -49,6 +50,27 @@ object Shingling {
     * strings entirely. */
   def shingleHashed(docs: DataFrame, k: Int = Config.K): DataFrame =
     docs.select(col("doc_id"), explode(shingleHashArray(col("text"), k)).as("h"))
+
+  /** The sorted distinct shingle-hash set of a text as `array<int>` —
+    * the one set every exact shingle-Jaccard verify compares ([[jaccard]]).
+    * Every shingle hash is below P = 2^31-1, so the int cast is exact
+    * and keeps order and distinctness — half the bytes of a long set.
+    * sort_array is the codegen'd primitive sort; array_sort runs a
+    * comparator lambda (sets of all 20k perfbench dedup_batch docs, 4
+    * local cores: 1.4 s vs 3.9 s). Casting the sorted set, not the raw
+    * hash array, boxes fewer elements (1.4 s vs 2.2 s). */
+  def shingleHashSet(text: Column, k: Int = Config.K): Column =
+    sort_array(array_distinct(shingleHashArray(text, k))).cast("array<int>")
+
+  /** Exact Jaccard |A∩B| / (|A|+|B|-|A∩B|) of two sorted distinct
+    * sets — two [[shingleHashSet]]s, or two sorted long arrays: the
+    * intersection is one merge scan, the union size follows from it —
+    * the same integers as array_intersect/array_union, no hash set or
+    * output array per pair. */
+  def jaccard(a: Column, b: Column): Column = {
+    val inter = PortableHash.sortedIntersectCount(a, b)
+    inter.cast("double") / (size(a) + size(b) - inter)
+  }
 
   /** (doc_id, shingle) — one row per window, duplicates kept
     * (positional stream; dedup happens in set-level consumers).

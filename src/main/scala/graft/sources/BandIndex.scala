@@ -48,15 +48,16 @@ object BandIndex {
     * genuinely bites at the oracle sf). */
   val DefaultMaxBucket = 20
 
-  /** Write the corpus band index ONCE, bucketed + sorted on the probe
-    * key. With `maxBucket` set, degenerate band buckets (occupancy >
-    * cap) are dropped AT BUILD TIME — stop-band removal, the
-    * production answer to the adversarial-corpus funnel DESIGN
-    * "Scale pass 4" measured: junk keys never enter the index, so no
-    * probe ever pays for them (the flat path's candidate_pairs_capped
-    * applies the same cap per query instead). Idempotent per JVM
-    * (catalog check); the write is part of the measured operator, the
-    * [[Bucketed.ensureOrderTables]] discipline. */
+  /** Write the corpus band index ONCE, bucketed on the probe key (no
+    * sortBy, see [[writeBucketedIndex]]). With `maxBucket` set,
+    * degenerate band buckets (occupancy > cap) are dropped AT BUILD
+    * TIME — stop-band removal, the production answer to the
+    * adversarial-corpus funnel DESIGN "Scale pass 4" measured: junk
+    * keys never enter the index, so no probe ever pays for them (the
+    * flat path's candidate_pairs_capped applies the same cap per
+    * query instead). Idempotent per JVM (catalog check); the write is
+    * part of the measured operator, the [[Bucketed.ensureOrderTables]]
+    * discipline. */
   def ensureBandIndexTable(spark: SparkSession, dir: String,
                            maxBucket: Option[Int] = None): String = {
     val t = s"graft_band_idx_${maxBucket.fold("")(m => s"c${m}_")}${tag(dir)}"
@@ -81,7 +82,7 @@ object BandIndex {
         .repartition(buckets, col("band"), col("band_key"))
         .write.mode("overwrite").format("parquet")
         .option("path", s"$root/bands")
-        .bucketBy(buckets, "band", "band_key").sortBy("band", "band_key")
+        .bucketBy(buckets, "band", "band_key")
         .saveAsTable(t)
     }
     t
@@ -186,15 +187,18 @@ object BandIndex {
         s"$wh/${table.toLowerCase(java.util.Locale.ROOT)}"), true)
     }
 
-  /** The one bucketed-index write recipe — three call sites must stay
-    * in lockstep or the zero-exchange probe property silently breaks
-    * for indexes built via the drifted path. */
+  /** The maintained index's bucketed write recipe — its two call
+    * sites (build, compaction) must stay in lockstep or the
+    * zero-exchange probe property silently breaks for indexes built
+    * via the drifted path. No sortBy: the bucketed scan reports no
+    * output ordering (a bucket spans several files), so the probe's
+    * sort-merge join sorts the index side anyway. */
   private def writeBucketedIndex(df: DataFrame, table: String,
                                  buckets: Int): Unit = {
     clearStaleLocation(df.sparkSession, table)
     df.repartition(buckets, col("band"), col("band_key"))
       .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "band", "band_key").sortBy("band", "band_key")
+      .bucketBy(buckets, "band", "band_key")
       .saveAsTable(table)
   }
 

@@ -881,11 +881,10 @@ object Merge {
         // Kept SEPARATE from floorAdvance (the table-retention-driven
         // advance this relay itself must publish): an observed
         // concurrent floor is already durable and must not trigger a
-        // redundant end-of-relay rewrite. Cost: ONE marker read per
-        // NOT-yet-relayed version (the relaxed main-only form — the
-        // entry-time `floor` below is the race-closed bound it maxes
-        // against); a steady poll's done-set skips them all.
-        val liveFloor = feedFloorMainOnly(spark, feedDir)
+        // redundant end-of-relay rewrite. Cost: ONE marker listing per
+        // NOT-yet-relayed version; a steady poll's done-set skips them
+        // all.
+        val liveFloor = feedFloor(spark, feedDir)
         if (v >= math.max(liveFloor, floorAdvance)) {
           val dst = new Path(feedDir, f"v$v%09d")
           feedChangesFor(spark, root, v) match {
@@ -1003,10 +1002,6 @@ object Merge {
     * (or pre-dated the feed entirely) and must never be re-relayed.
     * Hidden marker files, so the file source never reads them. */
   private val FeedFloorFile = "_expired_below"
-  /** Legacy (≤ r14) single-file marker + its staging sibling — read
-    * for migration, never written; [[writeFeedFloor]] retires them
-    * once a versioned marker at least as high exists. */
-  private def feedFloorTmp = s".$FeedFloorFile.tmp"
   /** RENAME-ONLY floor marker (r15, closing the r10–r13 read-race
     * ladder): the floor VALUE rides the marker NAME —
     * `._expired_below.v{N}` — published with one rename and resolved
@@ -1031,64 +1026,30 @@ object Merge {
       }
     }.toSeq
 
-  /** The floor: max over the versioned marker names plus (migration)
-    * the legacy main/tmp files' contents. One listing, no retries —
-    * see [[feedFloorVersioned]] for why a reader can no longer miss
-    * a concurrently-rewritten floor. */
+  /** The floor: max over the versioned marker names. One listing, no
+    * retries — see [[feedFloorVersioned]] for why a reader can no
+    * longer miss a concurrently-rewritten floor. */
   private def feedFloor(spark: SparkSession, feedDir: String): Int = {
-    val f = Snapshots.fs(spark, feedDir)
-    val named = listFloorMarkers(f, new Path(feedDir)).map(_._1)
-    val legacy = readFloorInt(spark, new Path(feedDir, FeedFloorFile)) ++
-      readFloorInt(spark, new Path(feedDir, feedFloorTmp))
-    (named ++ legacy :+ 1).max
-  }
-
-  /** The shared marker reader (Sidecars), with a torn/vanished guard:
-    * a candidate that doesn't parse — or that a concurrent legacy
-    * cleanup deleted between the exists check and the open — is
-    * simply not a bound. */
-  private def readFloorInt(spark: SparkSession, p: Path): Option[Int] =
-    scala.util.Try(Sidecars.readMarker(spark, p.toString)).toOption.flatten
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-
-  /** RELAXED floor read for [[publishChangeFeed]]'s per-version
-    * hardening recheck (r11 advice): the versioned-marker listing
-    * only, no legacy-file probes — ONE filesystem round trip per
-    * not-yet-relayed version. Sound because the caller maxes it with
-    * its entry-time [[feedFloor]] (which does read the legacy files):
-    * floors only grow, so the only bound this read can miss is a
-    * never-rewritten legacy marker already folded into the entry
-    * bound. */
-  private def feedFloorMainOnly(spark: SparkSession, feedDir: String): Int = {
     val f = Snapshots.fs(spark, feedDir)
     (listFloorMarkers(f, new Path(feedDir)).map(_._1) :+ 1).max
   }
 
-  /** Publish a new (monotonically larger) floor: stage to the hidden
-    * tmp, delete the old marker, rename in. Every crash point leaves
-    * at least one candidate [[feedFloor]] reads. Single maintainer,
-    * like every retention sweep here. */
   /** Publish a floor with the RENAME-ONLY protocol: stage under a
     * unique hidden name, rename to `._expired_below.v{target}` where
-    * target = max(requested, every marker already present — including
-    * the legacy files, so migration can never REGRESS a floor), then
-    * prune all but the two newest versioned markers and retire the
-    * legacy files. Keeping the two newest stable through every round
-    * is what gives readers a delete-free window (this round only ever
-    * deletes markers that were already ≥2 generations old when it
-    * started); the legacy files are deleted only after a versioned
-    * marker at least as high is durably published. A crash anywhere
-    * leaves either extra stale markers (pruned by the next sweep) or
-    * a stray staging file (name never parses as a floor). */
+    * target = max(requested, every marker already present), then
+    * prune all but the two newest versioned markers. Keeping the two
+    * newest stable through every round is what gives readers a
+    * delete-free window (this round only ever deletes markers that
+    * were already ≥2 generations old when it started). A crash
+    * anywhere leaves either extra stale markers (pruned by the next
+    * sweep) or a stray staging file (name never parses as a floor).
+    * Single maintainer, like every retention sweep here. */
   private def writeFeedFloor(spark: SparkSession, feedDir: String,
                              floor: Int): Unit = {
     val f = Snapshots.fs(spark, feedDir)
     val fd = new Path(feedDir)
     val named = listFloorMarkers(f, fd)
-    val legacyMain = new Path(feedDir, FeedFloorFile)
-    val legacyTmp = new Path(feedDir, feedFloorTmp)
-    val legacy = readFloorInt(spark, legacyMain) ++ readFloorInt(spark, legacyTmp)
-    val target = (named.map(_._1) ++ legacy :+ floor).max
+    val target = (named.map(_._1) :+ floor).max
     if (!named.exists(_._1 >= target)) {
       val stage = new Path(feedDir,
         s".${FeedFloorFile}.stage_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -1103,8 +1064,6 @@ object Merge {
     }
     listFloorMarkers(f, fd).sortBy(-_._1).drop(2)
       .foreach { case (_, p) => f.delete(p, false) }
-    f.delete(legacyMain, false)
-    f.delete(legacyTmp, false)
   }
 
   /** FEED RETENTION — [[Snapshots.expire]] for the relay dir: delete
@@ -1137,8 +1096,8 @@ object Merge {
     if (survivors.size == versions.size) return 0
     val floor = math.max(feedFloor(spark, feedDir),
       if (survivors.nonEmpty) survivors.head else versions.max + 1)
-    // floor FIRST (crash-safe: feedFloor reads the staging candidate
-    // too), then the deletes — a crash mid-sweep leaves extra dirs a
+    // floor FIRST (crash-safe: a published marker is a durable lower
+    // bound), then the deletes — a crash mid-sweep leaves extra dirs a
     // later expire re-sweeps, never a re-relayable gap
     writeFeedFloor(spark, feedDir, floor)
     val expired = versions.filter(_ < floor)

@@ -146,7 +146,7 @@ object StreamingOps {
       .select("doc_id", "ts_ts", "n_chars", "n_tokens")
   }
 
-  case class BandMember(band: Int, band_key: Array[Byte], doc_id: Long, hset: Seq[Long])
+  case class BandMember(band: Int, band_key: Array[Byte], doc_id: Long, hset: Array[Int])
   case class CandidatePair(id_l: Long, id_r: Long, jaccard: Double)
 
   /** Incremental near-duplicate detection over a document STREAM:
@@ -156,10 +156,15 @@ object StreamingOps {
     * pair the moment a new doc collides with a previously seen one.
     * Exactly the batch semantics, computed online.
     *
-    * State is the per-bucket member list (doc_id + shingle-hash
-    * set); `maxBucket` caps degenerate buckets the same way the
-    * batch path does, which also bounds state growth — a production
-    * deployment would add state TTL for unbounded streams.
+    * State is the per-bucket member list: doc_id + the sorted int
+    * shingle-hash set ([[graft.operators.Shingling.shingleHashSet]])
+    * that rowwiseBands emits, so a pair's Jaccard is the batch
+    * verify's double ([[graft.operators.Shingling.jaccard]]) bit for
+    * bit. STATE-SCHEMA BREAK: a checkpoint whose state holds long sets
+    * (an older build's) does not resume here. `maxBucket` caps
+    * degenerate buckets the same way the batch path does, which also
+    * bounds state growth — a production deployment would add state TTL
+    * for unbounded streams.
     * LOSSY once a bucket saturates: an arrival after the cap is still
     * compared against the `maxBucket` STORED members, but it is not
     * stored itself, so a pair between two post-cap arrivals in the
@@ -181,12 +186,13 @@ object StreamingOps {
     // ENCODED key, so two equal byte arrays are one bucket (Array
     // identity never decides it)
     implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.BINARY)
-    // state = sorted PRIMITIVE arrays, not Set[Long]: kryo writes a
-    // long[] as a compact block (a boxed HashSet costs per-element
-    // object headers on every store read/write, every micro-batch),
-    // and the verify becomes a merge-walk instead of hash probes —
-    // measured 9.7 → 5.0 s on the sf0.1 harness query
-    implicit val stEnc = Encoders.kryo[List[(Long, Array[Long])]]
+    // state = the sorted int sets rowwiseBands emits
+    // (Shingling.shingleHashSet), not Set[Long]: kryo writes an int[]
+    // as a compact block (a boxed HashSet costs per-element object
+    // headers on every store read/write, every micro-batch), and the
+    // verify becomes a merge-walk instead of hash probes — measured
+    // 9.7 → 5.0 s on the sf0.1 harness query (with long arrays)
+    implicit val stEnc = Encoders.kryo[List[(Long, Array[Int])]]
 
     val saturated =
       docs.sparkSession.sparkContext.longAccumulator("graft.nearDup.saturatedArrivals")
@@ -196,17 +202,14 @@ object StreamingOps {
 
     banded
       .groupByKey(m => (m.band, m.band_key))
-      .flatMapGroupsWithState[List[(Long, Array[Long])], CandidatePair](
+      .flatMapGroupsWithState[List[(Long, Array[Int])], CandidatePair](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: (Int, Array[Byte]), rows: Iterator[BandMember], state: GroupState[List[(Long, Array[Long])]]) =>
+        (_: (Int, Array[Byte]), rows: Iterator[BandMember], state: GroupState[List[(Long, Array[Int])]]) =>
           var members = state.getOption.getOrElse(Nil)
           val out = scala.collection.mutable.ListBuffer.empty[CandidatePair]
           rows.toSeq.sortBy(_.doc_id).foreach { m =>
             if (!members.exists(_._1 == m.doc_id)) {
-              // rowwiseBands emits hset pre-sorted; re-sort defensively
-              // if a custom banding ever feeds unsorted sets
-              val hs0 = m.hset.toArray
-              val hs = if (isSorted(hs0)) hs0 else { java.util.Arrays.sort(hs0); hs0 }
+              val hs = m.hset
               // an arrival is compared against all STORED members; once
               // the bucket is saturated the arrival itself is dropped
               // (not stored), so pairs among post-cap arrivals are lost
@@ -226,14 +229,8 @@ object StreamingOps {
       }
   }
 
-  private def isSorted(a: Array[Long]): Boolean = {
-    var i = 1
-    while (i < a.length) { if (a(i - 1) > a(i)) return false; i += 1 }
-    true
-  }
-
   /** |a ∩ b| for sorted distinct arrays — one merge walk, no boxing. */
-  private def sortedIntersectCount(a: Array[Long], b: Array[Long]): Int = {
+  private def sortedIntersectCount(a: Array[Int], b: Array[Int]): Int = {
     var i = 0; var j = 0; var n = 0
     while (i < a.length && j < b.length) {
       if (a(i) == b(j)) { n += 1; i += 1; j += 1 }

@@ -1293,7 +1293,7 @@ class MergeSpec extends SparkSpec {
       assert(Merge.publishChangeFeed(spark, root, feedDir) == 0)
       // RENAME-ONLY floor protocol (r15): the floor value rides the
       // marker NAME, published by one rename — verify a versioned
-      // marker exists and interleave the crash states it can leave
+      // marker exists and interleave the crash state it can leave
       def floorMarkers() = f.listStatus(new Path(feedDir))
         .map(_.getPath.getName).filter(_.startsWith("._expired_below.v")).sorted
       assert(floorMarkers().nonEmpty, s"versioned floor marker expected")
@@ -1305,17 +1305,6 @@ class MergeSpec extends SparkSpec {
       assert(Merge.publishChangeFeed(spark, root, feedDir) == 0,
         "a stray staging file must not reset the floor")
       f.delete(stray, false)
-      // (b) MIGRATION: a legacy pre-r15 marker pair (single file +
-      // staging sibling, the delete-window protocol) with NO versioned
-      // marker must still floor the feed, whichever file a legacy
-      // crash left behind
-      val markerNames = floorMarkers()
-      val legacyVal = markerNames.last.stripPrefix("._expired_below.v")
-      markerNames.foreach(n => f.delete(new Path(feedDir, n), false))
-      val lm = f.create(new Path(feedDir, "._expired_below.tmp"), true)
-      lm.write(legacyVal.getBytes("UTF-8")); lm.close()
-      assert(Merge.publishChangeFeed(spark, root, feedDir) == 0,
-        "a legacy (torn) floor marker must still hold the floor")
       // a NEW stream over the survivors reads exactly the surviving suffix
       val q = Merge.streamChangeFeed(spark, root, feedDir)
         .writeStream.format("memory").queryName("feedret_stream")

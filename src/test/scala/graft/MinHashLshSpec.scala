@@ -336,32 +336,46 @@ class MinHashLshSpec extends SparkSpec {
         30, 2)).head().getBoolean(0))
   }
 
-  test("packed chain equals the public long/CSV pieces on a duplicate flood") {
-    // ~200 copies of one text put one mega-bucket in every band: the
-    // packed band key and signature must decide exactly what the
-    // user-visible CSV candidates and long signatures decide, at the
-    // default operating point and at 30 x 2
+  /** sf0.001 plus ~200 copies of its first text (one mega-bucket in
+    * every band): (docs, first doc id, max sf0.001 doc id). */
+  private def duplicateFlood() = {
     val base = spark.read.parquet(s"$Sf0001/documents.parquet").select("doc_id", "text")
     val first = base.orderBy("doc_id").head()
     val maxId = base.agg(max("doc_id")).head().getLong(0)
     val docs = base.union(spark.range(200).select(
       (col("id") + maxId + 1).as("doc_id"), lit(first.getString(1)).as("text")))
+    (docs, first.getLong(0), maxId)
+  }
+
+  /** Each doc's distinct shingle hashes, from the exploded hash rows. */
+  private def hashSets(docs: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+    Shingling.shingleHashed(docs).collect().groupBy(_.getLong(0))
+      .map { case (id, rows) => id -> rows.map(_.getLong(1)).toSet }
+
+  private def refJaccard(a: Set[Long], b: Set[Long]): Double = {
+    val inter = a.intersect(b).size
+    inter.toDouble / (a.size + b.size - inter)
+  }
+
+  test("packed chain equals the public long/CSV pieces on a duplicate flood") {
+    // the packed band key and signature must decide exactly what the
+    // user-visible CSV candidates and long signatures decide, at the
+    // default operating point and at 30 x 2
+    val (docs, firstId, maxId) = duplicateFlood()
     val sigs = MinHashLsh.signatures(docs).collect()
       .map(r => r.getLong(0) -> (1 to Config.NumHashes).map(r.getLong)).toMap
-    val sets = MinHashLsh.signaturesWithSets(docs).select("doc_id", "hset").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    val sets = hashSets(docs)
     val cand = MinHashLsh.candidatePairs(docs).collect().map(r => (r.getLong(0), r.getLong(1)))
     def agree(l: Long, r: Long) = sigs(l).zip(sigs(r)).count { case (x, y) => x == y }
     def expected(cand: Seq[(Long, Long)], threshold: Double) = {
       val minAgree = Config.estPrefilterMinCount(threshold)
       cand.filter { case (l, r) => agree(l, r) >= minAgree }.flatMap { case (l, r) =>
-        val inter = sets(l).intersect(sets(r)).size
-        val jac = inter.toDouble / (sets(l).size + sets(r).size - inter)
+        val jac = refJaccard(sets(l), sets(r))
         if (jac >= threshold) Some((l, r, jac)) else None
       }.toSet
     }
     val want = expected(cand.toSeq, Config.Threshold)
-    assert(want.count { case (l, r, _) => l == first.getLong(0) || l > maxId } >= 200 * 201 / 2)
+    assert(want.count { case (l, r, _) => l == firstId || l > maxId } >= 200 * 201 / 2)
     val got = MinHashLsh.similarPairs(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.length == got.toSet.size && got.toSet == want)
@@ -386,6 +400,40 @@ class MinHashLshSpec extends SparkSpec {
     assert(est.length == cand.length)
     assert(est.toMap == cand.map { case (l, r) =>
       (l, r) -> agree(l, r).toDouble / Config.NumHashes }.toMap)
+  }
+
+  test("similarPairs and nearDupStream give each shared pair the same Jaccard double") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val (docs, _, maxId) = duplicateFlood()
+    val bits = java.lang.Double.doubleToRawLongBits _
+    val batch = MinHashLsh.similarPairs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    val q = graft.streaming.StreamingOps.nearDupStream(input.toDS(), maxBucket = Int.MaxValue)
+      .writeStream.format("memory").queryName("nd_jaccard").outputMode("append").start()
+    val online = try {
+      // two micro-batches: the flood's pairs span the stored state
+      val all = docs.as[(Long, String)].collect().sortBy(_._1)
+      all.grouped((all.length + 1) / 2).foreach { b =>
+        input.addData(b.toSeq: _*)
+        q.processAllAvailable()
+      }
+      s.table("nd_jaccard").as[(Long, Long, Double)].collect()
+    } finally q.stop()
+    // a pair emitted from several buckets carries one value
+    val onlineJac = online.groupBy(p => (p._1, p._2)).map { case (p, rows) =>
+      assert(rows.map(r => bits(r._3)).distinct.length == 1, s"$p: ${rows.toSeq}")
+      p -> rows.head._3
+    }
+    val shared = batch.keySet.intersect(onlineJac.keySet)
+    assert(shared.count(_._1 > maxId) >= 199 * 200 / 2 && shared.exists(batch(_) < 1.0))
+    val sets = hashSets(docs)
+    shared.foreach { case p @ (l, r) =>
+      assert(bits(batch(p)) == bits(onlineJac(p)), s"$p")
+      assert(bits(batch(p)) == bits(refJaccard(sets(l), sets(r))), s"$p")
+    }
   }
 
   test("flagship on sf0.001 finds the planted near-dup pairs") {

@@ -64,6 +64,24 @@ class ShinglingSpec extends SparkSpec {
     }
   }
 
+  test("shingleHashSet is the sorted distinct int set of the built-ins shingle folds") {
+    import graft.functions.PortableHash
+    import org.apache.spark.sql.types.{ArrayType, IntegerType}
+    val k = Config.K
+    // lengths 1, k-1 and k; a non-BMP character; a repeated text
+    val texts = Seq("a", "abcdef".take(k - 1), "abcdef".take(k), "x🙂yz", "ab" * 40)
+    val d = docsDf(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }: _*)
+    val out = d.select(Shingling.shingleHashSet(col("text"), k).as("set"),
+      transform(Shingling.shingleArrayBuiltins(col("text"), k),
+        s => PortableHash.charFoldHash(s)).as("ref"))
+    assert(out.schema("set").dataType.asInstanceOf[ArrayType].elementType == IntegerType)
+    out.collect().foreach { r =>
+      val ref = r.getSeq[Long](1).distinct.sorted
+      assert(ref.nonEmpty && ref.forall(_ < Config.P))
+      assert(r.getSeq[Int](0).map(_.toLong) == ref)
+    }
+  }
+
   test("fused shingleArray equals the built-ins windows (incl. unicode, short, empty)") {
     import org.apache.spark.sql.functions._
     val texts = Seq("abcde", "ab", "a", "", "a-b c,d", "héllo wörld",
