@@ -48,19 +48,25 @@ object PortableHash {
     Bridge.column(ArrayAgreeCount(Bridge.expression(a), Bridge.expression(b)))
   }
 
-  /** Equal-byte count of two equal-length binaries — the agreement of
-    * two [[lowBytes]] fingerprints (see ByteAgreeCount). Fails loudly
-    * on a length mismatch. */
-  def agreeBytes(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graft.{Bridge, ByteAgreeCount}
-    Bridge.column(ByteAgreeCount(Bridge.expression(a), Bridge.expression(b)))
+  /** Equal-nibble count of two equal-length binaries — the agreement
+    * of two [[lowNibbles]] fingerprints (see NibbleAgreeCount). Fails
+    * loudly on a length mismatch. */
+  def agreeNibbles(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graft.{Bridge, NibbleAgreeCount}
+    Bridge.column(NibbleAgreeCount(Bridge.expression(a), Bridge.expression(b)))
   }
 
   /** The fingerprint of a packed signature ([[packInts]] of S
-    * components): the low (last, big-endian) byte of each 4-byte word,
-    * S bytes. Two equal words give equal fingerprint bytes. */
-  def lowBytes(packed: Column): Column =
-    concat((0 until Config.NumHashes).map(i => substring(packed, 4 * i + 4, 1)): _*)
+    * components): the low 4 bits of each 4-byte word, two per byte
+    * (word 2j in byte j's high nibble, word 2j+1 in its low one), S/2
+    * bytes. Two equal words give equal fingerprint nibbles. Native
+    * (see LowNibbles): the built-ins form, unhex of the words' last
+    * hex digits, cost similarPairs' band-explode stage 0.23-0.51 s of
+    * task time against 0.10-0.16 s native (20k docs, 4 cores). */
+  def lowNibbles(packed: Column): Column = {
+    import org.apache.spark.sql.graft.{Bridge, LowNibbles}
+    Bridge.column(LowNibbles(Bridge.expression(packed)))
+  }
 
   /** |A∩B| of two sorted distinct long-array columns, or of two
     * int-array columns (fused two-pointer merge; see

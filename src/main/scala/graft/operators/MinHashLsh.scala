@@ -38,11 +38,15 @@ import graft.functions.PortableHash
   *
   * Scale notes (100 TB): the signature is a narrow per-row sketch
   * (see [[signatures]]; no shuffle, no per-doc state). Skewed
-  * LSH buckets (a band value shared by millions of docs) would make
-  * the self-join quadratic — `candidatePairs(maxBucket=...)` caps
-  * bucket size (drops degenerate buckets like stop-shingle clusters,
-  * standard practice), and AQE skew-join splitting handles residual
-  * skew. Nothing is ever collected to the driver.
+  * LSH buckets (a band value shared by millions of docs) make the
+  * self-join quadratic in the bucket. Only the public
+  * `candidatePairs(maxBucket=...)` caps bucket size, and it does so
+  * lossily (drops degenerate buckets like stop-shingle clusters).
+  * similarPairs has no cap, and AQE's skew-join split does not help
+  * it either: a hot bucket's rows are far below the split's byte
+  * trigger, and one key's pairs stay in one task. Lossless splitting
+  * of hot buckets is open (ROADMAP item 3). Nothing is ever
+  * collected to the driver.
   */
 object MinHashLsh {
 
@@ -51,7 +55,7 @@ object MinHashLsh {
     * broadcast threshold divided by this factor. Rationale (r13
     * mid-scale diagnosis + guide §3.1): the frames these joins carry
     * are corpus-DERIVED payloads — the shingle-hash sets (4-8 B per
-    * input char), the exploded band frame (~10 bands x 76 B of
+    * input char), the exploded band frame (~10 bands x 46 B of
     * fingerprint+bucket+id per doc in similarPairs, x 264 B of packed
     * sig+key in estimatedPairs), the raw texts — whose in-memory
     * size is up to ~32-64x the compressed parquet bytes, while Catalyst's size
@@ -196,10 +200,10 @@ object MinHashLsh {
     * needs both members' sketches in its residual or projection carries
     * them here, so it never joins back against a signature table (at
     * 100 TB a second corpus-wide shuffle): similarPairs carries the
-    * 60-byte fingerprint keyed on the 8-byte bucket ([[bucketPairs]];
-    * ~76 B per band row with the doc_id), estimatedPairs the 240-byte
+    * 30-byte fingerprint keyed on the 8-byte bucket ([[bucketPairs]];
+    * ~46 B per band row with the doc_id), estimatedPairs the 240-byte
     * signature keyed on (band, band_key) (~264 B). perfbench
-    * dedup_batch seed 1 (20k docs, 4-core box): 7.1 MB into
+    * dedup_batch seed 1 (20k docs, 4-core box): 5.0 MB into
     * similarPairs' band exchange, 17.0 MB into estimatedPairs'. */
   private def explodeBands(packed: DataFrame, carry: Seq[String] = Nil,
                            bands: Int = Config.Bands,
@@ -363,8 +367,8 @@ object MinHashLsh {
     * threshold, after a cheap sketch pre-filter: pairs must agree on
     * >= Config.estPrefilterMinCount(threshold) of the S signature
     * components before the set-intersection runs (36 at the default
-    * t=0.8). The band join checks that bound on the 60-byte
-    * fingerprints (a superset: byte agreement >= word agreement), and
+    * t=0.8). The band join checks that bound on the 30-byte
+    * fingerprints (a superset: nibble agreement >= word agreement), and
     * the verify join checks it exactly on the signatures, so the pair
     * set equals the word-count prefilter's. At sf0.1 this cuts the
     * verify join from ~1M candidate pairs to a few thousand.
@@ -427,15 +431,16 @@ object MinHashLsh {
     // the sketch ran twice — measured +0.8 s per composite query
     // without this checkpoint.
     val base = packedSketches(docs, k).graftCheckpoint()
-    // the 60-byte fingerprint (the low byte of each signature word)
-    // rides the band explode so the agreement prefilter is a
-    // join-residual condition — no joins against the multi-million-pair
-    // stream at all, and no DISTINCT until the prefiltered survivors.
-    // Byte agreement is never below word agreement, so this keeps every
-    // pair the word count would; verify re-checks the words exactly.
-    // The 240-byte sig is read to cut the band keys but does not ride.
+    // the 30-byte fingerprint (the low 4 bits of each signature word,
+    // two per byte) rides the band explode so the agreement prefilter
+    // is a join-residual condition — no joins against the
+    // multi-million-pair stream at all, and no DISTINCT until the
+    // prefiltered survivors. Nibble agreement is never below word
+    // agreement, so this keeps every pair the word count would; verify
+    // re-checks the words exactly. The 240-byte sig is read to cut the
+    // band keys but does not ride.
     val bandsWithFp = explodeBands(
-      base.withColumn("fp", PortableHash.lowBytes(col("sig"))), Seq("fp"), bands, rowsPerBand)
+      base.withColumn("fp", PortableHash.lowNibbles(col("sig"))), Seq("fp"), bands, rowsPerBand)
     // materialized: consumed twice below (survivor ids + verify join)
     // — without this the band self-join would execute per consumer.
     // scale-adaptive (r14): both sides carry the fingerprint, so
@@ -448,7 +453,7 @@ object MinHashLsh {
     // Keyed on the 8-byte bucket hash (see bucketPairs): a collision
     // survivor is dropped by the verify's exact band test.
     val prefiltered = bucketPairs(bandsWithFp,
-        PortableHash.agreeBytes(col("fp_l"), col("fp_r")) >=
+        PortableHash.agreeNibbles(col("fp_l"), col("fp_r")) >=
           Config.estPrefilterMinCount(threshold),
         pinMerge = !bounded)
       .select("id_l", "id_r")
@@ -456,7 +461,11 @@ object MinHashLsh {
       .graftCheckpoint()
     // hash sets and signatures ONLY for surviving docs:
     // broadcast-semi-join the tiny survivor id list against the corpus,
-    // then the narrow per-row projection runs on that sliver
+    // then the narrow per-row projection runs on that sliver. Only the
+    // projection is limited to survivors: the semi-join still scans
+    // the whole text column, so with the sketch's read every call
+    // scans the corpus text twice (dedup_batch, 20k docs: 6.41 MB of
+    // scan input for a 4.03 MiB corpus file).
     val ids = prefiltered.select(col("id_l").as("doc_id"))
       .union(prefiltered.select(col("id_r").as("doc_id"))).distinct()
     val sets = docs.join(broadcast(ids), Seq("doc_id"), "left_semi")

@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BinaryType, DataType, IntegerType, LongType, TypeCollection}
@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.Platform
   * interpreted HOFs allocating two intermediate arrays per pair. This
   * is one fused loop, codegen-friendly via a static call. In
   * MinHashLsh.similarPairs the word count runs only in the verify
-  * join, on the pairs that passed the band join's [[ByteAgreeCount]]
+  * join, on the pairs that passed the band join's [[NibbleAgreeCount]]
   * residual (a few thousand at sf0.1); estimatedPairs runs it on
   * every band-join pair. */
 case class ArrayAgreeCount(left: Expression, right: Expression)
@@ -58,31 +58,51 @@ case class ArrayAgreeCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Number of byte positions where two equal-length binaries hold the
-  * same byte: the agreement count of two minhash FINGERPRINTS (the
-  * low byte of each packed signature word, b-bit minwise hashing with
-  * b = 8). Equal words have equal low bytes, so on fingerprints this
-  * count is never below [[ArrayAgreeCount]]'s word count on the
-  * signatures: `>= m` keeps every pair the word count keeps. The
-  * width is fixed at one byte by the function, never inferred from
-  * the length (a 60-byte fingerprint is also a 15-word packed
-  * binary). */
-case class ByteAgreeCount(left: Expression, right: Expression)
+/** Number of 4-bit positions where two equal-length binaries hold the
+  * same nibble: the agreement count of two minhash FINGERPRINTS (the
+  * low 4 bits of each packed signature word, two per byte — b-bit
+  * minwise hashing with b = 4). Equal words have equal low nibbles,
+  * so on fingerprints this count is never below [[ArrayAgreeCount]]'s
+  * word count on the signatures: `>= m` keeps every pair the word
+  * count keeps. The width is fixed at one nibble by the function,
+  * never inferred from the length: S = 60 words make a 30-byte
+  * fingerprint. */
+case class NibbleAgreeCount(left: Expression, right: Expression)
   extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
   override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_byte_agree_count"
+  override def prettyName: String = "graft_nibble_agree_count"
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    ArrayAgreeCountUtil.countBytes(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+    ArrayAgreeCountUtil.countNibbles(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graft.ArrayAgreeCountUtil.countBytes($a, $b)")
+      s"org.apache.spark.sql.graft.ArrayAgreeCountUtil.countNibbles($a, $b)")
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ByteAgreeCount =
+      newLeft: Expression, newRight: Expression): NibbleAgreeCount =
     copy(left = newLeft, right = newRight)
+}
+
+/** The minhash FINGERPRINT of a packed signature ([[PackInts]]
+  * binary): the low 4 bits of each 4-byte big-endian word, two per
+  * byte — word 2j in byte j's high nibble, word 2j+1 in its low one —
+  * the input compared by [[NibbleAgreeCount]]. One loop over the
+  * words' last bytes, no intermediate strings. */
+case class LowNibbles(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
+  override def dataType: DataType = BinaryType
+  override def prettyName: String = "graft_low_nibbles"
+
+  override def nullSafeEval(packed: Any): Any =
+    ArrayAgreeCountUtil.lowNibbles(packed.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.ArrayAgreeCountUtil.lowNibbles($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): LowNibbles =
+    copy(child = newChild)
 }
 
 object ArrayAgreeCountUtil {
@@ -121,16 +141,35 @@ object ArrayAgreeCountUtil {
     c
   }
 
-  /** Equal bytes, under the same fail-loud length rule. */
-  def countBytes(a: Array[Byte], b: Array[Byte]): Int = {
+  /** [[LowNibbles]]: a packed binary of an even number of words, else
+    * a pipeline bug — fail loudly rather than drop a ragged word. */
+  def lowNibbles(packed: Array[Byte]): Array[Byte] = {
+    if (packed.length % 8 != 0) {
+      throw new IllegalArgumentException(
+        s"graft_low_nibbles: ${packed.length} packed bytes are not whole word pairs")
+    }
+    val out = new Array[Byte](packed.length / 8)
+    var j = 0
+    while (j < out.length) {
+      out(j) = (((packed(8 * j + 3) & 0xf) << 4) | (packed(8 * j + 7) & 0xf)).toByte
+      j += 1
+    }
+    out
+  }
+
+  /** Equal nibbles (two per byte), under the same fail-loud length
+    * rule. */
+  def countNibbles(a: Array[Byte], b: Array[Byte]): Int = {
     if (a.length != b.length) {
       throw new IllegalArgumentException(
-        s"graft_byte_agree_count: length mismatch (${a.length} vs ${b.length} bytes)")
+        s"graft_nibble_agree_count: length mismatch (${a.length} vs ${b.length} bytes)")
     }
     var c = 0
     var i = 0
     while (i < a.length) {
-      if (a(i) == b(i)) c += 1
+      val x = a(i) ^ b(i)
+      if ((x & 0xf0) == 0) c += 1
+      if ((x & 0x0f) == 0) c += 1
       i += 1
     }
     c

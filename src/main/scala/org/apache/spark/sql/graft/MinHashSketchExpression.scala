@@ -39,25 +39,25 @@ case class MinHashSketch(child: Expression)
 }
 
 object MinHashSketchUtil {
-  private final val Mod = graft.Config.P
   private final val S = graft.Config.NumHashes
   private final val A: Array[Long] = graft.Config.coeffs.map(_._1).toArray
   private final val B: Array[Long] = graft.Config.coeffs.map(_._2).toArray
 
   /** All S mins in one pass; empty input yields an all-(P) sketch —
     * callers filter empty docs out first (as the aggregated form
-    * drops them by having no rows). Max intermediate (P-1)^2 + P
-    * fits int64. */
+    * drops them by having no rows). Inputs are shingle hashes, in
+    * [0, P): the max intermediate (P-1)^2 + P-1 fits int64 and is in
+    * [[ModP.fold]]'s exact range. */
   def sketch(hs: ArrayData): ArrayData = {
     val out = new Array[Long](S)
-    java.util.Arrays.fill(out, Mod)
+    java.util.Arrays.fill(out, graft.Config.P)
     val n = hs.numElements()
     var j = 0
     while (j < n) {
       val h = hs.getLong(j)
       var i = 0
       while (i < S) {
-        val v = (A(i) * h + B(i)) % Mod
+        val v = ModP.fold(A(i) * h + B(i))
         if (v < out(i)) out(i) = v
         i += 1
       }

@@ -41,9 +41,28 @@ case class PolyHash(child: Expression) extends UnaryExpression with ExpectsInput
     copy(child = newChild)
 }
 
+/** x mod P for P = 2^31-1 without a division: the Mersenne fold
+  * x = (x & P) + (x >>> 31), applied twice, then one conditional
+  * subtract. Exact for 0 <= x < 2^62 — every intermediate of the
+  * native hash kernels, whose largest is the sketch's (P-1)^2 + P-1.
+  * graft.Config.P is a field, not a compile-time constant, so a
+  * `% P` in those loops is a real 64-bit divide per (shingle, hash);
+  * the built-in `%` forms (PortableHash.affine, the polyhash
+  * built-ins, the oracle) stay as the references the specs compare
+  * against. */
+object ModP {
+  private final val P = 0x7fffffffL
+  require(graft.Config.P == P, s"the Mersenne fold needs P = 2^31-1, not ${graft.Config.P}")
+
+  def fold(x: Long): Long = {
+    var y = (x & P) + (x >>> 31) // < 2^32
+    y = (y & P) + (y >>> 31)      // <= P + 1
+    if (y >= P) y - P else y
+  }
+}
+
 object PolyHashUtil {
   private final val Base = graft.Config.CharBase
-  private final val Mod = graft.Config.P
 
   /** Fold over code points; ASCII fast path iterates raw bytes with
     * zero allocation. */
@@ -53,7 +72,7 @@ object PolyHashUtil {
       var acc = 0L
       var i = 0
       while (i < nBytes) {
-        acc = (acc * Base + (s.getByte(i) & 0xffL)) % Mod
+        acc = ModP.fold(acc * Base + (s.getByte(i) & 0xffL))
         i += 1
       }
       acc
@@ -63,7 +82,7 @@ object PolyHashUtil {
       var i = 0
       while (i < str.length) {
         val cp = str.codePointAt(i)
-        acc = (acc * Base + cp) % Mod
+        acc = ModP.fold(acc * Base + cp)
         i += Character.charCount(cp)
       }
       acc

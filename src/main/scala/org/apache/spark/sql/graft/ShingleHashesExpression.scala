@@ -42,7 +42,6 @@ case class ShingleHashes(child: Expression, k: Int)
 
 object ShingleHashUtil {
   private final val Base = graft.Config.CharBase
-  private final val Mod = graft.Config.P
   private final val Space = 32L
 
   /** One hash per code-point position i in [0, n): fold of the
@@ -79,10 +78,10 @@ object ShingleHashUtil {
       var acc = 0L
       var j = i
       while (j < end) {
-        acc = (acc * Base + cps(j)) % Mod
+        acc = ModP.fold(acc * Base + cps(j))
         j += 1
       }
-      if (i + k > n) acc = (acc * Base + Space) % Mod
+      if (i + k > n) acc = ModP.fold(acc * Base + Space)
       out(i) = acc
       i += 1
     }

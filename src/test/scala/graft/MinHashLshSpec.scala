@@ -251,6 +251,11 @@ class MinHashLshSpec extends SparkSpec {
       val cols = j.children.flatMap(_.output.map(_.name))
       assert(cols.contains("fp_l") && cols.contains("fp_r"), cols)
       assert(!cols.exists(c => c.startsWith("sig") || c.startsWith("band")), cols)
+      // one nibble per signature word: S/2 fingerprint bytes per row
+      val side = j.children.find(_.output.exists(_.name == "fp_l")).get
+      val fp = side.output.indexWhere(_.name == "fp_l")
+      val widths = side.executeCollect().map(_.getBinary(fp).length).distinct.toSeq
+      assert(widths == Seq(Config.NumHashes / 2), widths)
     }
   }
 

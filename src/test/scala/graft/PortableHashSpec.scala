@@ -142,66 +142,118 @@ class PortableHashSpec extends SparkSpec {
     }
   }
 
-  test("fingerprint byte agreement is never below word agreement, boundary values included") {
+  /** The fingerprint model: word i's low 4 bits, two words per byte,
+    * the even word in the high nibble. */
+  private def nibbleModel(words: Seq[Long]): Seq[Byte] =
+    words.grouped(2).map { case Seq(hi, lo) => (((hi & 0xf) << 4) | (lo & 0xf)).toByte }.toSeq
+
+  private def nibbleAgreeModel(a: Seq[Long], b: Seq[Long]): Int =
+    a.zip(b).count { case (x, y) => (x & 0xf) == (y & 0xf) }
+
+  test("nibble agreement is never below word agreement, boundary values included") {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(13)
-    // small values and 0 / P-1 force word agreements; 256-strides force
-    // low-byte agreements between unequal words
+    // small values and 0 / P-1 force word agreements; 16-strides force
+    // low-nibble agreements between unequal words
     def comp(): Long = rnd.nextInt(5) match {
       case 0 => 0L
       case 1 => Config.P - 1
       case 2 => rnd.nextInt(3).toLong
-      case 3 => 255L + 256L * rnd.nextInt(4)
+      case 3 => 15L + 16L * rnd.nextInt(4)
       case _ => (rnd.nextDouble() * Config.P).toLong
     }
     val rows = Seq.fill(300)((Seq.fill(Config.NumHashes)(comp()), Seq.fill(Config.NumHashes)(comp())))
     val (pa, pb) = (PortableHash.packInts(col("a")), PortableHash.packInts(col("b")))
     val out = rows.toDF("a", "b").select(
-      PortableHash.agreeBytes(PortableHash.lowBytes(pa), PortableHash.lowBytes(pb)),
+      PortableHash.agreeNibbles(PortableHash.lowNibbles(pa), PortableHash.lowNibbles(pb)),
       PortableHash.agreeCount(pa, pb),
-      PortableHash.lowBytes(pa))
+      PortableHash.lowNibbles(pa))
       .collect()
-    var byteOnly = 0
+    var nibbleOnly = 0
     rows.zip(out).foreach { case ((a, b), r) =>
-      val bytes = a.zip(b).count { case (x, y) => (x & 0xff) == (y & 0xff) }
+      val nibbles = nibbleAgreeModel(a, b)
       val words = a.zip(b).count { case (x, y) => x == y }
-      assert(r.getInt(0) == bytes && r.getInt(1) == words && bytes >= words)
-      if (bytes > words) byteOnly += 1
-      assert(r.getAs[Array[Byte]](2).toSeq == a.map(_.toByte))
+      assert(r.getInt(0) == nibbles && r.getInt(1) == words && nibbles >= words)
+      if (nibbles > words) nibbleOnly += 1
+      assert(r.getAs[Array[Byte]](2).toSeq == nibbleModel(a))
     }
-    assert(byteOnly > 0, "no pair agrees on more bytes than words")
+    assert(nibbleOnly > 0, "no pair agrees on more nibbles than words")
   }
 
-  test("fingerprints of words that differ only above the low byte agree fully, words not at all") {
+  test("lowNibbles and agreeNibbles equal the Scala nibble model on random pairs") {
     val s = spark
     import s.implicits._
-    // word i: low byte i, upper bytes 1 on one side and 0x7fffff (the
-    // top of the 31-bit range) on the other
-    val a = (0 until Config.NumHashes).map(i => 256L + i)
-    val b = (0 until Config.NumHashes).map(i => 0x7fffffL * 256 + i)
-    assert(a.zip(b).forall { case (x, y) => x != y && (x & 0xff) == (y & 0xff) })
+    val rnd = new scala.util.Random(29)
+    // uniform words over [0, P), the range's ends planted in every row
+    def sig(): Seq[Long] = {
+      val w = Array.fill(Config.NumHashes)((rnd.nextDouble() * Config.P).toLong)
+      w(rnd.nextInt(w.length)) = 0L
+      w(rnd.nextInt(w.length)) = Config.P - 1
+      w.toSeq
+    }
+    val rows = Seq.fill(300)((sig(), sig()))
+    val (fa, fb) = (PortableHash.lowNibbles(PortableHash.packInts(col("a"))),
+      PortableHash.lowNibbles(PortableHash.packInts(col("b"))))
+    val out = rows.toDF("a", "b").select(fa, fb, PortableHash.agreeNibbles(fa, fb)).collect()
+    rows.zip(out).foreach { case ((a, b), r) =>
+      assert(r.getAs[Array[Byte]](0).toSeq == nibbleModel(a))
+      assert(r.getAs[Array[Byte]](1).toSeq == nibbleModel(b))
+      assert(r.getAs[Array[Byte]](0).length == Config.NumHashes / 2)
+      assert(r.getInt(2) == nibbleAgreeModel(a, b))
+    }
+    // about S/16 chance agreements per pair
+    val mean = out.map(_.getInt(2)).sum.toDouble / out.length
+    assert(mean > 2.0 && mean < 6.0, mean)
+  }
+
+  test("words that differ only above the low nibble agree in every nibble, no word") {
+    val s = spark
+    import s.implicits._
+    // word i: low nibble i mod 16, upper bits 1 on one side and
+    // 0x7fffffe (the top of the hash range, [0, P)) on the other
+    val a = (0 until Config.NumHashes).map(i => 16L + i % 16)
+    val b = (0 until Config.NumHashes).map(i => 0x7fffffeL * 16 + i % 16)
+    assert(a.zip(b).forall { case (x, y) => x != y && (x & 0xf) == (y & 0xf) })
     assert(b.forall(_ < Config.P))
     val (pa, pb) = (PortableHash.packInts(col("a")), PortableHash.packInts(col("b")))
     val r = Seq((a, b)).toDF("a", "b").select(
-      PortableHash.agreeBytes(PortableHash.lowBytes(pa), PortableHash.lowBytes(pb)),
+      PortableHash.agreeNibbles(PortableHash.lowNibbles(pa), PortableHash.lowNibbles(pb)),
       PortableHash.agreeCount(pa, pb)).head()
     assert(r.getInt(0) == Config.NumHashes && r.getInt(1) == 0)
   }
 
-  test("byte agreement rejects length mismatches loudly, the full signature included") {
+  test("nibble agreement rejects length mismatches loudly, the signature included") {
     val s = spark
     import s.implicits._
     val df = Seq(Seq.tabulate(Config.NumHashes)(_.toLong)).toDF("a")
-    val fa = PortableHash.lowBytes(PortableHash.packInts(col("a")))
+    val fa = PortableHash.lowNibbles(PortableHash.packInts(col("a")))
     for (other <- Seq(substring(fa, 2, Config.NumHashes), PortableHash.packInts(col("a")))) {
-      val e = intercept[Exception](df.select(PortableHash.agreeBytes(fa, other)).collect())
-      assert(messages(e).contains("graft_byte_agree_count: length mismatch"), messages(e))
+      val e = intercept[Exception](df.select(PortableHash.agreeNibbles(fa, other)).collect())
+      assert(messages(e).contains("graft_nibble_agree_count: length mismatch"), messages(e))
     }
     // bytes, never long arrays
     intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(PortableHash.agreeBytes(col("a"), col("a"))).collect()
+      df.select(PortableHash.agreeNibbles(col("a"), col("a"))).collect()
     }
+    // the packer takes whole word pairs only: an odd word count fails
+    val e = intercept[Exception] {
+      Seq(Seq(1L, 2L, 3L)).toDF("a")
+        .select(PortableHash.lowNibbles(PortableHash.packInts(col("a")))).collect()
+    }
+    assert(messages(e).contains("graft_low_nibbles: 12 packed bytes"), messages(e))
+  }
+
+  test("Mersenne fold equals % P from 0 to the sketch maximum") {
+    import org.apache.spark.sql.graft.ModP
+    val p = Config.P
+    val sketchMax = (p - 1) * (p - 1) + p - 1
+    val rnd = new scala.util.Random(31)
+    val fixed = Seq(0L, 1L, p - 2, p - 1, p, p + 1, 2 * p - 1, 2 * p, 1L << 31, (1L << 32) - 1,
+      sketchMax, (1L << 62) - 1)
+    val random = Seq.fill(100000)(rnd.nextLong() >>> 2) ++ // uniform over [0, 2^62)
+      Seq.fill(100000)(java.lang.Math.floorMod(rnd.nextLong(), sketchMax + 1))
+    for (x <- fixed ++ random) assert(ModP.fold(x) == x % p, s"x = $x")
   }
 
   test("packing throws on any component outside [0, Int.MaxValue]") {

@@ -1,7 +1,8 @@
-// Per-stage shuffle-write bytes of one engine chain, for spark-shell.
-// Run it through tools/stage_bytes.sh, which defines `chain` (a
-// DataFrame => DataFrame over the engine's classes) and `reps` ahead
-// of this file and sets DOCS to a documents.parquet path. The chain's
+// Per-stage shuffle-write bytes and times of one engine chain, for
+// spark-shell. Run it through tools/stage_bytes.sh, which defines
+// `chain` (a DataFrame => DataFrame over the engine's classes), `reps`
+// and `cores` ahead of this file and sets DOCS to a documents.parquet
+// path. The chain's
 // input is Par.widen of that parquet (the frame perfbench's
 // dedup_batch hands to its op), and the output is forced the way
 // perfbench forces an op: one xxhash64 bit_xor digest and a row count.
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
 // the shell's own session lacks the engine's settings (its extensions
 // are static): replace it with the one the engine's mains use
 spark.stop()
-val session = graft.Harness.session(4)
+val session = graft.Harness.session(cores)
 
 val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 session.sparkContext.addSparkListener(new SparkListener {
@@ -19,8 +20,11 @@ session.sparkContext.addSparkListener(new SparkListener {
     val i = e.stageInfo
     val w = i.taskMetrics.shuffleWriteMetrics
     val taskS = i.taskMetrics.executorRunTime / 1000.0
-    if (w.bytesWritten > 0) stages.add(f"stage ${i.stageId}%3d ${w.bytesWritten / 1048576.0}%7.2f MB " +
-      f"${w.recordsWritten}%8d records ${i.numTasks}%4d tasks ${taskS}%6.2f task_s")
+    val wallS = (for (s <- i.submissionTime; c <- i.completionTime) yield (c - s) / 1000.0)
+      .getOrElse(Double.NaN)
+    stages.add(f"stage ${i.stageId}%3d ${w.bytesWritten / 1048576.0}%7.2f MB " +
+      f"${w.recordsWritten}%8d records ${i.numTasks}%4d tasks ${taskS}%6.2f task_s " +
+      f"${wallS}%6.2f wall_s ${i.name}")
   }
 })
 (1 to reps).foreach { rep =>
