@@ -103,8 +103,7 @@ object Caches {
     * block-manager scan. 256 MB: at sf0.1 a whole query's broadcasts
     * are a few MB — the pass stays free; at scale corpora one
     * estimate-trap relation alone exceeds it. */
-  private val ReclaimThresholdBytes: Long =
-    Config.envBytes("GRAFT_BCAST_RECLAIM_MB", 1024L * 1024, "MB", 256L * 1024 * 1024)
+  private val ReclaimThresholdBytes: Long = 256L * 1024 * 1024
 
   /** Between-query broadcast hygiene (r13 scale diagnosis, layer 2).
     *

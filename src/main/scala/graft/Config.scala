@@ -86,18 +86,6 @@ object Config {
     }
   }
 
-  /** A byte-size deployment knob: environment variable `name` holds a
-    * whole number of `unitName`s (`unitBytes` each); unset means
-    * `default` bytes. A malformed value fails HERE, naming the
-    * variable — parsed inside an object initializer, a bare `toLong`
-    * would surface as an ExceptionInInitializerError far from it. */
-  def envBytes(name: String, unitBytes: Long, unitName: String, default: Long,
-               env: collection.Map[String, String] = sys.env): Long =
-    env.get(name).fold(default) { v =>
-      v.trim.toLongOption.map(_ * unitBytes).getOrElse(throw new IllegalArgumentException(
-        s"$name must be a whole number of $unitName, got '$v'"))
-    }
-
   /** Zero-padded signature column name, stable sort order. */
   def sigCol(i: Int): String = f"sig_$i%02d"
 }

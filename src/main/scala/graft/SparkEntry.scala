@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.operators._
 import graft.oracle.Sql
+import graft.sources.Snapshots.scratchDir
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder
   * prompt. Every operator from SURVEY.md §2 (and the north-star
@@ -286,7 +287,7 @@ object SparkEntry {
     // rows-only: same quantizer served from a persisted parquet model
     // artifact (fit-once/serve-many — loads if present, else fits+saves)
     "ann_ivf_persisted" -> ((s, d) => EmbeddingSim.ivfTopKPersisted(emb(s, d),
-      s"${sys.props("java.io.tmpdir")}/graft_ivf_model_${d.replaceAll("[^a-zA-Z0-9]", "_")}")),
+      scratchDir("ivf_model", d))),
     // rows-only: INCREMENTAL index lifecycle — fit+build the cell
     // table on 90% of the vectors, append the held-out 10% to their
     // nearest persisted centroid (no refit; drift-gated), probe from
@@ -294,9 +295,8 @@ object SparkEntry {
     "ann_ivf_append" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val all = emb(s, d)
-      val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
-      val modelDir = s"${sys.props("java.io.tmpdir")}/graft_ivf_apd_model_$tag"
-      val indexDir = s"${sys.props("java.io.tmpdir")}/graft_ivf_apd_index_$tag"
+      val modelDir = scratchDir("ivf_apd_model", d)
+      val indexDir = scratchDir("ivf_apd_index", d)
       EmbeddingSim.ivfIndexBuild(all.filter(col("vec_id") % 10 =!= 0), modelDir, indexDir)
       EmbeddingSim.ivfAppend(all.filter(col("vec_id") % 10 === 0), modelDir, indexDir, batchId = 1L)
       EmbeddingSim.ivfProbeIndex(all.filter(col("vec_id") % 100 === 0), modelDir, indexDir,
@@ -424,14 +424,14 @@ object SparkEntry {
     // (quoting, header, type parse) — oracle replays the identity
     "csv_roundtrip" -> ((s, d) => {
       val df = docs(s, d).select("doc_id", "lang", "source", "text")
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_csv_rt_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val dir = scratchDir("csv_rt", d)
       graft.sources.Sinks.writeCsvWithHeader(df, dir)
       graft.sources.Sources.readCsv(s, dir, df.schema)
     }),
     // same round trip through the JSONL sink/source pair
     "jsonl_roundtrip" -> ((s, d) => {
       val df = docs(s, d).select("doc_id", "lang", "source", "text")
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_jsonl_rt_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val dir = scratchDir("jsonl_rt", d)
       df.write.mode("overwrite").json(dir)
       graft.sources.Sources.readJsonl(s, dir, df.schema)
     }),
@@ -552,7 +552,7 @@ object SparkEntry {
     // through the modern connector API
     "dsv2_text_scan" -> ((s, d) => {
       val df = docs(s, d).select("doc_id", "text")
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_dsv2_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val dir = scratchDir("dsv2", d)
       // the V2 WRITE path (two-phase task commit), then the V2 read
       df.write.format("graft.sources.v2.DocsTextSource")
         .mode("overwrite").save(dir)
@@ -563,7 +563,7 @@ object SparkEntry {
     // and through the ORC sink/source pair (schema rides the footers)
     "orc_roundtrip" -> ((s, d) => {
       val df = docs(s, d).select("doc_id", "lang", "source", "text")
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_orc_rt_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val dir = scratchDir("orc_rt", d)
       graft.sources.Sinks.writeOrc(df, dir)
       graft.sources.Sources.readOrc(s, dir).select("doc_id", "lang", "source", "text")
     }),

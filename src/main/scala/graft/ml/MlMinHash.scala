@@ -5,7 +5,7 @@ import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Config
-import graft.operators.Shingling
+import graft.operators.{MinHashLsh, Shingling}
 
 /** Pillar B (BASELINE.json "DataFrame + MLlib LSH"): the same
   * near-duplicate computation through MLlib's library-grade
@@ -115,7 +115,8 @@ object MlMinHash {
     * corpus (background J≈0.46) — quadratic. Here the SAME MLlib hash
     * family (`MinHashLSH.fit(...).transform`) is AND-OR banded like
     * pillar A: bands compound keys of rowsPerBand consecutive hash
-    * values, candidates from the (band, key) equi-join, exact vector
+    * values, candidates from the (band, key) self-join
+    * (MinHashLsh.bandPairs, string keys), exact vector
     * Jaccard on survivors. With (b=10, r=6) the background admit rate
     * drops to ~1-(1-0.46^6)^10 ≈ 9% while J=0.8 pairs keep ≈ 95%
     * recall — the same S-curve as pillar A, so the full corpus is
@@ -164,8 +165,6 @@ object MlMinHash {
       .select(col("doc_id"),
         posexplode(array(bandKeys: _*)).as(Seq("band", "band_key")))
       .graftCheckpoint()
-    val l = banded.select(col("band"), col("band_key"), col("doc_id").as("id_l"))
-    val r = banded.select(col("band"), col("band_key"), col("doc_id").as("id_r"))
     // Verify currency: each doc's sorted feature-index set, extracted
     // ONCE per doc (r14 — the per-PAIR vector udf re-extracted both
     // sides' indices for every one of the ~1M candidates; the banded
@@ -181,8 +180,7 @@ object MlMinHash {
       }
     }
     val docIdx = vecs.select(col("doc_id"), idxOf(col("features")).as("ix"))
-    l.join(r, Seq("band", "band_key"))
-      .filter(col("id_l") < col("id_r"))
+    MinHashLsh.bandPairs(banded, banded, col("id_l") < col("id_r"))
       .select("id_l", "id_r").distinct()
       .join(docIdx.select(col("doc_id").as("id_l"), col("ix").as("ix_l")), "id_l")
       .join(docIdx.select(col("doc_id").as("id_r"), col("ix").as("ix_r")), "id_r")

@@ -34,8 +34,6 @@ object CatalogStats {
     * estimate is dramatically below the raw scan estimate. */
   val PriceFloor: Double = 499000.0
 
-  private def tag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
-
   /** Register `orders`/`customer` for `dir` as external catalog
     * tables and ANALYZE them (table row count + per-column min/max/
     * ndv/null counts), once per session. The scan is one pass per
@@ -52,7 +50,7 @@ object CatalogStats {
   def ensureAnalyzedTables(spark: SparkSession, dir: String,
                            names: Seq[String]): Seq[String] =
     names.map { src =>
-      val t = s"${src}_cbo_${tag(dir)}"
+      val t = s"${src}_cbo_${graft.sources.Snapshots.tag(dir)}"
       if (!spark.catalog.tableExists(t)) {
         spark.sql(s"CREATE TABLE $t USING parquet LOCATION '$dir/$src.parquet'")
         spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS")

@@ -26,9 +26,9 @@ import graft.functions.PortableHash
   * Scale design (100 TB): the embedding is one hash-agg (64
   * conditional integer sums — map-side partial, same shape as the
   * minhash agg); candidates come from equi-joins on (table, bucket),
-  * never an all-pairs compare; the 64-dim dense vectors (~0.5 KB)
-  * are carried only through the bucket join of co-bucketed rows.
-  * Degenerate buckets are cappable exactly like the minhash path.
+  * never an all-pairs compare (the shared LSH bucket self-join,
+  * MinHashLsh.bandPairs); the 64-dim dense vectors (~0.5 KB) join
+  * back only to the candidate pairs.
   */
 object DocEmbedding {
   /** Embedding dimension (hashing-trick target). */
@@ -103,29 +103,15 @@ object DocEmbedding {
     * (distinct across tables), exact cosine ≥ threshold.
     * Output: id_l, id_r, cosine. */
   def dedupPairs(docs: DataFrame, k: Int = Config.K,
-                 threshold: Double = CosThreshold,
-                 maxBucket: Option[Int] = None): DataFrame = {
+                 threshold: Double = CosThreshold): DataFrame = {
     val emb = featureEmbed(docs, k).graftCheckpoint()
-    val b0 = embedBuckets(emb)
-    // degenerate-bucket guard (same policy as the minhash path's
-    // candidatePairs(maxBucket)): a sign-bucket shared by millions of
-    // near-identical docs would go quadratic — cap it; default off so
-    // oracle semantics stay exact
-    val b = maxBucket match {
-      case Some(m) =>
-        val sizes = b0.groupBy("tbl", "bucket").agg(count(lit(1)).as("bucket_n"))
-        b0.join(sizes.filter(col("bucket_n") <= m), Seq("tbl", "bucket"))
-          .select("doc_id", "tbl", "bucket")
-      case None => b0
-    }
+    val b = embedBuckets(emb)
     // raw pair stream (a pair repeats once per co-bucketed table,
     // <= Tables times): cheaper to re-verify duplicates with the
     // native dot than to pay a DISTINCT shuffle over millions of
     // candidates — dedup runs on the tiny verified output instead
-    val cand = b.select(col("tbl"), col("bucket"), col("doc_id").as("id_l"))
-      .join(b.select(col("tbl"), col("bucket"), col("doc_id").as("id_r")),
-        Seq("tbl", "bucket"))
-      .filter(col("id_l") < col("id_r"))
+    val cand = MinHashLsh.bandPairs(b, b, col("id_l") < col("id_r"),
+        keys = Seq("tbl", "bucket"))
       .select("id_l", "id_r")
     val v = withVec(emb)
     val dot = dotL(col("l.vec"), col("r.vec"))

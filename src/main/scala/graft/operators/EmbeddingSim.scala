@@ -150,9 +150,16 @@ object EmbeddingSim {
   /** Brute-force cosine top-k: for each query vector (vec_id % 100
     * == 0), the k nearest other vectors by cosine. Query set is
     * broadcast; ranking window is per-query (tiny partitions). */
-  def cosineTopK(emb: DataFrame, k: Int = 5): DataFrame = {
+  def cosineTopK(emb: DataFrame, k: Int = 5): DataFrame =
+    topKByCosine(cosineScored(emb), k)
+
+  /** The one cosine top-k tail: per query_id, the k (query_id,
+    * neighbor_id, cosine) rows of highest cosine, ties to the lower
+    * neighbor_id, ranked from 1 — (query_id, neighbor_id, rank,
+    * cosine). */
+  private def topKByCosine(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    cosineScored(emb).withColumn("rank", row_number().over(w).cast("long"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank", "cosine")
   }
@@ -353,10 +360,7 @@ object EmbeddingSim {
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("q_emb"), col("n_emb")).as("cosine"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    topKByCosine(scored, k)
   }
 
   /** IVF-style ANN: a seeded KMeans coarse quantizer assigns each
@@ -535,7 +539,7 @@ object EmbeddingSim {
     val sig = graft.Caches.dataSignature(emb)
     val tag = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(sig))
-    val baseDir = s"${sys.props("java.io.tmpdir")}/graft_ivf_maint_$tag"
+    val baseDir = graft.sources.Snapshots.scratchDir("ivf_maint", tag)
     val (modelDir, indexDir, tombDir) =
       (s"$baseDir/model", s"$baseDir/index", s"$baseDir/tomb")
     val f = graft.sources.Snapshots.fs(spark, baseDir)
@@ -662,10 +666,7 @@ object EmbeddingSim {
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("q_emb"), col("n_emb")).as("cosine"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    topKByCosine(scored, k)
   }
 
   /** LSH-bucketed ANN top-k: rank by cosine only within each
@@ -680,10 +681,7 @@ object EmbeddingSim {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("q_emb"), col("n_emb")).as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    topKByCosine(scored, k)
   }
 
   /** Per-vector symmetric int8 quantization — the serving-side
@@ -697,32 +695,28 @@ object EmbeddingSim {
     * all-zero codes under scale 1. */
   def quantizeInt8(emb: DataFrame): DataFrame = {
     val v = col("embedding")
-    val maxAbs = aggregate(v, lit(0.0),
-      (acc, x) => greatest(acc, abs(x.cast("double"))))
-    val scale = when(maxAbs > lit(0.0), lit(127.0) / maxAbs).otherwise(lit(1.0))
     // one row per (vector, component): scalar columns hash/compare
     // cleanly in both engines (an int8[] column would not), and the
     // exploded form is what an int-dot-product consumer joins on
-    emb.select(col("vec_id"), scale.as("q_scale"),
-        posexplode(transform(v, x =>
-          floor(x.cast("double") * scale + lit(0.5)).cast("long"))))
+    emb.select(col("vec_id"), int8Scale(v).as("q_scale"), posexplode(int8Codes(v)))
       .select(col("vec_id"), col("q_scale"),
         col("pos").cast("long").as("idx"), col("col").as("code"))
   }
 
-  /** Per-label (cluster/source) centroid similarity matrix — the
-    * corpus-composition diagnostic ("which groups of embeddings look
-    * alike") behind mixing and pruning decisions. Vectors are int8-
-    * quantized (the quantizeInt8 formulation), then the centroid of a
-    * label is the INTEGER component-wise sum of codes — exact and
-    * order-independent, so a float-sum nondeterminism can never leak
-    * into the result. Dot products and squared norms between
-    * centroids stay in BIGINT (|csum| <= 127·n_vecs, so the products
-    * fit 2^63 up to ~10^8 vectors per label); the only float is the
-    * final mirrored cosine expression. Scale: the per-(label,idx) agg
-    * is map-side combinable over the corpus; everything after runs on
-    * the |labels|×dim centroid table, which is broadcast-sized by
-    * construction (labels = sources/clusters, not docs). */
+  /** The int8 scale of vector `v`: 127/max|v_i|, 1 for a zero vector. */
+  private def int8Scale(v: Column): Column = {
+    val maxAbs = aggregate(v, lit(0.0),
+      (acc, x) => greatest(acc, abs(x.cast("double"))))
+    when(maxAbs > lit(0.0), lit(127.0) / maxAbs).otherwise(lit(1.0))
+  }
+
+  /** The one int8 code expression: floor(v_i·[[int8Scale]] + 0.5) per
+    * component of `v`, in order (see [[quantizeInt8]]). */
+  private def int8Codes(v: Column): Column = {
+    val scale = int8Scale(v)
+    transform(v, x => floor(x.cast("double") * scale + lit(0.5)).cast("long"))
+  }
+
   /** Outliers per label — shared with the oracle. */
   val OutlierTopK: Int = 3
 
@@ -740,14 +734,8 @@ object EmbeddingSim {
     * and the |labels| counts; the final top-k window is per-label and
     * group-limit-pushed. */
   def embedOutliers(emb: DataFrame, topK: Int = OutlierTopK): DataFrame = {
-    val v = col("embedding")
-    val maxAbs = aggregate(v, lit(0.0),
-      (acc, x) => greatest(acc, abs(x.cast("double"))))
-    val scale = when(maxAbs > lit(0.0), lit(127.0) / maxAbs).otherwise(lit(1.0))
     val codes = emb.select(col("label").cast("long").as("label"),
-        col("vec_id"),
-        posexplode(transform(v, x =>
-          floor(x.cast("double") * scale + lit(0.5)).cast("long"))))
+        col("vec_id"), posexplode(int8Codes(col("embedding"))))
       .select(col("label"), col("vec_id"), col("pos").cast("long").as("idx"),
         col("col").as("code"))
       .graftCheckpoint() // three consumers: centroids, counts, deviations
@@ -765,14 +753,22 @@ object EmbeddingSim {
       .filter(col("rank") <= topK)
   }
 
+  /** Per-label (cluster/source) centroid similarity matrix — the
+    * corpus-composition diagnostic ("which groups of embeddings look
+    * alike") behind mixing and pruning decisions. Vectors are int8-
+    * quantized (the quantizeInt8 formulation), then the centroid of a
+    * label is the INTEGER component-wise sum of codes — exact and
+    * order-independent, so a float-sum nondeterminism can never leak
+    * into the result. Dot products and squared norms between
+    * centroids stay in BIGINT (|csum| <= 127·n_vecs, so the products
+    * fit 2^63 up to ~10^8 vectors per label); the only float is the
+    * final mirrored cosine expression. Scale: the per-(label,idx) agg
+    * is map-side combinable over the corpus; everything after runs on
+    * the |labels|×dim centroid table, which is broadcast-sized by
+    * construction (labels = sources/clusters, not docs). */
   def centroidSim(emb: DataFrame): DataFrame = {
-    val v = col("embedding")
-    val maxAbs = aggregate(v, lit(0.0),
-      (acc, x) => greatest(acc, abs(x.cast("double"))))
-    val scale = when(maxAbs > lit(0.0), lit(127.0) / maxAbs).otherwise(lit(1.0))
     val codes = emb.select(col("label").cast("long").as("label"),
-        posexplode(transform(v, x =>
-          floor(x.cast("double") * scale + lit(0.5)).cast("long"))))
+        posexplode(int8Codes(col("embedding"))))
       .select(col("label"), col("pos").cast("long").as("idx"),
         col("col").as("code"))
     val cent = codes.groupBy("label", "idx")

@@ -198,8 +198,7 @@ object IncrementalIngest {
   def evolvedIngestStats(spark: org.apache.spark.sql.SparkSession,
                          dir: String): DataFrame = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val root = s"${sys.props("java.io.tmpdir")}/graft_evolve_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_")
+    val root = graft.sources.Snapshots.scratchDir("evolve", dir)
     // batch 0: landed before the pipeline tracked language
     docs.filter(col("doc_id") % 2 === 0)
       .select("doc_id", "source", "n_chars")

@@ -25,7 +25,10 @@ import graft.functions.PortableHash
   *   - Every band key is the band's 24-byte slice of the packed
   *     signature (4 bytes per component, see [[bands]]): one explode
   *     builds every band row and one self-join ([[bandPairs]]) joins
-  *     them on (band, key). similarPairs' prefilter joins on an
+  *     them on (band, key). That self-join is also the bucket join of
+  *     every other LSH family (SimHash blocks, embedding sign-LSH
+  *     tables, MLlib bands), and [[capBuckets]] is the one bucket-size
+  *     cap. similarPairs' prefilter joins on an
   *     8-byte hash of (band, key) instead ([[bucketPairs]]) and its
   *     verify drops hash collisions with an exact whole-band test on
   *     the signatures ([[sharesBand]]), so its pairs are the exact
@@ -40,9 +43,10 @@ import graft.functions.PortableHash
   * (see [[signatures]]; no shuffle, no per-doc state). Skewed
   * LSH buckets (a band value shared by millions of docs) make the
   * self-join quadratic in the bucket. Only the public
-  * `candidatePairs(maxBucket=...)` caps bucket size, and it does so
-  * lossily (drops degenerate buckets like stop-shingle clusters).
-  * similarPairs has no cap, and AQE's skew-join split does not help
+  * `candidatePairs(maxBucket=...)` and the capped band index cap
+  * bucket size ([[capBuckets]]), and they do so lossily (drop
+  * degenerate buckets like stop-shingle clusters). similarPairs has
+  * no cap, and AQE's skew-join split does not help
   * it either: a hot bucket's rows are far below the split's byte
   * trigger, and one key's pairs stay in one task. Lossless splitting
   * of hot buckets is open (ROADMAP item 3). Nothing is ever
@@ -227,19 +231,24 @@ object MinHashLsh {
     concat_ws(",", (0 until Config.RowsPerBand).map(i =>
       conv(hex(substring(key, 4 * i + 1, 4)), 16, 10)): _*)
 
-  /** The one band self-join: pairs of `left` and `right` band rows
-    * (doc_id, keys…, payload…) sharing `keys` — (band, band_key), or
-    * [[bucketPairs]]' one bucket — and meeting `idCond` and `residual`,
-    * both over the renamed columns: doc_id → id_l/id_r, payload p →
-    * p_l/p_r, right key k → k_r. Distinct names keep the equi-keys
-    * unambiguous at construction (a same-name self-join condition
-    * WARNs on every run). The residual runs inside the join, so the
-    * raw pair stream never materializes; `pinMerge` pins sort-merge
-    * (see [[payloadSide]]). */
-  private def bandPairs(left: DataFrame, right: DataFrame, idCond: Column,
-                        residual: Column = lit(true),
-                        pinMerge: Boolean = false,
-                        keys: Seq[String] = Seq("band", "band_key")): DataFrame = {
+  /** The one LSH bucket self-join: pairs of `left` and `right` rows
+    * (doc_id, keys…, payload…) sharing `keys` and meeting `idCond` and
+    * `residual`, both over the renamed columns: doc_id → id_l/id_r,
+    * payload p → p_l/p_r, right key k → k_r. Every LSH family pairs
+    * its buckets here: MinHash bands on (band, band_key) or
+    * [[bucketPairs]]' one bucket, MLlib MinHash bands on (band,
+    * band_key) with string keys (MlMinHash.pairsBanded), SimHash
+    * blocks on (blk, bval) (TextAnalysis.simHashPairs) and embedding
+    * sign-LSH tables on (tbl, bucket) (DocEmbedding.dedupPairs). Each
+    * caller keeps its own pair dedupe. Distinct names keep the
+    * equi-keys unambiguous at construction (a same-name self-join
+    * condition WARNs on every run). The residual runs inside the join,
+    * so the raw pair stream never materializes; `pinMerge` pins
+    * sort-merge (see [[payloadSide]]). */
+  private[graft] def bandPairs(left: DataFrame, right: DataFrame, idCond: Column,
+                               residual: Column = lit(true),
+                               pinMerge: Boolean = false,
+                               keys: Seq[String] = Seq("band", "band_key")): DataFrame = {
     def side(df: DataFrame, keySuffix: String, suffix: String): DataFrame = {
       val payload = df.columns.filterNot(keys.toSet + "doc_id")
       val s = df.select(keys.map(k => col(k).as(k + keySuffix)) ++
@@ -291,10 +300,24 @@ object MinHashLsh {
       .reduce(_ || _)
   }
 
+  /** The one bucket-size cap: the (doc_id, band, band_key) rows of `b`
+    * whose (band, band_key) bucket holds at most `maxBucket` rows, or
+    * `b` itself when no cap is set. A degenerate-bucket guard for
+    * scale (a stop-shingle cluster goes quadratic in the self-join),
+    * lossy by design: a dropped bucket's pairs are gone. Callers:
+    * [[candidatesFromBands]] per query and the capped band index
+    * (sources.BandIndex) at build time. */
+  private[graft] def capBuckets(b: DataFrame, maxBucket: Option[Int]): DataFrame =
+    maxBucket.fold(b) { m =>
+      val sizes = b.groupBy("band", "band_key").agg(count(lit(1)).as("bucket_n"))
+      b.join(sizes.filter(col("bucket_n") <= m), Seq("band", "band_key"))
+        .select("doc_id", "band", "band_key")
+    }
+
   /** Distinct candidate pairs (id_l < id_r) from the band self-join.
     * maxBucket: if set, buckets larger than this are dropped before
-    * pairing (degenerate-bucket guard for scale; default off so the
-    * oracle semantics stay exact). */
+    * pairing ([[capBuckets]]; default off so the oracle semantics stay
+    * exact). */
   def candidatePairs(docs: DataFrame, k: Int = Config.K,
                      maxBucket: Option[Int] = None): DataFrame =
     candidatesFromBands(bands(docs, k), maxBucket)
@@ -302,15 +325,8 @@ object MinHashLsh {
   /** [[candidatePairs]] over an already-banded frame. */
   def candidatesFromBands(b: DataFrame,
                           maxBucket: Option[Int] = None): DataFrame = {
-    requirePackedKey(b)
-    val bounded = maxBucket match {
-      case Some(m) =>
-        val sizes = b.groupBy("band", "band_key").agg(count(lit(1)).as("bucket_n"))
-        b.join(sizes.filter(col("bucket_n") <= m), Seq("band", "band_key"))
-          .select("doc_id", "band", "band_key")
-      case None => b
-    }
-    bandPairs(bounded, bounded, col("id_l") < col("id_r"))
+    val capped = capBuckets(requirePackedKey(b), maxBucket)
+    bandPairs(capped, capped, col("id_l") < col("id_r"))
       .select("id_l", "id_r")
       .distinct()
   }

@@ -332,8 +332,7 @@ object TextAnalysis {
     * per-block equi-joins (never an all-pairs compare); verify with
     * bit_count(xor) <= maxHamming.
     * Output: id_l, id_r, hamming. */
-  def simHashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   maxBucket: Option[Int] = None): DataFrame = {
+  def simHashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val bits = 30
     val nBlocks = maxHamming + 1
     // fingerprint frame feeds the block explode AND both verify sides
@@ -344,25 +343,13 @@ object TextAnalysis {
       struct(lit(i).as("blk"),
         shiftright(col("simhash"), los(i)).bitwiseAND(lit((1L << widths(i)) - 1)).as("bval"))
     }
-    val banded0 = fp.select(col("doc_id"), explode(array(bstructs: _*)).as("b"))
+    val banded = fp.select(col("doc_id"), explode(array(bstructs: _*)).as("b"))
       .select(col("doc_id"), col("b.blk").as("blk"), col("b.bval").as("bval"))
-    // degenerate-block guard (a block value shared by a huge cluster
-    // of near-identical fingerprints goes quadratic); default off so
-    // oracle semantics stay exact
-    val banded = maxBucket match {
-      case Some(m) =>
-        val sizes = banded0.groupBy("blk", "bval").agg(count(lit(1)).as("bucket_n"))
-        banded0.join(sizes.filter(col("bucket_n") <= m), Seq("blk", "bval"))
-          .select("doc_id", "blk", "bval")
-      case None => banded0
-    }
     // raw pair stream (<= nBlocks repeats per pair): the bit_count
     // verify is cheaper than a DISTINCT shuffle over all candidates;
     // dedup runs on the tiny verified output
-    val cand = banded.select(col("blk"), col("bval"), col("doc_id").as("id_l"))
-      .join(banded.select(col("blk"), col("bval"), col("doc_id").as("id_r")),
-        Seq("blk", "bval"))
-      .filter(col("id_l") < col("id_r"))
+    val cand = MinHashLsh.bandPairs(banded, banded, col("id_l") < col("id_r"),
+        keys = Seq("blk", "bval"))
       .select("id_l", "id_r")
     cand
       .join(fp.select(col("doc_id"), col("simhash").as("f_l")), col("id_l") === col("doc_id"))

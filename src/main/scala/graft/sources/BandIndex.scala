@@ -41,17 +41,15 @@ object BandIndex {
         (corpusDocs + DocsPerBucket - 1) / DocsPerBucket)).toInt
 
 
-  private def tag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
-
   /** Stop-band cap used by the capped index variant — the same 20
     * as candidate_pairs_capped (max sf0.01 bucket is 58, so the cap
     * genuinely bites at the oracle sf). */
   val DefaultMaxBucket = 20
 
-  /** Write the corpus band index ONCE, bucketed on the probe key (no
-    * sortBy, see [[writeBucketedIndex]]). With `maxBucket` set,
-    * degenerate band buckets (occupancy > cap) are dropped AT BUILD
-    * TIME — stop-band removal, the production answer to the
+  /** Write the corpus band index ONCE, bucketed on the probe key
+    * ([[writeBucketedIndex]]). With `maxBucket` set, degenerate band
+    * buckets (occupancy > cap, MinHashLsh.capBuckets) are dropped AT
+    * BUILD TIME — stop-band removal, the production answer to the
     * adversarial-corpus funnel DESIGN "Scale pass 4" measured: junk
     * keys never enter the index, so no probe ever pays for them (the
     * flat path's candidate_pairs_capped applies the same cap per
@@ -60,30 +58,15 @@ object BandIndex {
     * discipline. */
   def ensureBandIndexTable(spark: SparkSession, dir: String,
                            maxBucket: Option[Int] = None): String = {
-    val t = s"graft_band_idx_${maxBucket.fold("")(m => s"c${m}_")}${tag(dir)}"
+    val t = s"graft_band_idx_${maxBucket.fold("")(m => s"c${m}_")}${Snapshots.tag(dir)}"
     if (!spark.catalog.tableExists(t)) {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_band_idx_" +
-        s"${maxBucket.fold("")(m => s"c${m}_")}${tag(dir)}"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
       val all = spark.read.parquet(s"$dir/documents.parquet")
       val corpus = all.filter(
         col("doc_id") < graft.operators.IncrementalIngest.frontierId(all))
       // one bounded scalar (the ZOrder.eventMaxes catalog-stats
       // justification) sizes the layout to the corpus
-      val buckets = bucketsFor(corpus.count())
-      val bandsDf = MinHashLsh.bands(corpus)
-      val pruned = maxBucket.fold(bandsDf) { m =>
-        val keep = bandsDf.groupBy("band", "band_key")
-          .agg(count(lit(1)).as("occ")).filter(col("occ") <= m)
-          .select("band", "band_key")
-        bandsDf.join(keep, Seq("band", "band_key"))
-      }
-      pruned
-        .repartition(buckets, col("band"), col("band_key"))
-        .write.mode("overwrite").format("parquet")
-        .option("path", s"$root/bands")
-        .bucketBy(buckets, "band", "band_key")
-        .saveAsTable(t)
+      writeBucketedIndex(MinHashLsh.capBuckets(MinHashLsh.bands(corpus), maxBucket), t,
+        bucketsFor(corpus.count()))
     }
     t
   }
@@ -92,13 +75,8 @@ object BandIndex {
     * (and oracle) as the flat q:`incremental_pairs`, but the index
     * side of the band join carries NO Exchange — only the arriving
     * batch is shuffled to the index's bucketing. */
-  def incrementalPairsBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val idx = spark.table(ensureBandIndexTable(spark, dir))
-    val all = spark.read.parquet(s"$dir/documents.parquet")
-    val batch = all.filter(
-      col("doc_id") >= graft.operators.IncrementalIngest.frontierId(all))
-    MinHashLsh.incrementalCandidates(idx, batch, mergeHint = true)
-  }
+  def incrementalPairsBucketed(spark: SparkSession, dir: String): DataFrame =
+    probeIndex(spark, dir, None)
 
   /** The probe off the STOP-BAND-CAPPED index: identical join, but
     * degenerate buckets were never written, so an adversarial key
@@ -106,8 +84,14 @@ object BandIndex {
     * (within-batch pairs are unaffected — the cap governs what the
     * INDEX serves, exactly like a search engine's stop-word list). */
   def incrementalPairsCapped(spark: SparkSession, dir: String,
-                             maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val idx = spark.table(ensureBandIndexTable(spark, dir, Some(maxBucket)))
+                             maxBucket: Int = DefaultMaxBucket): DataFrame =
+    probeIndex(spark, dir, Some(maxBucket))
+
+  /** The arriving batch of `dir` probed against its corpus band index,
+    * capped at `maxBucket` or not. */
+  private def probeIndex(spark: SparkSession, dir: String,
+                         maxBucket: Option[Int]): DataFrame = {
+    val idx = spark.table(ensureBandIndexTable(spark, dir, maxBucket))
     val all = spark.read.parquet(s"$dir/documents.parquet")
     val batch = all.filter(
       col("doc_id") >= graft.operators.IncrementalIngest.frontierId(all))
@@ -163,7 +147,7 @@ object BandIndex {
     * fingerprint-guarded skip path would silently probe a stale
     * table. */
   private def liveTableFor(name: String): String =
-    s"graft_band_live_${tag(name)}"
+    s"graft_band_live_${Snapshots.tag(name)}"
 
   /** Where a maintained index's tombstone sidecar lives by default:
     * next to the table under the session warehouse (durable — a
@@ -171,7 +155,7 @@ object BandIndex {
     * tmpdir). */
   private def defaultSidecarDir(spark: SparkSession, name: String): String = {
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    s"${wh.stripSuffix("/")}/graft_band_tomb_${tag(name)}"
+    s"${wh.stripSuffix("/")}/graft_band_tomb_${Snapshots.tag(name)}"
   }
 
   /** The in-memory catalog is per-SESSION but the warehouse dir is
@@ -187,10 +171,10 @@ object BandIndex {
         s"$wh/${table.toLowerCase(java.util.Locale.ROOT)}"), true)
     }
 
-  /** The maintained index's bucketed write recipe — its two call
-    * sites (build, compaction) must stay in lockstep or the
-    * zero-exchange probe property silently breaks for indexes built
-    * via the drifted path. No sortBy: the bucketed scan reports no
+  /** The one bucketed band-index write recipe — every index (the
+    * corpus index, capped or not, and the maintained index's build and
+    * compaction) is written here, so the zero-exchange probe property
+    * cannot drift between them. No sortBy: the bucketed scan reports no
     * output ordering (a bucket spans several files), so the probe's
     * sort-merge join sorts the index side anyway. */
   private def writeBucketedIndex(df: DataFrame, table: String,
@@ -327,7 +311,7 @@ object BandIndex {
     * stale band at its true text. */
   private def ensureBandFeedChain(spark: SparkSession, dir: String,
                                   want: String): String = {
-    val vroot = s"${sys.props("java.io.tmpdir")}/graft_bandfeed_${tag(dir)}"
+    val vroot = Snapshots.scratchDir("bandfeed", dir)
     if (!Snapshots.current(spark, vroot).exists(_.fingerprint == want)) {
       Snapshots.fs(spark, vroot)
         .delete(new org.apache.hadoop.fs.Path(vroot), true)
@@ -375,7 +359,7 @@ object BandIndex {
     val all = spark.read.parquet(s"$dir/documents.parquet")
     val batch = all.filter(
       col("doc_id") >= graft.operators.IncrementalIngest.frontierId(all))
-    val name = s"reg_${tag(dir)}"
+    val name = s"reg_${Snapshots.tag(dir)}"
     val table = liveTableFor(name)
     val tombDir = defaultSidecarDir(spark, name)
     val want =

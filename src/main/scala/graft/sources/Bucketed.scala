@@ -27,8 +27,6 @@ object Bucketed {
 
   val NumBuckets = 8
 
-  private def tag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
-
   /** Write orders + lineitem as bucketed tables (hash(orderkey) →
     * NumBuckets files, sorted within bucket), registered in the
     * session catalog with data at an external tmp path. Idempotent
@@ -39,10 +37,10 @@ object Bucketed {
     * on the bucket key first so each bucket is one file, not one per
     * input task. */
   def ensureOrderTables(spark: SparkSession, dir: String): (String, String) = {
-    val t = tag(dir)
+    val t = Snapshots.tag(dir)
     val oT = s"graft_orders_bkt_$t"
     val lT = s"graft_lineitem_bkt_$t"
-    val root = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$t"
+    val root = Snapshots.scratchDir("bucketed", dir)
     if (!spark.catalog.tableExists(oT)) {
       spark.sql(s"DROP TABLE IF EXISTS $oT")
       spark.read.parquet(s"$dir/orders.parquet")
@@ -120,7 +118,7 @@ object Bucketed {
     * fresh per call (overwrite), like the sink round-trip queries —
     * the write is part of the measured operator. */
   private def ensurePartitionedDocs(spark: SparkSession, dir: String): String = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_part_docs_${tag(dir)}"
+    val path = Snapshots.scratchDir("part_docs", dir)
     Sinks.writePartitionedParquet(
       spark.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "source", "n_chars", "lang"),
@@ -140,7 +138,7 @@ object Bucketed {
   def dppFamilyStats(spark: SparkSession, dir: String,
                      family: String = "cjk"): DataFrame = {
     val docsPath = ensurePartitionedDocs(spark, dir)
-    val dimPath = s"${sys.props("java.io.tmpdir")}/graft_lang_dim_${tag(dir)}"
+    val dimPath = Snapshots.scratchDir("lang_dim", dir)
     import spark.implicits._
     Seq("de" -> "latin", "en" -> "latin", "es" -> "latin",
       "fr" -> "latin", "zh" -> "cjk")

@@ -66,9 +66,7 @@ object Compaction {
   def targetFileBytes(totalBytes: Long): Long =
     math.min(CapFileBytes, math.max(FloorFileBytes, totalBytes / 64))
 
-  private def tag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
-  private def root(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_compact_${tag(dir)}"
+  private def root(dir: String): String = Snapshots.scratchDir("compact", dir)
 
   /** The fragmented landing layout: documents hash-scattered across
     * [[FragmentFiles]] writer tasks, i.e. the worst-case small-files

@@ -1362,9 +1362,7 @@ object Merge {
 
   // ---- registered-query fixtures ------------------------------------
 
-  private def tag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
-  private def root(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_merge_${tag(dir)}"
+  private def root(dir: String): String = Snapshots.scratchDir("merge", dir)
 
   private def maxDocId(spark: SparkSession, dir: String): Long =
     spark.read.parquet(s"$dir/documents.parquet")

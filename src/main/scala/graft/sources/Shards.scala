@@ -22,7 +22,6 @@ import graft.operators.Sampling
   */
 object Shards {
 
-  private def tag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
 
   /** Write the shard-partitioned corpus once per SOURCE STATE, through
     * a [[Snapshots]] versioned commit: atomic publish (a reader never
@@ -33,7 +32,7 @@ object Shards {
   def ensureShardedTable(spark: SparkSession, dir: String): String = {
     val src = s"$dir/documents.parquet"
     Snapshots.ensure(spark,
-      s"${sys.props("java.io.tmpdir")}/graft_shards_${tag(dir)}",
+      Snapshots.scratchDir("shards", dir),
       Snapshots.fingerprint(spark, src)) { path =>
       val docs = spark.read.parquet(src)
       Sampling.shardAssign(docs)

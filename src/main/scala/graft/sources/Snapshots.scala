@@ -695,6 +695,17 @@ object Snapshots {
     if (stats.nonEmpty) stats.map(_.path) else Seq(snap.dataPath)
   }
 
+  /** `dir` as a name fragment: every non-alphanumeric character
+    * becomes `_`. Fixture tables and scratch directories built from a
+    * source directory carry it, so each source gets its own. */
+  private[graft] def tag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
+
+  /** The scratch directory of fixture `kind` built from source `dir`:
+    * `<java.io.tmpdir>/graft_<kind>_<tag(dir)>`. Its name depends on
+    * nothing else, so a later run (of any build) finds and reuses it. */
+  private[graft] def scratchDir(kind: String, dir: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_${kind}_${tag(dir)}"
+
   /** Digest of every file under `paths` (recursive): path, length,
     * modification time — the metadata a catalog already holds, so the
     * check is listing-sized, never data-sized. */

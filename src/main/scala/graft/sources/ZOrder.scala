@@ -47,7 +47,6 @@ object ZOrder {
   def norm16(x: Column, max: Long): Column =
     (x.cast("long") * 65536L) / (max + 1L)
 
-  private def tag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
 
   /** (max user_id, max event_id) of the raw events table — the
     * min/max stats a production catalog already has; one bounded
@@ -73,7 +72,7 @@ object ZOrder {
     val src = s"$dir/events.parquet"
     val (maxU, maxE) = eventMaxes(spark, dir)
     val data = Snapshots.ensure(spark,
-      s"${sys.props("java.io.tmpdir")}/graft_zorder_${tag(dir)}",
+      Snapshots.scratchDir("zorder", dir),
       Snapshots.fingerprint(spark, src)) { path =>
       val ev = spark.read.parquet(src)
       def write(df: DataFrame, sortCol: Column, p: String): Unit =

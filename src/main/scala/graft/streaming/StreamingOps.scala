@@ -161,24 +161,16 @@ object StreamingOps {
     * that rowwiseBands emits, so a pair's Jaccard is the batch
     * verify's double ([[graft.operators.Shingling.jaccard]]) bit for
     * bit. STATE-SCHEMA BREAK: a checkpoint whose state holds long sets
-    * (an older build's) does not resume here. `maxBucket` caps
-    * degenerate buckets the same way the batch path does, which also
-    * bounds state growth — a production deployment would add state TTL
-    * for unbounded streams.
-    * LOSSY once a bucket saturates: an arrival after the cap is still
-    * compared against the `maxBucket` STORED members, but it is not
-    * stored itself, so a pair between two post-cap arrivals in the
-    * same bucket is never emitted (the batch path with the same cap
-    * drops the whole bucket instead; here the default is also a cap
-    * of 64 while batch defaults to uncapped). Saturated-bucket
-    * arrivals are counted in the `graft.nearDup.saturatedArrivals`
-    * accumulator so operators can see when the cap is biting.
+    * (an older build's) does not resume here. Per-bucket state is
+    * unbounded — every arrival is stored, so every pair is emitted, as
+    * in the uncapped batch path; a production deployment would add
+    * state TTL for unbounded streams.
     * Output may repeat a pair discovered in several buckets within
     * one batch; downstream dedup is `dropDuplicates` on the sink
     * side (kept raw here to stay in append mode statelessly). */
   def nearDupStream(docs: org.apache.spark.sql.Dataset[(Long, String)],
-                    threshold: Double = graft.Config.Threshold,
-                    maxBucket: Int = 64): org.apache.spark.sql.Dataset[CandidatePair] = {
+                    threshold: Double = graft.Config.Threshold)
+      : org.apache.spark.sql.Dataset[CandidatePair] = {
     import graft.operators.MinHashLsh
     implicit val bmEnc = Encoders.product[BandMember]
     implicit val cpEnc = Encoders.product[CandidatePair]
@@ -194,9 +186,6 @@ object StreamingOps {
     // 9.7 → 5.0 s on the sf0.1 harness query (with long arrays)
     implicit val stEnc = Encoders.kryo[List[(Long, Array[Int])]]
 
-    val saturated =
-      docs.sparkSession.sparkContext.longAccumulator("graft.nearDup.saturatedArrivals")
-
     val banded = MinHashLsh.rowwiseBands(docs.toDF("doc_id", "text"))
       .as[BandMember]
 
@@ -210,18 +199,13 @@ object StreamingOps {
           rows.toSeq.sortBy(_.doc_id).foreach { m =>
             if (!members.exists(_._1 == m.doc_id)) {
               val hs = m.hset
-              // an arrival is compared against all STORED members; once
-              // the bucket is saturated the arrival itself is dropped
-              // (not stored), so pairs among post-cap arrivals are lost
-              // — see scaladoc
               members.foreach { case (oid, ohs) =>
                 val inter = sortedIntersectCount(hs, ohs)
                 val jac = inter.toDouble / (hs.length + ohs.length - inter)
                 if (jac >= threshold)
                   out += CandidatePair(math.min(oid, m.doc_id), math.max(oid, m.doc_id), jac)
               }
-              if (members.size < maxBucket) members = (m.doc_id, hs) :: members
-              else saturated.add(1L)
+              members = (m.doc_id, hs) :: members
             }
           }
           state.update(members)

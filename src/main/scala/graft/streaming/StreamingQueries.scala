@@ -472,10 +472,10 @@ object StreamingQueries {
   /** Near-duplicate pairs discovered ONLINE by nearDupStream (the
     * per-bucket stateful membership operator): docs arrive in doc_id
     * order across several micro-batches; a pair is emitted the
-    * moment its second member arrives. With an uncapped bucket the
-    * emitted set equals the batch band-collision candidates verified
-    * at exact hash-set Jaccard >= threshold — order-independent, so
-    * batch SQL replays it. A pair colliding in several buckets is
+    * moment its second member arrives. The emitted set equals the
+    * batch band-collision candidates verified at exact hash-set
+    * Jaccard >= threshold — order-independent, so batch SQL replays
+    * it. A pair colliding in several buckets is
     * emitted once per bucket; the final dropDuplicates is sink-side
     * dedup (jaccard is a function of the pair, so rows agree). */
   def streamNearDup(spark: SparkSession, sfDir: String,
@@ -492,8 +492,7 @@ object StreamingQueries {
       "graft_stream_near_dup", s"nd:$sfDir:$nChunks", stateParts = 16,
       widenTo = 16) { stream =>
       StreamingOps.nearDupStream(
-        stream.as[(Long, String)](Encoders.tuple(Encoders.scalaLong, Encoders.STRING)),
-        maxBucket = Int.MaxValue).toDF()
+        stream.as[(Long, String)](Encoders.tuple(Encoders.scalaLong, Encoders.STRING))).toDF()
     }.dropDuplicates("id_l", "id_r")
       .select("id_l", "id_r", "jaccard")
   }

@@ -78,8 +78,7 @@ class BucketedSpec extends SparkSpec {
 
   test("only matching language directories are read after pruning") {
     Bucketed.partitionPrunedStats(spark, Sf0001, langs = Seq("en"))
-    val path = s"${sys.props("java.io.tmpdir")}/graft_part_docs_" +
-      Sf0001.replaceAll("[^a-zA-Z0-9]", "_")
+    val path = graft.sources.Snapshots.scratchDir("part_docs", Sf0001)
     val pruned = spark.read.parquet(path).filter(col("lang") === "en")
     val files = pruned.queryExecution.executedPlan.collectLeaves().flatMap {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>

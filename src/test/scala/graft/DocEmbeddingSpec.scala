@@ -28,13 +28,6 @@ class DocEmbeddingSpec extends SparkSpec {
     assert(kept.toSeq == Seq(10L, 30L))
   }
 
-  test("maxBucket cap drops degenerate sign-buckets") {
-    val d = docsDf(10L -> "a completely unremarkable sentence about weather",
-      20L -> "a completely unremarkable sentence about weather")
-    assert(DocEmbedding.dedupPairs(d).count() == 1)
-    assert(DocEmbedding.dedupPairs(d, maxBucket = Some(1)).count() == 0)
-  }
-
   test("dissimilar texts produce no pairs") {
     val d = docsDf(1L -> "alpha beta gamma delta epsilon zeta",
       2L -> "one two three four five six seven")

@@ -82,6 +82,28 @@ class MinHashLshSpec extends SparkSpec {
     val uncapped = MinHashLsh.candidatePairs(many).count()
     assert(uncapped == 20L * 19 / 2)
     assert(capped == 0)
+    // beside the flood: near-dups, and buckets of exactly m and m + 1
+    // rows. The capped pairs are exactly those sharing a bucket of at
+    // most m rows in the collected bands.
+    val m = 5
+    val mixed = many.union(nearDup.withColumn("doc_id", col("doc_id") + 100))
+      .union(docsDf((201L to 205L).map(_ -> "five copies of this one text"): _*))
+      .union(docsDf((301L to 306L).map(_ -> "six copies of this other text"): _*))
+    val b = MinHashLsh.bands(mixed)
+    val rows = b.collect().map(r => (r.getLong(0), (r.getInt(1), r.getAs[Array[Byte]](2).toSeq)))
+    val members = rows.groupMap(_._2)(_._1).view.mapValues(_.toSeq).toMap
+    val keptRows = rows.filter(x => members(x._2).length <= m).toSet
+    val want = (for (ids <- members.values if ids.length <= m; l <- ids; r <- ids if l < r)
+      yield (l, r)).toSet
+    assert(want.contains((101L, 104L)) && want.contains((201L, 205L)) &&
+      !want.exists(_._1 > 300))
+    val got = MinHashLsh.candidatePairs(mixed, maxBucket = Some(m)).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == got.toSet.size && got.toSet == want)
+    // the rows the capped band index is written from
+    val kept = MinHashLsh.capBuckets(b, Some(m)).collect()
+      .map(r => (r.getLong(0), (r.getInt(1), r.getAs[Array[Byte]](2).toSeq))).toSet
+    assert(kept == keptRows)
   }
 
   test("group sketch UDAF equals per-column min of member signatures, repartition-invariant") {
@@ -416,7 +438,7 @@ class MinHashLshSpec extends SparkSpec {
     val batch = MinHashLsh.similarPairs(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingOps.nearDupStream(input.toDS(), maxBucket = Int.MaxValue)
+    val q = graft.streaming.StreamingOps.nearDupStream(input.toDS())
       .writeStream.format("memory").queryName("nd_jaccard").outputMode("append").start()
     val online = try {
       // two micro-batches: the flood's pairs span the stored state

@@ -156,15 +156,6 @@ class TextAnalysisSpec extends SparkSpec {
     }
   }
 
-  test("simhash maxBucket cap drops degenerate blocks") {
-    val d = docsDf(
-      1L -> "the quick brown fox jumps over the lazy dog tonight",
-      2L -> "the quick brown fox jumps over the lazy dog tonight")
-    assert(TextAnalysis.simHashPairs(d).count() == 1)
-    // both docs share every block -> bucket size 2 > cap 1 -> dropped
-    assert(TextAnalysis.simHashPairs(d, maxBucket = Some(1)).count() == 0)
-  }
-
   test("contaminationPairs flags only docs sharing enough n-grams with a benchmark doc") {
     // ids chosen so 0 and 97 are "benchmark" (id % 97 == 0)
     val d = docsDf(

@@ -4,6 +4,13 @@ oracle_sql.json statement in DuckDB over the same parquet tables and
 compare against the Verify parquet dumps (columns sorted by name,
 rows sorted, exact value compare with a bit-exactness report for
 floats). Usage: compare_oracle.py <sfDir> <verifyOutDir>
+
+With --against, compare two Verify runs instead of one run and the
+oracle: every dump present in both directories (rows-only queries
+included) is canonicalized the same way and compared exactly, printing
+IDENTICAL or DIFF per query; a dump only one run wrote is a DIFF.
+Exit status 1 on any DIFF. Usage:
+compare_oracle.py <verifyOutDir> --against <otherVerifyOutDir>
 """
 import sys, os, json, glob
 import duckdb
@@ -45,6 +52,55 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
 
+def read_dump(pdir):
+    return pd.concat([pd.read_parquet(f) for f in sorted(glob.glob(f"{pdir}/*.parquet"))],
+                     ignore_index=True)
+
+def diff_cols(s, d):
+    """Per-column differences of two canon()ed frames of equal shape."""
+    bad_cols = []
+    for c in s.columns:
+        sv, dv = s[c].to_numpy(), d[c].to_numpy()
+        if sv.dtype.kind == 'f' or dv.dtype.kind == 'f':
+            sv = sv.astype(np.float64); dv = dv.astype(np.float64)
+            eq = (sv == dv) | (np.isnan(sv) & np.isnan(dv))
+            if not eq.all():
+                mx = np.nanmax(np.abs(sv - dv))
+                bad_cols.append(f"{c} (float, {np.sum(~eq)} diffs, maxabs={mx:.3e})")
+        else:
+            sv = sv.astype(object); dv = dv.astype(object)
+            neq = np.array([a != b for a, b in zip(sv, dv)])
+            if neq.any():
+                i = int(np.argmax(neq))
+                bad_cols.append(f"{c} ({np.sum(neq)} diffs, first@{i}: {sv[i]!r} vs {dv[i]!r})")
+    return bad_cols
+
+def dumps(out_dir):
+    return {n for n in os.listdir(out_dir) if glob.glob(f"{out_dir}/{n}/*.parquet")}
+
+def compare_runs(out_dir, other_dir):
+    mine, other = dumps(out_dir), dumps(other_dir)
+    n_same = 0
+    # a dump only one run wrote (a query that failed or is new) is a DIFF
+    for name in sorted(mine ^ other):
+        print(f"DIFF      {name}: only in {out_dir if name in mine else other_dir}")
+    n_diff = len(mine ^ other)
+    for name in sorted(mine & other):
+        a = canon(read_dump(f"{out_dir}/{name}"))
+        b = canon(read_dump(f"{other_dir}/{name}"))
+        if list(a.columns) != list(b.columns):
+            why = [f"columns {list(a.columns)} vs {list(b.columns)}"]
+        elif len(a) != len(b):
+            why = [f"rows {len(a)} vs {len(b)}"]
+        else:
+            why = diff_cols(a, b)
+        if why:
+            print(f"DIFF      {name}: {'; '.join(why)}"); n_diff += 1
+        else:
+            print(f"IDENTICAL {name}: {len(a)} rows"); n_same += 1
+    print(f"\n{n_same} identical, {n_diff} diff")
+    return 1 if n_diff else 0
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -58,8 +114,7 @@ def main(sf_dir, out_dir):
         if not os.path.isdir(pdir):
             print(f"FAIL {name}: spark output missing"); n_bad += 1; continue
         try:
-            spark_df = pd.concat([pd.read_parquet(f) for f in sorted(glob.glob(f"{pdir}/*.parquet"))],
-                                 ignore_index=True)
+            spark_df = read_dump(pdir)
         except Exception as e:
             print(f"FAIL {name}: cannot read spark parquet: {e}"); n_bad += 1; continue
         try:
@@ -77,21 +132,7 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: columns spark={list(s.columns)} duck={list(d.columns)}"); n_bad += 1; continue
         if len(s) != len(d):
             print(f"FAIL {name}: rows spark={len(s)} duck={len(d)}"); n_bad += 1; continue
-        bad_cols = []
-        for c in s.columns:
-            sv, dv = s[c].to_numpy(), d[c].to_numpy()
-            if sv.dtype.kind == 'f' or dv.dtype.kind == 'f':
-                sv = sv.astype(np.float64); dv = dv.astype(np.float64)
-                eq = (sv == dv) | (np.isnan(sv) & np.isnan(dv))
-                if not eq.all():
-                    mx = np.nanmax(np.abs(sv - dv))
-                    bad_cols.append(f"{c} (float, {np.sum(~eq)} diffs, maxabs={mx:.3e})")
-            else:
-                sv = sv.astype(object); dv = dv.astype(object)
-                neq = np.array([a != b for a, b in zip(sv, dv)])
-                if neq.any():
-                    i = int(np.argmax(neq))
-                    bad_cols.append(f"{c} ({np.sum(neq)} diffs, first@{i}: {sv[i]!r} vs {dv[i]!r})")
+        bad_cols = diff_cols(s, d)
         if bad_cols:
             print(f"FAIL {name}: {'; '.join(bad_cols)}"); n_bad += 1
         else:
@@ -100,4 +141,9 @@ def main(sf_dir, out_dir):
     return 1 if n_bad else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    args = sys.argv[1:]
+    if len(args) == 3 and args[1] == "--against":
+        sys.exit(compare_runs(args[0], args[2]))
+    if len(args) != 2:
+        sys.exit(__doc__)
+    sys.exit(main(args[0], args[1]))
