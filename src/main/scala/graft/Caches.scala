@@ -59,6 +59,21 @@ object Caches {
           "registration would leak its blocks past releaseAll")
     }
 
+  /** Memory + disk bytes of checkpoint `cp`'s stored blocks — the
+    * MEASURED size of a materialized frame, where a plan estimate of
+    * it can be off by the corpus payload's expansion (see
+    * MinHashLsh.PayloadExpansion). A driver-side read of block-manager
+    * status: runs no job. A released checkpoint reads 0, so a decision
+    * made on it never rests on stale blocks. Throws on a frame that is
+    * not a checkpoint: it has no stored blocks to measure. */
+  def storedBytes(cp: Dataset[_]): Long = {
+    import org.apache.spark.sql.graft.Bridge
+    val id = Bridge.checkpointRddId(cp).getOrElse(throw new IllegalArgumentException(
+      "storedBytes needs a graft checkpoint (its plan must be a LogicalRDD), got a " +
+        cp.queryExecution.logical.nodeName + " plan"))
+    Bridge.rddStoredBytes(id)
+  }
+
   /** PINNED local checkpoint for session caches (AnnRecall's exact
     * baselines): same materialization, but the ids are returned to
     * the CALLER (who owns eviction) instead of entering the

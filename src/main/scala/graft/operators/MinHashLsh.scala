@@ -4,7 +4,7 @@ import graft.Caches.CheckpointSyntax
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
-import graft.Config
+import graft.{Caches, Config}
 import graft.functions.PortableHash
 
 /** MinHash signatures + LSH banding + candidate generation + exact
@@ -49,8 +49,14 @@ import graft.functions.PortableHash
   * no cap, and AQE's skew-join split does not help
   * it either: a hot bucket's rows are far below the split's byte
   * trigger, and one key's pairs stay in one task. Lossless splitting
-  * of hot buckets is open (ROADMAP item 3). Nothing is ever
-  * collected to the driver.
+  * of hot buckets is open (ROADMAP item 3). Joins planned before
+  * anything is materialized (the band self-joins, pairsSymmetric's
+  * text joins) pick broadcast by the static [[corpusIsBounded]] rule;
+  * similarPairs' verify joins are sized by measurement instead: the
+  * survivors' sets are a checkpoint, broadcast only while their
+  * stored bytes fit the session's broadcast threshold
+  * (Caches.storedBytes), sort-merge above it. Nothing corpus-sized is
+  * ever collected to the driver.
   */
 object MinHashLsh {
 
@@ -70,7 +76,12 @@ object MinHashLsh {
     * planner's broadcast pick is provably safe (the 64 MB threshold
     * gives a 2 MiB cut; sf0.1 is 0.58 MB — broadcast measured
     * 0.3-1.8 s faster per query there); above it the side is pinned
-    * sort-merge regardless of estimates. */
+    * sort-merge regardless of estimates. The rule governs the joins
+    * planned before any payload is materialized: the band self-joins
+    * of similarPairs and estimatedPairs, pairsSymmetric's text joins
+    * (and EmbeddingSim's vec_id co-partitioning). similarPairs' verify
+    * joins read a checkpoint whose size is MEASURED, and are sized by
+    * that instead. */
   private val PayloadExpansion = 32
 
   /** TRUE iff `docs` reads from source files totalling at most the
@@ -397,19 +408,24 @@ object MinHashLsh {
                    threshold: Double = Config.Threshold,
                    bands: Int = Config.Bands,
                    rowsPerBand: Int = Config.RowsPerBand): DataFrame = {
-    val bounded = corpusIsBounded(docs)
     val (prefiltered, sets) =
-      prefilteredWithSets(docs, k, threshold, bands, rowsPerBand, bounded)
-    // scale-adaptive (r14, was blanket-merge-hinted in r13): the set
-    // frame carries ~8 bytes per input CHAR (the hset array), but its
-    // size estimate descends from the compressed parquet scan — at
-    // 250k-1M docs the planner statically broadcast it (GBs collected
-    // through one driver thread while 31 executors idled;
-    // BENCH_SCALE_r13_partial.json). Broadcast is for provably-BOUNDED
-    // sides only (see corpusIsBounded); otherwise sort-merge.
+      prefilteredWithSets(docs, k, threshold, bands, rowsPerBand, corpusIsBounded(docs))
+    // sized by measurement: the set frame carries ~8 bytes per input
+    // CHAR (the hset array) and its plan estimate descends from the
+    // compressed parquet scan — at 250k-1M docs the planner statically
+    // broadcast it (GBs collected through one driver thread while 31
+    // executors idled; BENCH_SCALE_r13_partial.json). The sets are a
+    // checkpoint, so their stored bytes are known: within the session's
+    // broadcast threshold both joins read ONE reused broadcast and the
+    // pair list streams through it with no exchange; above it (or with
+    // broadcast off) both are pinned sort-merge.
+    val cut = docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val side: DataFrame => DataFrame =
+      if (cut > 0 && Caches.storedBytes(sets) <= cut) broadcast(_)
+      else _.hint("merge")
     prefiltered
-      .join(payloadSide(sets.as("l"), bounded), col("id_l") === col("l.doc_id"))
-      .join(payloadSide(sets.as("r"), bounded), col("id_r") === col("r.doc_id"))
+      .join(side(sets.as("l")), col("id_l") === col("l.doc_id"))
+      .join(side(sets.as("r")), col("id_r") === col("r.doc_id"))
       // the exact band test (the band join matched on a bucket hash)
       // and the exact word-agreement prefilter (its fingerprint count
       // is only an upper bound of it)
@@ -481,12 +497,15 @@ object MinHashLsh {
     // projection is limited to survivors: the semi-join still scans
     // the whole text column, so with the sketch's read every call
     // scans the corpus text twice (dedup_batch, 20k docs: 6.41 MB of
-    // scan input for a 4.03 MiB corpus file).
+    // scan input for a 4.03 MiB corpus file). Checkpointed once, in the
+    // widened partitions: O(survivors) state, and its stored bytes are
+    // what similarPairs sizes the verify joins by (Caches.storedBytes).
     val ids = prefiltered.select(col("id_l").as("doc_id"))
       .union(prefiltered.select(col("id_r").as("doc_id"))).distinct()
     val sets = docs.join(broadcast(ids), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), Shingling.shingleHashSet(col("text"), k).as("hset"),
         PortableHash.packInts(sketchCol(col("text"), k)).as("sig"))
+      .graftCheckpoint()
     (prefiltered, sets)
   }
 

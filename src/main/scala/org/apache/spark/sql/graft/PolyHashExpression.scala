@@ -109,6 +109,18 @@ object Bridge {
       case _ => None
     }
 
+  /** Memory + disk bytes of RDD `rddId`'s stored blocks across every
+    * block manager, as the driver's block-manager master records them
+    * (private[spark], hence bridged). A driver RPC, no job; blocks
+    * report in before their task ends, so it is exact once the job
+    * that stored them has finished, and 0 once they are removed. */
+  def rddStoredBytes(rddId: Int): Long =
+    org.apache.spark.SparkEnv.get.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks)
+      .collect { case (org.apache.spark.storage.RDDBlockId(`rddId`, _), s) =>
+        s.memSize + s.diskSize }
+      .sum
+
   /** Unload every loaded state-store provider (private[sql] —
     * bridged for the streaming harness): providers and their
     * in-memory version maps outlive the query that created them, and

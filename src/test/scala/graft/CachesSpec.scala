@@ -111,4 +111,20 @@ class CachesSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.size < before,
       "lazy checkpoint blocks must be releasable like eager ones")
   }
+
+  test("storedBytes measures a checkpoint's blocks, rejects a plain frame, reads 0 once released") {
+    val s = spark
+    def rows(n: Long) = Caches.checkpoint(s.range(0, n, 1, 4)
+      .selectExpr("id", "repeat(cast(id as string), 8) as payload"))
+    val small = rows(1000)
+    val large = rows(10000)
+    val (smallBytes, largeBytes) = (Caches.storedBytes(small), Caches.storedBytes(large))
+    assert(smallBytes > 0 && largeBytes > smallBytes, s"$smallBytes vs $largeBytes")
+
+    val e = intercept[IllegalArgumentException](Caches.storedBytes(s.range(10).toDF()))
+    assert(e.getMessage.contains("checkpoint"), e.getMessage)
+
+    Caches.releaseAll(s) // blocking: the blocks are gone when it returns
+    assert(Caches.storedBytes(small) == 0 && Caches.storedBytes(large) == 0)
+  }
 }

@@ -3,6 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
 import graft.operators.{MinHashLsh, Shingling}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 
 class MinHashLshSpec extends SparkSpec {
 
@@ -242,15 +246,12 @@ class MinHashLshSpec extends SparkSpec {
     } finally spark.catalog.dropTempView("graft_documents_v")
   }
 
-  test("similarPairs' band sort-merge join ships fingerprints, never the signature") {
+  /** The executed plans of every query `run` executes, checkpoint
+    * jobs included. */
+  private def executedPlans(run: => Unit): Seq[SparkPlan] = {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    // an in-memory frame is not a bounded corpus: the band join is
-    // pinned sort-merge, so both sides cross an exchange
-    assert(!MinHashLsh.corpusIsBounded(nearDup))
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -259,16 +260,35 @@ class MinHashLshSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      assert(MinHashLsh.similarPairs(nearDup).collect().nonEmpty)
+      run
       org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    val helper = new AdaptiveSparkPlanHelper {}
+    plans.asScala.toSeq
+  }
+
+  /** `body` with broadcast joins switched off, the setting restored after. */
+  private def withoutBroadcast[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      body
+    } finally spark.conf.set(key, old)
+  }
+
+  private val planHelper = new AdaptiveSparkPlanHelper {}
+
+  test("similarPairs' band sort-merge join ships fingerprints, never the signature") {
+    // an in-memory frame is not a bounded corpus: the band join is
+    // pinned sort-merge, so both sides cross an exchange
+    assert(!MinHashLsh.corpusIsBounded(nearDup))
+    val plans = executedPlans(assert(MinHashLsh.similarPairs(nearDup).collect().nonEmpty))
     // the band join is keyed on the 8-byte bucket hash: neither the
     // signature nor the 24-byte band key (nor `band`) crosses it
-    val bandJoins = plans.asScala.toSeq.flatMap(p => helper.collect(p) {
+    val bandJoins = plans.flatMap(p => planHelper.collect(p) {
       case j: SortMergeJoinExec if j.leftKeys.exists(_.references.exists(_.name == "bucket")) => j
     })
-    assert(bandJoins.nonEmpty, plans.asScala.mkString("\n"))
+    assert(bandJoins.nonEmpty, plans.mkString("\n"))
     bandJoins.foreach { j =>
       val cols = j.children.flatMap(_.output.map(_.name))
       assert(cols.contains("fp_l") && cols.contains("fp_r"), cols)
@@ -279,6 +299,33 @@ class MinHashLshSpec extends SparkSpec {
       val widths = side.executeCollect().map(_.getBinary(fp).length).distinct.toSeq
       assert(widths == Seq(Config.NumHashes / 2), widths)
     }
+  }
+
+  test("similarPairs' verify broadcasts the measured sets; broadcast off pins sort-merge") {
+    // the verify joins are the ones with the survivors' sets on a side
+    def verifyJoins(plans: Seq[SparkPlan]) = plans.flatMap(p => planHelper.collect(p) {
+      case j: BinaryExecNode if j.children.exists(_.output.exists(_.name == "hset")) => j
+    })
+    def shippedSets(plans: Seq[SparkPlan]) = plans.flatMap(p => planHelper.collect(p) {
+      case e: ShuffleExchangeExec
+          if e.output.exists(a => a.name.startsWith("hset") || a.name.startsWith("sig")) => e
+    })
+    // an in-memory corpus is unbounded, yet its survivors' sets are a
+    // few hundred bytes: both joins read one broadcast, no exchange
+    // carries a set
+    assert(!MinHashLsh.corpusIsBounded(nearDup))
+    val want = MinHashLsh.similarPairs(nearDup).collect().toSet
+    val plans = executedPlans(assert(MinHashLsh.similarPairs(nearDup).collect().toSet == want))
+    val joins = verifyJoins(plans)
+    assert(joins.size == 2 && joins.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+      plans.mkString("\n"))
+    assert(shippedSets(plans).isEmpty, plans.mkString("\n"))
+    // broadcast off: the same pairs through two sort-merge joins
+    val merged = withoutBroadcast(executedPlans(
+      assert(MinHashLsh.similarPairs(nearDup).collect().toSet == want)))
+    val mergeJoins = verifyJoins(merged)
+    assert(mergeJoins.size == 2 && mergeJoins.forall(_.isInstanceOf[SortMergeJoinExec]),
+      merged.mkString("\n"))
   }
 
   test("reference-corpus parity: the two golden clusters, both directions, nothing else") {
@@ -403,9 +450,13 @@ class MinHashLshSpec extends SparkSpec {
     }
     val want = expected(cand.toSeq, Config.Threshold)
     assert(want.count { case (l, r, _) => l == firstId || l > maxId } >= 200 * 201 / 2)
-    val got = MinHashLsh.similarPairs(docs).collect()
+    def pairs() = MinHashLsh.similarPairs(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val got = pairs()
     assert(got.length == got.toSet.size && got.toSet == want)
+    // broadcast off: the verify joins the same sets sort-merge
+    val merged = withoutBroadcast(pairs())
+    assert(merged.length == merged.toSet.size && merged.toSet == want)
 
     // 30 x 2: the candidates are the pairs equal on some whole pair of
     // words, from the long signatures
