@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.reflect.ClassTag
 
 /** Session cache hygiene. Several operators materialize internal
   * frames with `localCheckpoint` (consumed by multiple joins in one
@@ -20,6 +22,8 @@ object Caches {
 
   // ids of persistent RDDs created by graft operators' checkpoint()
   private val graftIds = scala.collection.mutable.Set.empty[Int]
+  // broadcasts created by graft operators' broadcast()
+  private val graftBroadcasts = scala.collection.mutable.Buffer.empty[Broadcast[_]]
 
   /** `ds.localCheckpoint()` + registration: the persisted blocks this
     * call creates are tracked so releaseAll can free them without
@@ -59,6 +63,17 @@ object Caches {
           "registration would leak its blocks past releaseAll")
     }
 
+  /** `sc.broadcast(value)` + registration: [[releaseAll]] destroys
+    * it with the checkpoints, so a query-internal broadcast (e.g. the
+    * shared-bucket bitmap of MinHashLsh's band joins) leaves no block
+    * behind its query's release, where an unregistered one waits for a
+    * GC to reach the cleaner. */
+  private[graft] def broadcast[T: ClassTag](spark: SparkSession, value: T): Broadcast[T] = {
+    val b = spark.sparkContext.broadcast(value)
+    synchronized { graftBroadcasts += b }
+    b
+  }
+
   /** Memory + disk bytes of checkpoint `cp`'s stored blocks — the
     * MEASURED size of a materialized frame, where a plan estimate of
     * it can be off by the corpus payload's expansion (see
@@ -88,9 +103,10 @@ object Caches {
     (cp, Set(id))
   }
 
-  /** Unpersist every graft-created checkpoint block and forget the
-    * registry. Safe after a query's results are consumed: graft
-    * checkpoints are query-internal, never shared across queries.
+  /** Unpersist every graft-created checkpoint block, destroy every
+    * graft-created broadcast and forget both registries. Safe after a
+    * query's results are consumed: graft checkpoints and broadcasts
+    * are query-internal, never shared across queries.
     * NOTE a DataFrame previously RETURNED by a graft operator may
     * hold one of these checkpoints in its lineage — re-collecting it
     * after release throws (localCheckpoint truncates lineage, so the
@@ -110,6 +126,8 @@ object Caches {
     val persisted = spark.sparkContext.getPersistentRDDs
     graftIds.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = true)))
     graftIds.clear()
+    graftBroadcasts.foreach(org.apache.spark.sql.graft.Bridge.destroyBlocking)
+    graftBroadcasts.clear()
     reclaimBroadcasts(spark.sparkContext)
   }
 

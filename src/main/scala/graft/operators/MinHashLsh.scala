@@ -1,11 +1,12 @@
 package graft.operators
 
 import graft.Caches.CheckpointSyntax
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 import graft.{Caches, Config}
 import graft.functions.PortableHash
+import org.roaringbitmap.RoaringBitmap
 
 /** MinHash signatures + LSH banding + candidate generation + exact
   * verification — the intended computation of reference Jobs 2+3
@@ -29,7 +30,7 @@ import graft.functions.PortableHash
   *     every other LSH family (SimHash blocks, embedding sign-LSH
   *     tables, MLlib bands), and [[capBuckets]] is the one bucket-size
   *     cap. similarPairs' prefilter joins on an
-  *     8-byte hash of (band, key) instead ([[bucketPairs]]) and its
+  *     8-byte hash of (band, key) instead ([[bucketed]]) and its
   *     verify drops hash collisions with an exact whole-band test on
   *     the signatures ([[sharesBand]]), so its pairs are the exact
   *     join's. Only the `lsh_bands` query renders the key as the
@@ -57,6 +58,18 @@ import graft.functions.PortableHash
   * stored bytes fit the session's broadcast threshold
   * (Caches.storedBytes), sort-merge above it. Nothing corpus-sized is
   * ever collected to the driver.
+  *
+  * Only rows whose bucket another row shares can pair, so
+  * similarPairs and estimatedPairs drop every other band row before
+  * their band self-join ([[sharedBucketRows]]): one job merges
+  * per-partition bitmaps of hashed bucket slots into the set of slots
+  * seen twice, and a row is kept iff its slot is in it. Every row of
+  * a shared bucket is kept, so the join's pairs are unchanged; a slot
+  * collision only keeps a row that finds no partner. perfbench
+  * dedup_batch seed 1: 200,000 → 23,071 rows into similarPairs' band
+  * exchange. The bitmaps cost up to 8 B per band row at the driver, so
+  * the filter is off when band rows × 8 B exceed the session's
+  * broadcast threshold (about 800k docs at 64 MB) or broadcast is off.
   */
 object MinHashLsh {
 
@@ -210,16 +223,28 @@ object MinHashLsh {
       .select(col("doc_id") +: PortableHash.packInts(sketchCol(col("text"), k)).as("sig") +:
         extra: _*)
 
+  /** [[packedSketches]], checkpointed, and its row count: an observed
+    * count read off the checkpoint's own job, not a second job over it
+    * (a count job measured ~35 ms per call on dedup_batch). */
+  private def countedSketches(docs: DataFrame, k: Int): (DataFrame, Long) = {
+    val counted = new Observation()
+    val base = packedSketches(docs, k).observe(counted, count(lit(1)).as("rows"))
+      .graftCheckpoint()
+    (base, counted.get("rows").asInstanceOf[Long])
+  }
+
   /** The one band explode: each [[packedSketches]] row becomes `bands`
     * rows (doc_id, band, band_key, carry…). A self-join consumer that
     * needs both members' sketches in its residual or projection carries
     * them here, so it never joins back against a signature table (at
     * 100 TB a second corpus-wide shuffle): similarPairs carries the
-    * 30-byte fingerprint keyed on the 8-byte bucket ([[bucketPairs]];
+    * 30-byte fingerprint keyed on the 8-byte bucket ([[bucketed]];
     * ~46 B per band row with the doc_id), estimatedPairs the 240-byte
     * signature keyed on (band, band_key) (~264 B). perfbench
-    * dedup_batch seed 1 (20k docs, 4-core box): 5.0 MB into
-    * similarPairs' band exchange, 17.0 MB into estimatedPairs'. */
+    * dedup_batch seed 1 (20k docs, 4-core box): 4.95 MB into
+    * similarPairs' band exchange, 17.0 MB into estimatedPairs', both
+    * cut to the rows of shared buckets (23,071 of 200,000): 0.80 and
+    * 3.09 MB. */
   private def explodeBands(packed: DataFrame, carry: Seq[String] = Nil,
                            bands: Int = Config.Bands,
                            rowsPerBand: Int = Config.RowsPerBand): DataFrame = {
@@ -247,7 +272,7 @@ object MinHashLsh {
     * `residual`, both over the renamed columns: doc_id → id_l/id_r,
     * payload p → p_l/p_r, right key k → k_r. Every LSH family pairs
     * its buckets here: MinHash bands on (band, band_key) or
-    * [[bucketPairs]]' one bucket, MLlib MinHash bands on (band,
+    * similarPairs' one [[bucketed]] bucket, MLlib MinHash bands on (band,
     * band_key) with string keys (MlMinHash.pairsBanded), SimHash
     * blocks on (blk, bval) (TextAnalysis.simHashPairs) and embedding
     * sign-LSH tables on (tbl, bucket) (DocEmbedding.dedupPairs). Each
@@ -270,24 +295,48 @@ object MinHashLsh {
       keys.map(k => col(k) === col(k + "_r")).reduce(_ && _) && idCond && residual)
   }
 
-  /** similarPairs' prefilter self-join: [[explodeBands]] rows re-keyed
-    * on ONE 8-byte `bucket` = xxhash64(band, band_key) and joined with
-    * themselves (id_l < id_r) under `residual`. Equal (band, band_key)
-    * give equal buckets, so every band-sharing pair is produced; a hash
-    * collision can only ADD a pair, and the verify removes those with
-    * the exact [[sharesBand]] test on the signatures it holds anyway —
-    * the output is the exact band join's, by construction. The 24-byte
-    * key and the band number stay off the wire, and the join sorts one
-    * long key (a full sort prefix) instead of (band, 24-byte binary).
-    * The other band joins key on (band, band_key): the public band
-    * form (bands, candidatePairs, collisionCounts, the band indexes)
-    * has no signature to re-check against, and estimatedPairs would
-    * pay the band test on every pair to save ~4% of its bytes. */
-  private def bucketPairs(b: DataFrame, residual: Column, pinMerge: Boolean): DataFrame = {
-    val keyed = b.select(col("doc_id") +: xxhash64(col("band"), col("band_key")).as("bucket") +:
-      b.columns.filterNot(Set("doc_id", "band", "band_key")).map(col): _*)
-    bandPairs(keyed, keyed, col("id_l") < col("id_r"), residual, pinMerge, keys = Seq("bucket"))
+  /** The rows of `banded` whose bucket another row may share: those
+    * whose `slot` of the 8-byte `bucket` hash appears on two or more
+    * rows. `rows` is the row count of `banded`. The slot is the hash's
+    * top ceil(log2(32 × rows)) bits (≤ 32), so about one singleton in
+    * 32 lands on a shared slot and is kept for nothing. One job builds
+    * each partition's [[SharedSlots]] and tree-merges them at the
+    * driver; the merged `twice` bitmap reaches the filter as a
+    * broadcast that Caches.releaseAll destroys with the query's
+    * checkpoints. A bucket shared by two rows shares their slot, so
+    * every row of it is kept and the self-join's pairs are unchanged,
+    * at any slot width. Returns `banded` itself (the plan as without
+    * the filter) when broadcast is off or rows × 8 B — the worst case
+    * of the bitmaps the driver receives — exceeds the threshold. */
+  private def sharedBucketRows(banded: DataFrame, bucket: Column, rows: Long): DataFrame = {
+    val cut = banded.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (cut <= 0 || rows == 0 || rows > cut / 8) banded
+    else {
+      val bits = math.min(32, 64 - java.lang.Long.numberOfLeadingZeros(32 * rows - 1))
+      val slot = shiftrightunsigned(bucket, 64 - bits).cast("int")
+      val twice = Caches.broadcast(banded.sparkSession, banded.select(slot).queryExecution.toRdd
+        .mapPartitions(it => Iterator(SharedSlots.of(it.map(_.getInt(0)))))
+        .treeReduce(SharedSlots.merge).twice)
+      banded.filter(udf((s: Int) => twice.value.contains(s)).apply(slot))
+    }
   }
+
+  /** similarPairs' band rows re-keyed on ONE 8-byte `bucket` =
+    * xxhash64(band, band_key), for a self-join on it. Equal (band,
+    * band_key) give equal buckets, so every band-sharing pair is
+    * produced; a hash collision can only ADD a pair, and the verify
+    * removes those with the exact [[sharesBand]] test on the
+    * signatures it holds anyway — the output is the exact band join's,
+    * by construction. The 24-byte key and the band number stay off the
+    * wire, and the join sorts one long key (a full sort prefix) instead
+    * of (band, 24-byte binary). The other band joins key on (band,
+    * band_key): the public band form (bands, candidatePairs,
+    * collisionCounts, the band indexes) has no signature to re-check
+    * against, and estimatedPairs would pay the band test on every pair
+    * to save ~4% of its bytes. */
+  private def bucketed(b: DataFrame): DataFrame =
+    b.select(col("doc_id") +: xxhash64(col("band"), col("band_key")).as("bucket") +:
+      b.columns.filterNot(Set("doc_id", "band", "band_key")).map(col): _*)
 
   /** A band index written with the older CSV key would match nothing,
     * so a band frame handed in by a caller must carry the packed
@@ -432,7 +481,13 @@ object MinHashLsh {
       .filter(sharesBand(col("l.sig"), col("r.sig"), bands, rowsPerBand) &&
         PortableHash.agreeCount(col("l.sig"), col("r.sig")) >=
           Config.estPrefilterMinCount(threshold))
-      .withColumn("jaccard", Shingling.jaccard(col("l.hset"), col("r.hset")))
+      // the intersect count is bound once per pair: the output of a
+      // Generate is never inlined, where a projected count would be,
+      // twice into the join condition and once into the projection
+      .select(col("id_l"), col("id_r"), col("l.hset").as("hset_l"), col("r.hset").as("hset_r"),
+        explode(array(PortableHash.sortedIntersectCount(col("l.hset"), col("r.hset"))))
+          .as("inter"))
+      .withColumn("jaccard", Shingling.jaccardOf(col("inter"), col("hset_l"), col("hset_r")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_l"), col("id_r"), col("jaccard"))
   }
@@ -450,10 +505,10 @@ object MinHashLsh {
                                   bounded: Boolean = false)
       : (DataFrame, DataFrame) = {
     // Signatures only (one 240-byte packed binary per doc) are
-    // materialized for the whole corpus — the band explode and the
-    // prefilter read this slim frame. The O(text)-sized shingle-hash
-    // SETS are NOT: they are recomputed later only for docs that
-    // survive the prefilter
+    // materialized for the whole corpus — the band explode, the
+    // shared-bucket bitmap job and the prefilter read this slim frame.
+    // The O(text)-sized shingle-hash SETS are NOT: they are recomputed
+    // later only for docs that survive the prefilter
     // (checkpointing sets for every doc measured ~1s of the chain at
     // sf0.1 and would be O(corpus) state at 100 TB).
     // Checkpointed deliberately: ReuseExchange does cover the bare
@@ -462,7 +517,7 @@ object MinHashLsh {
     // extra plan context around the chain defeats exchange reuse and
     // the sketch ran twice — measured +0.8 s per composite query
     // without this checkpoint.
-    val base = packedSketches(docs, k).graftCheckpoint()
+    val (base, sketched) = countedSketches(docs, k)
     // the 30-byte fingerprint (the low 4 bits of each signature word,
     // two per byte) rides the band explode so the agreement prefilter
     // is a join-residual condition — no joins against the
@@ -482,12 +537,17 @@ object MinHashLsh {
     // collects the whole banded corpus through one driver thread.
     // Pinned sort-merge unless the corpus is provably bounded
     // (corpusIsBounded), where the planner's broadcast is safe+faster.
-    // Keyed on the 8-byte bucket hash (see bucketPairs): a collision
-    // survivor is dropped by the verify's exact band test.
-    val prefiltered = bucketPairs(bandsWithFp,
+    // Keyed on the 8-byte bucket hash (see bucketed): a collision
+    // survivor is dropped by the verify's exact band test. Only rows
+    // whose bucket slot another row shares reach the exchange
+    // (sharedBucketRows; its bitmap job reads this checkpoint, bands
+    // rows per sketch): 9.5% of the band rows on dedup_batch seed 1,
+    // 11.5% with the slot collisions.
+    val shared = sharedBucketRows(bucketed(bandsWithFp), col("bucket"), sketched * bands)
+    val prefiltered = bandPairs(shared, shared, col("id_l") < col("id_r"),
         PortableHash.agreeNibbles(col("fp_l"), col("fp_r")) >=
           Config.estPrefilterMinCount(threshold),
-        pinMerge = !bounded)
+        pinMerge = !bounded, keys = Seq("bucket"))
       .select("id_l", "id_r")
       .distinct()
       .graftCheckpoint()
@@ -545,7 +605,13 @@ object MinHashLsh {
     // joins of the naive plan (corpus-wide shuffles at 100 TB) are
     // gone. The estimate is deterministic per pair, so DISTINCT over
     // (id_l, id_r, est) equals dedup-then-estimate.
-    val b = explodeBands(packedSketches(docs, k), Seq("sig"))
+    // Checkpointed so the shared-bucket bitmap job and the band join
+    // read one sketch; only rows whose bucket slot another row shares
+    // ship their 240-byte signature (sharedBucketRows; the slot hashes
+    // the join key, which stays (band, band_key)).
+    val (base, sketched) = countedSketches(docs, k)
+    val b = sharedBucketRows(explodeBands(base, Seq("sig")),
+      xxhash64(col("band"), col("band_key")), sketched * Config.Bands)
     val eq = PortableHash.agreeCount(col("sig_l"), col("sig_r"))
     // scale-adaptive: same corpus-payload self-join shape as
     // prefilteredWithSets (here the packed sigs ride on both sides)
@@ -554,4 +620,23 @@ object MinHashLsh {
         (eq.cast("double") / lit(Config.NumHashes)).as("est_jaccard"))
       .distinct()
   }
+}
+
+/** The bucket slots one partition of band rows saw (`seen`) and saw
+  * on two or more rows (`twice`) — [[MinHashLsh]]'s shared-bucket
+  * sketch. [[merge]] keeps `twice` exact across partitions: a slot is
+  * shared if either side shares it or both saw it, so any split of
+  * one slot list merges to the same `twice`. */
+private[graft] final case class SharedSlots(seen: RoaringBitmap, twice: RoaringBitmap)
+
+private[graft] object SharedSlots {
+  def of(slots: Iterator[Int]): SharedSlots = {
+    val s = SharedSlots(new RoaringBitmap, new RoaringBitmap)
+    slots.foreach(x => if (!s.seen.checkedAdd(x)) s.twice.add(x))
+    s
+  }
+
+  def merge(a: SharedSlots, b: SharedSlots): SharedSlots = SharedSlots(
+    RoaringBitmap.or(a.seen, b.seen),
+    RoaringBitmap.or(a.twice, b.twice, RoaringBitmap.and(a.seen, b.seen)))
 }

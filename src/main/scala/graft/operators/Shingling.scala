@@ -67,10 +67,12 @@ object Shingling {
     * intersection is one merge scan, the union size follows from it —
     * the same integers as array_intersect/array_union, no hash set or
     * output array per pair. */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = PortableHash.sortedIntersectCount(a, b)
+  def jaccard(a: Column, b: Column): Column =
+    jaccardOf(PortableHash.sortedIntersectCount(a, b), a, b)
+
+  /** [[jaccard]] of `a` and `b` from their intersect count `inter`. */
+  def jaccardOf(inter: Column, a: Column, b: Column): Column =
     inter.cast("double") / (size(a) + size(b) - inter)
-  }
 
   /** (doc_id, shingle) — one row per window, duplicates kept
     * (positional stream; dedup happens in set-level consumers).

@@ -121,6 +121,13 @@ object Bridge {
         s.memSize + s.diskSize }
       .sum
 
+  /** Destroy broadcast `b` and wait until its blocks are removed
+    * (the blocking form is private[spark] — bridged for
+    * graft.Caches.releaseAll, which returns only once a released
+    * query's blocks are gone). */
+  def destroyBlocking(b: org.apache.spark.broadcast.Broadcast[_]): Unit =
+    b.destroy(blocking = true)
+
   /** Unload every loaded state-store provider (private[sql] —
     * bridged for the streaming harness): providers and their
     * in-memory version maps outlive the query that created them, and

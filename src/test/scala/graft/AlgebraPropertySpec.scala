@@ -41,6 +41,25 @@ class AlgebraPropertySpec extends AnyFunSuite {
       })
   }
 
+  test("SharedSlots: a slot is shared iff two rows saw it, however the rows are split") {
+    import graft.operators.SharedSlots
+    def twice(parts: Seq[Int]*): Set[Int] =
+      parts.map(p => SharedSlots.of(p.iterator)).reduce(SharedSlots.merge).twice.toArray.toSet
+    assert(twice(Seq(7), Seq(7)) == Set(7), "once in each of two partitions")
+    assert(twice(Seq(7, 7), Seq(8)) == Set(7), "twice in one partition")
+    assert(twice(Seq(7), Seq(8), Seq()).isEmpty, "once overall")
+    // slots are unsigned 32-bit words: negative ints included
+    val rows = Gen.listOf(Gen.zip(
+      Gen.oneOf(Gen.chooseNum(-40, 40), Gen.chooseNum(Int.MinValue, Int.MaxValue)),
+      Gen.chooseNum(0, 4)))
+    check("split-invariant twice", Prop.forAll(rows) { rs =>
+      val keys = rs.map(_._1)
+      val want = keys.groupBy(identity).collect { case (k, v) if v.size >= 2 => k }.toSet
+      val parts = (0 to 4).map(p => rs.collect { case (k, `p`) => k })
+      twice(parts: _*) == want && twice(parts.reverse: _*) == want && twice(keys) == want
+    })
+  }
+
   test("range-rule bucket lemma: |a-b| <= w implies floorDiv buckets differ by at most 1") {
     val gen = for {
       w <- Gen.chooseNum(1L, 1000000L)

@@ -42,6 +42,22 @@ class CachesSpec extends SparkSpec {
     Caches.releaseAll(spark) // must not throw with an empty registry
   }
 
+  test("releaseAll destroys the broadcasts made through Caches.broadcast, and only those") {
+    import org.apache.spark.sql.graft.Bridge
+    val sc = spark.sparkContext
+    val own = sc.broadcast(Array.fill(256)(1L))
+    val graft = Caches.broadcast(spark, Array.fill(256)(2L))
+    assert(graft.value.sum == 512L)
+    def blocks(id: Long) = Bridge.broadcastBlockIds(sc)
+      .filter(n => n == s"broadcast_$id" || n.startsWith(s"broadcast_${id}_"))
+    assert(blocks(graft.id).nonEmpty)
+    Caches.releaseAll(spark)
+    // destroyed at once, with no GC: no block of it is left
+    assert(blocks(graft.id).isEmpty)
+    assert(own.value.sum == 256L, "a caller's own broadcast must survive releaseAll")
+    own.destroy()
+  }
+
   test("reclaimBroadcasts frees a dead query's broadcast blocks and spares live ones") {
     val s = spark
     val sc = s.sparkContext

@@ -247,7 +247,7 @@ class MinHashLshSpec extends SparkSpec {
   }
 
   /** The executed plans of every query `run` executes, checkpoint
-    * jobs included. */
+    * jobs included, and of no query before it. */
   private def executedPlans(run: => Unit): Seq[SparkPlan] = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.execution.QueryExecution
@@ -258,6 +258,8 @@ class MinHashLshSpec extends SparkSpec {
         plans.add(qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    // events of earlier queries still queued would reach the listener
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       run
@@ -326,6 +328,73 @@ class MinHashLshSpec extends SparkSpec {
     val mergeJoins = verifyJoins(merged)
     assert(mergeJoins.size == 2 && mergeJoins.forall(_.isInstanceOf[SortMergeJoinExec]),
       merged.mkString("\n"))
+  }
+
+  test("similarPairs' band exchange ships only rows of shared buckets; broadcast off ships all") {
+    // nearDup: docs 1 and 4 share every bucket, doc 2 some of them,
+    // doc 3 none; the shared-bucket filter is on at the default
+    // threshold and off at -1
+    val bandRows = 4 * Config.Bands
+    def bandRecords(plans: Seq[SparkPlan]) = plans.flatMap(p => planHelper.collect(p) {
+      case e: ShuffleExchangeExec if e.output.exists(_.name.startsWith("bucket")) =>
+        e.metrics("shuffleRecordsWritten").value
+    })
+    val want = MinHashLsh.similarPairs(nearDup).collect().toSet
+    val kept = bandRecords(executedPlans(
+      assert(MinHashLsh.similarPairs(nearDup).collect().toSet == want)))
+    assert(kept.nonEmpty && kept.forall(_ < bandRows), kept)
+    val all = withoutBroadcast(bandRecords(executedPlans(
+      assert(MinHashLsh.similarPairs(nearDup).collect().toSet == want))))
+    assert(all.nonEmpty && all.forall(_ == bandRows), all)
+  }
+
+  test("similarPairs leaves no block of its shared-bucket bitmap behind after releaseAll") {
+    import org.apache.spark.sql.graft.Bridge
+    val sc = spark.sparkContext
+    Caches.releaseAll(spark)
+    Caches.reclaimBroadcasts(sc, minBytes = 0L)
+    val before = Bridge.broadcastBlockIds(sc)
+    // in its own frame: a Dataset local would keep its plan reachable
+    def run(): Unit = assert(MinHashLsh.similarPairs(nearDup).collect().nonEmpty)
+    run()
+    // every block the call made is dead once it is released; GC timing
+    // is best-effort per call, so poll with a deadline
+    val deadline = System.nanoTime() + 20_000_000_000L
+    var residue = Set.empty[String]
+    do {
+      Caches.releaseAll(spark)
+      Caches.reclaimBroadcasts(sc, minBytes = 0L)
+      residue = Bridge.broadcastBlockIds(sc) -- before
+    } while (residue.nonEmpty && System.nanoTime() < deadline && { Thread.sleep(200); true })
+    assert(residue.isEmpty, s"blocks of the call survived release: $residue")
+  }
+
+  /** 300 docs that share a 200-char text plus a 5-30 char tail of
+    * their own (buckets of ~300 rows, pairs on both sides of the
+    * threshold) beside 300 random 60-char singletons. */
+  private def megaBucket() = {
+    val rnd = new scala.util.Random(11)
+    def text(n: Int) = Seq.fill(n)(('a' + rnd.nextInt(26)).toChar).mkString
+    val common = text(200)
+    docsDf((0 until 300).map(i => i.toLong -> s"$common ${text(5 + i % 26)}") ++
+      (300 until 600).map(i => i.toLong -> text(60)): _*)
+  }
+
+  test("the shared-bucket filter keeps every pair of a mega-bucket beside singletons") {
+    val docs = megaBucket()
+    val sizes = MinHashLsh.bands(docs).groupBy("band", "band_key").count()
+    assert(sizes.agg(max("count")).head().getLong(0) >= 200)
+    assert(sizes.filter(col("count") === 1).count() >= 300 * Config.Bands)
+    def pairs() = MinHashLsh.similarPairs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    def estimates() = MinHashLsh.estimatedPairs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val (got, gotEst) = (pairs(), estimates())
+    // broadcast off: the filter is off, every band row is joined
+    val (want, wantEst) = withoutBroadcast((pairs(), estimates()))
+    assert(want.exists(_._3 < 1.0) && want.length < 300 * 299 / 2)
+    assert(got.length == got.toSet.size && got.toSet == want.toSet)
+    assert(gotEst.length == gotEst.toSet.size && gotEst.toSet == wantEst.toSet)
   }
 
   test("reference-corpus parity: the two golden clusters, both directions, nothing else") {

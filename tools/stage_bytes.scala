@@ -24,7 +24,7 @@ session.sparkContext.addSparkListener(new SparkListener {
       .getOrElse(Double.NaN)
     stages.add(f"stage ${i.stageId}%3d ${w.bytesWritten / 1048576.0}%7.2f MB " +
       f"${w.recordsWritten}%8d records ${i.numTasks}%4d tasks ${taskS}%6.2f task_s " +
-      f"${wallS}%6.2f wall_s ${i.name}")
+      f"${wallS}%6.2f wall_s ${i.taskMetrics.resultSize / 1024.0}%8.1f result_kb ${i.name}")
   }
 })
 (1 to reps).foreach { rep =>

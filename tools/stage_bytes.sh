@@ -10,7 +10,8 @@
 # graft.operators.MinHashLsh.similarPairs(docs). reps (default 1) runs
 # the chain that many times in one JVM; later reps are JIT-warm. cores
 # defaults to 4. Prints one "stage <id> <MB> MB <records> records <n>
-# tasks <s> task_s <s> wall_s <name>" line per completed stage, those
+# tasks <s> task_s <s> wall_s <KB> result_kb <name>" line per completed
+# stage (result_kb: the task results sent to the driver), those
 # that write no shuffle included (0.00 MB, 0 records: e.g. the
 # checkpoint and the final collect), then "digest <d> rows <n>" per
 # rep. Build first (sbt compile); needs SPARK_HOME.
